@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+value-hash).  Both dicts follow the registry's canonical registration order.
 
 Implementation lives in ``google_analytics_dataframes_spark/``; every
 SURVEY.md §2 operator registers itself into the query registry, which this
@@ -12,12 +12,13 @@ module re-exports in the driver's shape.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def entry(spark: SparkSession) -> DataFrame:

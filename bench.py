@@ -170,7 +170,7 @@ def main() -> None:
 
     # Environment telemetry (VERDICT r4 item #6): the driver runs bench.py in
     # ITS container, so recording engine versions here surfaces the driver's
-    # actual DuckDB/PySpark builds in BENCH_r{N}.json — closing the env-skew
+    # actual DuckDB/PySpark builds in the bench JSON — closing the env-skew
     # hypothesis that r04's six hash failures raised (they pass bitwise
     # against local DuckDB 1.0.0).
     import platform

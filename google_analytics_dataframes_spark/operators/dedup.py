@@ -131,8 +131,9 @@ def minhash_lsh_pairs(
     # cleanup contract as l11's checkpoint note.  Measured on l2 at
     # sf0.1 (back-to-back 5-rep A/B, before side in the slightly busier
     # half): warm median 1.62 -> 1.18 s, first execution 4.69 -> 2.32 s
-    # (plans/r14/l2_near_dedup_minhash_{before,after}.txt: 8 parquet
-    # scans -> 0 in the returned plan, one scan per checkpoint build).
+    # (`git show 0dd433a:plans/r14/l2_near_dedup_minhash_{before,after}.txt`:
+    # 8 parquet scans -> 0 in the returned plan, one scan per checkpoint
+    # build).
     banded = sig.select(
         "doc_id", F.posexplode(band_cols).alias("band", "bsig")
     )
@@ -754,9 +755,10 @@ def jaccard_pairs_cross(
     exploded stream or the compact text; nothing ever repartitions the
     full corpus.  Measured on l60/l60b at sf0.1: 2.96 -> 1.73 and
     2.70 -> 1.44 s median, back-to-back 5-rep A/B
-    (plans/r14/l60*_{before,after}.txt: the post-Generate Exchange is
-    gone from both branches); at the 10x synth (8-file scans) l60 stays
-    ahead (14.0-14.7 vs 15.2-16.3 s across two alternating windows)."""
+    (`git show 0dd433a:plans/r14/l60{,b}_*_{before,after}.txt`: the
+    post-Generate Exchange is gone from both branches); at the 10x synth
+    (8-file scans) l60 stays ahead (14.0-14.7 vs 15.2-16.3 s across two
+    alternating windows)."""
     if not pre_clustered:
         items_in = fanout_by(items_in, "doc_id")
         items_ex = fanout_by(items_ex, "doc_id")

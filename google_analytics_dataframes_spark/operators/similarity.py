@@ -265,8 +265,8 @@ def hyperplane_lsh_pairs(
     # unreachable).  Measured on l13 at sf0.1 (two A/B windows, ambient
     # waves noted): first-execution 6.6-7.9 s -> 2.6-3.2 s both windows;
     # warm median 2.71 -> 1.93 s in the cleaner pairing
-    # (plans/r14/l13_embed_neardup_{before,after}.txt: 6 ArrowEvalPython
-    # -> 1, run once at checkpoint-build time).
+    # (`git show 0dd433a:plans/r14/l13_embed_neardup_{before,after}.txt`:
+    # 6 ArrowEvalPython -> 1, run once at checkpoint-build time).
     #
     # Round 15 (VERDICT r14 item #6): checkpoint BEFORE the posexplode —
     # the materialized row is (vec_id, embedding, sigs[n_tables]) so the

@@ -24,123 +24,3 @@ from google_analytics_dataframes_spark.queries import corpus_ops  # noqa: F401
 from google_analytics_dataframes_spark.queries import report_queries  # noqa: F401
 from google_analytics_dataframes_spark.queries import analytic_suite  # noqa: F401
 from google_analytics_dataframes_spark.queries import diagnostics  # noqa: F401
-
-from google_analytics_dataframes_spark.registry import registry as _registry
-
-# Sweep priority (consumed ONLY by registry.sweep_registry(), which only
-# __spark_entry__.py uses — bench/tests/docs iterate the canonical
-# registration order).  The external correctness sweep walks the dict in
-# order and truncates on a ~50-entry budget (rounds 1 and 2 each recorded
-# exactly 50 rows), so this list decides which queries get driver evidence.
-#
-# Round-6 structure (VERDICT r5 item #1): SWEEP_HEAD is now a NAMED,
-# test-enforced section — tools/stale_evidence.py computes, from git span
-# history vs CORRECTNESS file commit times, every query whose
-# implementation (own function span or a transitively-referenced
-# family-specific helper) changed AFTER its last recorded driver sweep,
-# and tests/test_invariants.py::test_stale_evidence_queries_lead_the_sweep
-# asserts each one matches a SWEEP_HEAD prefix.  "Green on latest check"
-# is thereby restored mechanically every round instead of by hand-audit.
-# Entries are underscore-terminated so "s4_" matches only s4 (not s40).
-# ROUND 11: the head is GENERATED, not hand-curated (VERDICT r10 item
-# #6) — `python tools/stale_evidence.py --emit-head 50 10` emits exactly
-# this list (stale/changed rows in registration order, then oldest-
-# driver-evidence back-fill to the 50-row budget), and
-# tests/test_invariants.py::test_sweep_head_is_changed_plus_oldest_evidence
-# re-derives it against the pinned round-10 evidence horizon so any
-# drift (a code change without a head regen, a hand edit) fails loudly.
-# Entries are FULL query names (exact match beats prefix in
-# registry.ordered_by_priority), eliminating prefix-collision care.
-SWEEP_HEAD: list[str] = [
-    # generated: tools/stale_evidence.py --emit-head 50 14
-    # 22 stale/changed rows lead; oldest-evidence back-fill to 50
-    "l2_near_dedup_minhash",
-    "l12_ngram_jaccard",
-    "l73_triangle_count",
-    "l13_embed_neardup",
-    "l7_string_simjoin",
-    "l29_dedup_clusters",
-    "l33_dedup_apply",
-    "l61_exact_substr_spans",
-    "l61b_exact_substr_hashed",
-    "l44_clean_corpus",
-    "l80_keeper_election",
-    "l12b_ngram_jaccard_slice",
-    "l29b_dedup_clusters_slice",
-    "l33b_dedup_apply_slice",
-    "l44b_clean_corpus_slice",
-    "l7b_simjoin_slice",
-    "l61c_substr_slice",
-    "l61d_substr_slice_hashed",
-    "l55_pair_token_f1",
-    "l60_incremental_neardup",
-    "l60b_neardup_slice",
-    "l55b_pair_token_f1_slice",
-    "s13_zorder_scan",
-    "s14_python_datasource",
-    "s15_schema_evolution",
-    "s16_corrupt_records",
-    "s17_footer_stats",
-    "s18_manifest_pruned_read",
-    "s19_python_datasource_writer",
-    "a19_moment_stats",
-    "a20_bool_aggs",
-    "j15_nullsafe_join",
-    "w12_gapfill_interpolate",
-    "w13_nth_value",
-    "w14_cume_dist",
-    "sf15_variant",
-    "sf16_collation",
-    "sf17_unpivot",
-    "sf18_bitwise",
-    "sf19_timezone_render",
-    "st17_stream_restart_resume",
-    "st13_stream_windowed_agg",
-    "st20_stream_cdc_apply",
-    "st21_stream_late_drop",
-    "ud7_arrow_udf",
-    "ud8_mapinarrow",
-    "l76_priority_sample",
-    "l66_corpus_delta",
-    "l71_merge_upsert",
-    "l77_bpe_encode_roundtrip",
-]
-
-#: Evidence horizon SWEEP_HEAD was generated from (the newest
-#: CORRECTNESS round on disk at generation time) — the invariant test
-#: re-derives the head at THIS horizon so a mid-verdict r11 sweep file
-#: doesn't invalidate it.
-SWEEP_HEAD_HORIZON = 14
-
-# Staleness rotation: oldest driver evidence first once the head clears
-# (the r05-evidence cohort — generated as --emit-head 85's entries 51-84;
-# only reached if the driver budget exceeds 50).
-SWEEP_ROTATION: list[str] = [
-    # the 5 r4-evidence rows the 50-cut displaced when st14/st16/l4/l68/
-    # l26 turned stale in r11 — they lead the r12 back-fill mechanically,
-    # and a >50 driver budget still reaches them here first
-    "rb16_report_minmax", "rb17_filter_expression", "rb21_active_users",
-    "rb22_ecommerce_overview", "s4_sink_parquet",
-    "s5_csv_json_io", "s7_orc_roundtrip", "s8_clustered_write",
-    "f3_range_date", "a6_grouping_sets", "a10_ratio_metric",
-    "a13_histogram", "a14_percentiles", "a17_approx_percentile",
-    "a18_freq_topk", "j12_interval", "w4_running_sum", "w6_range_frame",
-    "w11_rolling_hll", "o4_topk_per_group", "u3_intersect",
-    "sf5_regex_fn", "sf12_json_path", "sf14b_xxhash", "st3_sessionize",
-    "l4_knn_join", "l40_compression_ratio", "l24_stratified_sample",
-    "l30_decontaminate", "l34_unigram_logprob", "l48_ppl_buckets",
-    "l53_decontam_multi_n", "l59_embed_norm_outliers",
-    "rb4_cohort_retention", "rb7_funnel", "rb18_session_metrics",
-    "rb19_landing_exit", "rb20_engagement_rate",
-]
-
-# Deterministic tail: whatever budget remains walks the families.
-SWEEP_TAIL: list[str] = [
-    "rb", "l", "j", "a", "f", "s", "p", "w", "o", "u", "sf", "ud", "st", "h",
-]
-
-SWEEP_PRIORITY: list[str] = SWEEP_HEAD + SWEEP_ROTATION + SWEEP_TAIL
-
-
-def REGISTRY():
-    return _registry()

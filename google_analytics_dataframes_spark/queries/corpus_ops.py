@@ -1055,8 +1055,8 @@ def l65_bm25_topk(spark, sf_dir):
     # eager checkpoint makes the second pass a read of n_docs tiny rows:
     # 1.04 -> 0.77 s median (first execution 3.60 -> 1.72 s), same-window
     # quiet 5-rep A/B at sf0.1
-    # (plans/r14/l65_bm25_topk_{before,after}.txt).  Same ContextCleaner
-    # cleanup contract as l11's checkpoint note.
+    # (`git show 0dd433a:plans/r14/l65_bm25_topk_{before,after}.txt`).
+    # Same ContextCleaner cleanup contract as l11's checkpoint note.
     proj = barrier.select(
         "doc_id",
         F.size("toks").alias("dl"),
@@ -2049,9 +2049,9 @@ def l78_source_overlap(spark, sf_dir):
     # shingle-vocabulary size == the number of source-sets that contain
     # it, so derive ``tot`` from ``sets`` instead: the tot branch now
     # shares the sets branch's single collect_set aggregation shape and
-    # the stacked distinct disappears (plan diff in
-    # plans/r14/l78_source_overlap_{before,after}.txt: before nodes 5-7,
-    # the (source, sh) Exchange + two HashAggregates, are gone; exact
+    # the stacked distinct disappears (plan diff in `git show
+    # 0dd433a:plans/r14/l78_source_overlap_{before,after}.txt`: before
+    # nodes 5-7, the (source, sh) Exchange + two HashAggregates, are gone; exact
     # integer counts, so equality is structural).  Measured at sf0.1:
     # 1.72 -> 1.12 s median, same-window 5-rep A/B.
     tot = (
@@ -2198,7 +2198,7 @@ def l79_kmeans_lloyd(spark, sf_dir):
     # reason) and every downstream pass is a narrow fold over the
     # in-memory relation: ONE parquet scan per run — 2.48 -> 1.81 s
     # median (cold 6.8 -> 3.2 s), same-window 5-rep A/B at sf0.1
-    # (plans/r14/l79_kmeans_lloyd_{before,after}.txt).
+    # (`git show 0dd433a:plans/r14/l79_kmeans_lloyd_{before,after}.txt`).
     # Same ContextCleaner cleanup contract as l11's checkpoint note.
     emb = (
         T(spark, sf_dir, "embeddings")

@@ -7,9 +7,11 @@ driver evidently runs a different DuckDB build whose version we cannot see
 from this sandbox (no network).  Round 5 restates those six in
 driver-proven constructs; each dg query here isolates ONE construct the
 failing six used (and swept passing queries did not), over a few hundred
-rows, so CORRECTNESS_r05 localizes any remaining engine skew to a named
-construct instead of a whole query.  bench.py additionally records the
-driver environment's pyspark/duckdb versions into BENCH_r05.json.
+rows, so the round-5 driver sweep localized any remaining engine skew to a
+named construct instead of a whole query.  bench.py additionally records
+the pyspark/duckdb versions in its output.  The round-5 records are in git
+history: `git show 0dd433a:CORRECTNESS_r05.json` and
+`git show 0dd433a:BENCH_r05.json`.
 
 Interpretation table (construct -> consumer it certifies):
 

@@ -719,7 +719,8 @@ def rb17_filter_expression(spark, sf_dir):
 # aggregate, both r04-hash-proven (w1, l42) — and every integer SUM output
 # is CAST(... AS BIGINT) so no HUGEINT ever reaches the compare (the l54
 # pattern).  dg1_struct_min keeps the old construct alive as an isolated
-# probe so CORRECTNESS_r05 confirms or refutes the diagnosis either way.
+# probe so the round-5 driver sweep could confirm or refute the diagnosis
+# (its record: `git show 0dd433a:CORRECTNESS_r05.json`).
 _SESS_ORACLE_BASE = """
     WITH seq AS (
       SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
@@ -1418,7 +1419,8 @@ def rb26_flow_reachability(spark, sf_dir):
     WindowGroupLimit top-3 plan) and localCheckpoint'd — page-bounded,
     ≤3·|pages| rows, the rb25 materialization posture — so the recursion
     joins a tiny in-memory relation per hop and the corpus is scanned
-    exactly once.  plans/r14/rb26_flow_reachability_{before,after}.txt."""
+    exactly once.  Plans: `git show
+    0dd433a:plans/r14/rb26_flow_reachability_{before,after}.txt`."""
     from pyspark.sql import Window
 
     ev = T(spark, sf_dir, "events")

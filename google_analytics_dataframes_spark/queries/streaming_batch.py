@@ -633,11 +633,11 @@ def st16_stream_outer_join(spark, sf_dir):
     # fpt=5 batch, then the terminal no-data batch applies the
     # sentinel-advanced watermark and emits every remaining null verdict
     # (row parity vs the batch LEFT JOIN asserted at sf0.01/sf0.1/10x,
-    # tools/stream_probe_r11.py).  The sentinel sits at max(ts)+3h — one
-    # hour of margin past `lateness` — so the applied watermark strictly
-    # clears max(ts) and the boundary purchase can't straddle the
-    # eviction predicate.  2 microbatches total (was 3), 5 staged files
-    # (was 7): same-window A/B medians 4.85 -> 2.65 s at sf0.1,
+    # `git show 0dd433a:tools/stream_probe_r11.py`).  The sentinel sits at
+    # max(ts)+3h — one hour of margin past `lateness` — so the applied
+    # watermark strictly clears max(ts) and the boundary purchase can't
+    # straddle the eviction predicate.  2 microbatches total (was 3), 5
+    # staged files (was 7): same-window A/B medians 4.85 -> 2.65 s at sf0.1,
     # 4.93 -> 2.68 s at 10x, identical emitted rows (20084 / 200840).
     src = _stage_stream_dir_with_flush(
         spark, sf_dir, n_sentinels=1, sentinel_hours=(3,)
@@ -1122,7 +1122,8 @@ def st14_stream_sessionize(spark, sf_dir):
     # sessions still OPEN in batch 1 and extend/close in batch 2.  Batch
     # fixed cost (state-store lifecycle + sink commit) was the dominant
     # term: same-window A/B at sf0.1 measured 4.09 -> 2.95 s median
-    # (tools/stream_probe_r10.py), identical emitted rows.
+    # (`git show 0dd433a:tools/stream_probe_r10.py`), identical emitted
+    # rows.
     stream = jobs.read_event_stream(spark, src, files_per_trigger=3)
     with _few_state_partitions(spark):
         out = jobs.run_available_now_parquet(

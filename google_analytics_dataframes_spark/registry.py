@@ -60,33 +60,6 @@ def register(name: str, oracle: str | None = None, tier: str = "O", doc: str = "
     return deco
 
 
-def ordered_by_priority(reg: dict[str, Query], prefixes: list[str]) -> dict[str, Query]:
-    """Return ``reg`` reordered by a prefix priority list (pure function).
-
-    Each entry is matched as an exact name first, then as a name prefix
-    (longest-prefix wins, so "w10" beats "w1"); unmatched queries keep their
-    registration order after all matched ones.  This exists ONLY for the
-    external correctness sweep, which walks the returned dict in order and
-    may truncate on a count/time budget — the order decides which queries
-    get recorded evidence.  Every other consumer (bench, tests, docs) uses
-    ``registry()``'s canonical registration order.
-    """
-    if not prefixes:
-        return dict(reg)
-
-    def rank(name: str) -> tuple[int, int]:
-        best = len(prefixes)  # unmatched sorts after every priority bucket
-        best_len = -1
-        for i, p in enumerate(prefixes):
-            if name == p or name.startswith(p):
-                if len(p) > best_len:
-                    best, best_len = i, len(p)
-        return (best, 0)
-
-    indexed = sorted(enumerate(reg), key=lambda t: (rank(t[1]), t[0]))
-    return {n: reg[n] for _, n in indexed}
-
-
 def registry() -> dict[str, Query]:
     """All registered queries in canonical registration order (importing the
     queries package populates it)."""
@@ -95,19 +68,8 @@ def registry() -> dict[str, Query]:
     return dict(_REGISTRY)
 
 
-def sweep_registry() -> dict[str, Query]:
-    """Registry in the external-sweep priority order (queries.SWEEP_PRIORITY).
-
-    Only ``__spark_entry__.py`` consumes this — the driver's budget-truncated
-    correctness sweep iterates it in order, so unverified families go first.
-    """
-    import google_analytics_dataframes_spark.queries as q  # lazy: avoids import cycle
-
-    return ordered_by_priority(registry(), q.SWEEP_PRIORITY)
-
-
 def query_fns() -> dict[str, QueryFn]:
-    return {name: q.fn for name, q in sweep_registry().items()}
+    return {name: q.fn for name, q in registry().items()}
 
 
 def oracle_sqls() -> dict[str, str]:
@@ -115,6 +77,6 @@ def oracle_sqls() -> dict[str, str]:
     the driver's compare dataset (``DRIVER_SF_DIR``)."""
     return {
         name: q.oracle_for(DRIVER_SF_DIR)
-        for name, q in sweep_registry().items()
+        for name, q in registry().items()
         if q.oracle is not None
     }

@@ -1,10 +1,11 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 # Before ANY SparkSession exists: if the protobuf wheel is absent but a
 # vendored pure-python runtime is on the host, expose it to Spark's Python

@@ -600,9 +600,10 @@ def test_shipped_prefix_crossover_threshold(spark):
     DEFAULT threshold itself: identical inputs, stats straddling the
     shipped 2M default, no parameter overrides.  Plan signatures:
     ppjoin prefix carries the array_intersect verify stage, the plain
-    inverted-index join never does.  tools/router_threshold_probe_r13.py
-    is the companion MEASUREMENT (real >2M-row corpus through the
-    no-stats probe path, walls + task histograms in BASELINE.md)."""
+    inverted-index join never does.  The companion MEASUREMENT (real
+    >2M-row corpus through the no-stats probe path, walls + task
+    histograms) is `git show 0dd433a:tools/router_threshold_probe_r13.py`
+    and its section of `git show 0dd433a:BASELINE.md`."""
     import inspect
 
     # the shipped default this test exists to pin

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -568,9 +569,8 @@ def test_st18_arms_tws_post_jvm(tmp_path):
             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
             .getOrCreate()
         )
-        from google_analytics_dataframes_spark.queries import REGISTRY
-        fn = REGISTRY()["st18_stream_typed_state"]
-        fn = getattr(fn, "fn", fn)
+        from google_analytics_dataframes_spark.registry import registry
+        fn = registry()["st18_stream_typed_state"].fn
         out = fn(spark, "/root/testdata/sf0.001").toPandas()
         from pyspark.sql import functions as F
         from google_analytics_dataframes_spark.io import load_table
@@ -594,7 +594,7 @@ def test_st18_arms_tws_post_jvm(tmp_path):
         text=True,
         timeout=300,
         env=env,
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parent.parent,
     )
     assert "ST18-POST-JVM-OK" in r.stdout, (r.stdout[-2000:], r.stderr[-2000:])
 

@@ -3,7 +3,7 @@
 registered query: shuffle (Exchange) count, join algorithms, scans and how
 many of them have pushed filters.
 
-    python tools/plan_audit_report.py            # writes /root/repo/PLAN_AUDIT.md
+    python tools/plan_audit_report.py    # writes PLAN_AUDIT.md in the checkout root
 
 This is evidence, not vibes: each row is read off the compiled physical plan
 at sf0.01.  Regenerate after touching any operator.
@@ -11,10 +11,12 @@ at sf0.01.  Regenerate after touching any operator.
 
 from __future__ import annotations
 
+import os
 import sys
 from datetime import date
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HEADER = """# PLAN AUDIT — physical-plan facts per registered query
 
@@ -81,7 +83,7 @@ def main() -> None:
         "happens at most once per query.",
         "",
     ]
-    with open("/root/repo/PLAN_AUDIT.md", "w") as f:
+    with open(os.path.join(REPO, "PLAN_AUDIT.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLAN_AUDIT.md ({len(reg)} queries); top shuffles: {worst[:5]}")
 
