@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
+    """Flagship query on the sf0.001 test data; driver checks rows>0.
 
     GA's canonical question over the events table (SURVEY.md §7 step 1):
     "count and value by event_type by day, January window, busiest first" —
@@ -31,11 +31,12 @@ def entry(spark: SparkSession) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
+    from google_analytics_dataframes_spark.io import TESTDATA_DIR
     from google_analytics_dataframes_spark.queries._util import T, dsum
     from google_analytics_dataframes_spark.session import configure
 
     configure(spark)
-    ev = T(spark, "/root/testdata/sf0.001", "events")
+    ev = T(spark, os.path.join(TESTDATA_DIR, "sf0.001"), "events")
     return (
         ev.filter(
             (F.col("ts") >= F.lit("2024-01-01").cast("timestamp"))

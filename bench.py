@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Benchmark harness (BASELINE.md protocol): run every registered query at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+$SPARK_GRAFT_SF_DIR (default: io.DEFAULT_SF_DIR, the sf0.1 test data) on
 local[$SPARK_GRAFT_CPUS], print ONE JSON line:
 
     {"metric": "total_query_sec", "value": N, "unit": "sec",
@@ -158,7 +158,9 @@ def _loadavg() -> list[float] | None:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from google_analytics_dataframes_spark.io import DEFAULT_SF_DIR
+
+    sf_dir = DEFAULT_SF_DIR
     load_before = _loadavg()  # before any Spark/JVM work
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))

@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from google_analytics_dataframes_spark.session import configure
+from google_analytics_dataframes_spark.session import configure, state
 
 #: Every driver-supplied table (TESTDATA.md:13-15 + documents/embeddings).
 TABLES: tuple[str, ...] = (
@@ -35,7 +35,13 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+#: Root of the driver-supplied scale-factor directories (TESTDATA.md); every
+#: default dataset path in the repo is derived from it.
+TESTDATA_DIR = "/root/testdata"
+
+DEFAULT_SF_DIR = os.environ.get(
+    "SPARK_GRAFT_SF_DIR", os.path.join(TESTDATA_DIR, "sf0.1")
+)
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -46,7 +52,7 @@ _SCRATCH_BASE: str | None = None
 
 
 def _pid_alive(pid: int) -> bool:
-    """Portable liveness probe for the orphan-dir sweeps, via signal-0
+    """Portable liveness probe for the orphan scratch-dir sweep, via signal-0
     rather than /proc (ADVICE r9): on hosts without procfs (macOS, some
     containers) an ``exists('/proc/<pid>')`` test calls EVERY other live
     process dead and rmtree's its staging — reintroducing the concurrent
@@ -101,36 +107,15 @@ def _scratch_base() -> str:
     return _SCRATCH_BASE
 
 
-def sweep_dead_pid_dirs() -> None:
-    """Reap pid-suffixed staging dirs left by DEAD processes (ADVICE r8):
-    the mutable staging paths (s20 bloom result, s21's day-partitioned
-    events copy — sizable at 10x — j16's skew-join result, s22's CTAS
-    location) embed ``_pid<NNN>`` precisely so liveness is checkable, but
-    a crashed/killed process never runs its own sweep and the dirs
-    accumulated in /tmp indefinitely.  Every query that creates one calls
-    this on entry; same signal-0 liveness test the scratch-base sweep
-    uses (see :func:`_pid_alive`)."""
-    import re
-    import shutil
-    import tempfile
-
-    pat = re.compile(r"^spark_graft_.*_pid(\d+)$")
-    base = tempfile.gettempdir()
-    try:
-        entries = os.listdir(base)
-    except OSError:  # pragma: no cover - tempdir oddities
-        return
-    for entry in entries:
-        m = pat.match(entry)
-        if m is None or int(m.group(1)) == os.getpid():
-            continue
-        if not _pid_alive(int(m.group(1))):
-            shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
-
-
 def scratch_dir(name: str) -> str:
     """Ephemeral scratch directory for staging/checkpoint artifacts,
     RAM-backed when the host offers tmpfs (with headroom).
+
+    The one home for per-call or mutable output (sink round-trips, staged
+    stream sources, checkpoints, dirs a query overwrites): it sits under
+    the per-process scratch root, so concurrent processes never share a
+    path, and orphans of dead processes are reaped by the root's sweep.
+    Read-only fixtures shared across processes use :func:`staged_dir`.
 
     Streaming state stores and checkpoint WALs fsync every microbatch
     commit; on a disk-backed /tmp that fsync IS the fixed cost (and the
@@ -166,24 +151,6 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
     return hashlib.md5("\n".join(parts).encode()).hexdigest()[:16]
 
 
-#: Lazy-PLAN memo: (applicationId, abs sf_dir, table, byte-fingerprint) ->
-#: the unresolved DataFrame.  This caches METADATA ONLY — the analyzed
-#: read plan (file listing + footer schema), never rows: every action on
-#: the returned frame still scans the parquet from disk.  Round-15
-#: measurement (guide §1.5/§6): each ``spark.read.parquet`` call costs
-#: ~107 ms of schema-inference/listing at sf0.1, and every timed bench
-#: execution rebuilt its table reads — ~100 ms x tables-per-query x 296
-#: rows of pure per-query fixed cost (the bench's warm-run protocol
-#: already declares "parquet footer reads" an untimed warm-up cost; this
-#: makes the code match the protocol).  The byte-fingerprint in the key
-#: (size+mtime hash, ~10 µs) means a dataset regenerated in place mints
-#: a fresh entry instead of serving a stale file listing — same contract
-#: as staged_dir.  At 100 TB this is Spark's own
-#: ``filesourcePartitionFileCacheSize`` posture: list once per session,
-#: not once per query.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table as a lazy DataFrame (schema from Parquet footer).
 
@@ -200,14 +167,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       TIMESTAMP_NTZ.  The session timezone is pinned to UTC (session.py),
       so casting NTZ→TIMESTAMP is value-preserving and matches DuckDB,
       which reads the same column as a naive timestamp treated as UTC."""
+    # Lazy-PLAN memo in the session's state: this caches METADATA ONLY —
+    # the analyzed read plan (file listing + footer schema), never rows:
+    # every action on the returned frame still scans the parquet.  Each
+    # ``spark.read.parquet`` costs ~107 ms of schema inference and listing
+    # at sf0.1, paid per table reference per execution without the memo.
+    # The byte fingerprint in the key (size+mtime hash, ~10 µs) means a
+    # dataset regenerated in place mints a fresh entry instead of serving
+    # a stale file listing — same contract as staged_dir.  At 100 TB this
+    # is Spark's own ``filesourcePartitionFileCacheSize`` posture: list
+    # once per session, not once per query.
     configure(spark)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        table_fingerprint(sf_dir, name),
-    )
-    cached = _TABLE_CACHE.get(key)
+    memo = state(spark)
+    key = ("load_table", os.path.abspath(sf_dir), name, table_fingerprint(sf_dir, name))
+    cached = memo.get(key)
     if cached is not None:
         return cached
     df = spark.read.parquet(table_path(sf_dir, name))
@@ -216,7 +189,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    _TABLE_CACHE[key] = df
+    memo[key] = df
     return df
 
 
@@ -467,6 +440,8 @@ def staged_dir(sf_dir: str, table: str, name: str, build_fn) -> str:
     including the marker (Spark's parquet writer emits `_SUCCESS`
     itself).
 
+    The one home for read-only fixtures shared across processes
+    (per-call or mutable output goes to :func:`scratch_dir`).
     Cross-process safety (review r8): the path is SHARED /tmp, so the
     build goes into a unique scratch dir and publishes via one atomic
     rename — two racing processes each build their own copy and exactly

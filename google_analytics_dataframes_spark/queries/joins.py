@@ -478,15 +478,11 @@ def j16_aqe_skew_join(spark, sf_dir):
     constraint this row documents."""
     import os
     import shutil
-    import tempfile
 
-    from google_analytics_dataframes_spark.io import sweep_dead_pid_dirs
+    from google_analytics_dataframes_spark.io import scratch_dir
 
-    sweep_dead_pid_dirs()
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_skewjoin_{sf_tag}_pid{os.getpid()}"
-    )
+    out = scratch_dir(f"skewjoin_{sf_tag}")
     saved = {k: spark.conf.get(k, None) for k in _SKEW_CONFS}
     try:
         for k, v in _SKEW_CONFS.items():

@@ -384,38 +384,25 @@ def rb11_rollup_reuse(spark, sf_dir):
     exact-decimal sums are; distincts are NOT — those need sketches, see
     w11).  The oracle computes the same answer from the raw table, so the
     driver check proves rollup == raw."""
-    import os
-    import shutil
-    import tempfile
-
-    from google_analytics_dataframes_spark.io import table_fingerprint
+    from google_analytics_dataframes_spark.io import staged_dir
     from google_analytics_dataframes_spark.queries._util import dsum
 
-    # Cache path includes a content fingerprint of the source table: a
-    # dataset regenerated in place under the same sf tag gets a NEW rollup
-    # path (the stale one's _SUCCESS marker can no longer be served), which
-    # is the materialized-view invalidation rule a real metastore enforces
-    # via snapshot ids.
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = table_fingerprint(sf_dir, "events")
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_rollup_day_{sf_tag}_{fp}"
-    )
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
-        ev = T(spark, sf_dir, "events")
+    # staged_dir keys the path by a content fingerprint of the source
+    # table: a dataset regenerated in place under the same sf tag gets a
+    # NEW rollup path, which is the materialized-view invalidation rule a
+    # real metastore enforces via snapshot ids.
+    def build(path):
         (
-            ev.groupBy(
-                F.date_trunc("day", F.col("ts")).alias("day"), "event_type"
-            )
+            T(spark, sf_dir, "events")
+            .groupBy(F.date_trunc("day", F.col("ts")).alias("day"), "event_type")
             .agg(
                 F.count("*").alias("sessions"),
                 dsum("value").cast("decimal(30,6)").alias("total_value"),
             )
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(path)
         )
+
+    out = staged_dir(sf_dir, "events", "rollup_day", build)
     roll = spark.read.parquet(out).filter(
         (F.col("day") >= F.lit("2024-01-01").cast("timestamp"))
         & (F.col("day") < F.lit("2024-02-01").cast("timestamp"))

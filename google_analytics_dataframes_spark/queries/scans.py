@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -28,7 +27,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from google_analytics_dataframes_spark.io import fanout
+from google_analytics_dataframes_spark.io import (
+    fanout,
+    scratch_dir,
+    staged_dir,
+    table_fingerprint,
+)
 from google_analytics_dataframes_spark.registry import register
 from google_analytics_dataframes_spark.queries._util import T, dsum, dsum_sql
 
@@ -98,7 +102,7 @@ def s4_sink_parquet(spark, sf_dir):
     write+read round-trip is value-exact (parquet is lossless for these
     types), including the partition column recovered from directory names.
     """
-    out = os.path.join(tempfile.gettempdir(), "spark_graft_sink_parquet")
+    out = scratch_dir("sink_parquet")
     shutil.rmtree(out, ignore_errors=True)
     li = T(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"
@@ -133,7 +137,7 @@ def s5_csv_json_io(spark, sf_dir):
     shortest-round-trip decimal forms; event_id order is total, so the
     LIMIT rowset is deterministic).
     """
-    base = os.path.join(tempfile.gettempdir(), "spark_graft_io")
+    base = scratch_dir("io")
     shutil.rmtree(base, ignore_errors=True)
     ev = (
         T(spark, sf_dir, "events")
@@ -171,7 +175,7 @@ def s7_orc_roundtrip(spark, sf_dir):
     proves the ORC round-trip value-exact.  Avro is deliberately absent:
     spark-avro is an external jar, and this engine gates optional formats
     at import time rather than assuming cluster jars."""
-    out = os.path.join(tempfile.gettempdir(), "spark_graft_sink_orc")
+    out = scratch_dir("sink_orc")
     shutil.rmtree(out, ignore_errors=True)
     o = T(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
@@ -198,7 +202,7 @@ def s8_clustered_write(spark, sf_dir):
     tests/test_invariants.py (test_write_clustered_gives_prunable_row_groups)."""
     from google_analytics_dataframes_spark.io import write_clustered
 
-    out = os.path.join(tempfile.gettempdir(), "spark_graft_clustered")
+    out = scratch_dir("clustered")
     shutil.rmtree(out, ignore_errors=True)
     ev = T(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     write_clustered(ev, out, cluster_by=["user_id"], num_files=8)
@@ -276,48 +280,32 @@ def s11_text_source(spark, sf_dir):
     proves the text round-trip byte-exact.  At 100 TB this is the
     `text/` + `wholeTextFiles`-free path: line-splittable, so every file
     chunks into parallel read tasks."""
-    from google_analytics_dataframes_spark.io import table_fingerprint
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = table_fingerprint(sf_dir, "documents")
-    out = os.path.join(tempfile.gettempdir(), f"spark_graft_text_{sf_tag}_{fp}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
-        T(spark, sf_dir, "documents").select("text").write.mode("overwrite").text(out)
-    return spark.read.text(out)
+    def build(path):
+        T(spark, sf_dir, "documents").select("text").write.text(path)
+
+    return spark.read.text(staged_dir(sf_dir, "documents", "text", build))
 
 
 def _partitioned_events_dir(spark, sf_dir) -> str:
     """Stage (once per dataset fingerprint) the day-partitioned copy of
     events — the layout a 100 TB event table actually ships in.  Shared by
     s10 (static partition pruning) and s12 (dynamic partition pruning)."""
-    from google_analytics_dataframes_spark.io import table_fingerprint
 
-    # fingerprint in the cache path: a regenerated source dataset under the
-    # same sf tag must re-materialize, not serve the stale partitioned copy
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = table_fingerprint(sf_dir, "events")
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_partitioned_events_{sf_tag}_{fp}"
-    )
-    marker = os.path.join(out, "_SUCCESS")
-    ev = T(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "ts",
-        "event_type",
-        "value",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
-    )
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(path):
+        ev = T(spark, sf_dir, "events").select(
+            "event_id",
+            "user_id",
+            "ts",
+            "event_type",
+            "value",
+            F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
+        )
         # one file per day-partition: repartition on the partition column so
         # each task writes one directory, not |tasks| x |days| small files
-        ev.repartition(F.col("day")).write.partitionBy("day").mode(
-            "overwrite"
-        ).parquet(out)
-    return out
+        ev.repartition(F.col("day")).write.partitionBy("day").parquet(path)
+
+    return staged_dir(sf_dir, "events", "partitioned_events", build)
 
 
 @register(
@@ -356,16 +344,8 @@ def _day_dim_dir(spark, sf_dir) -> str:
     'target' for days-of-month congruent to 1 mod 7.  A real warehouse
     has exactly this shape — a small calendar/dimension table whose
     FILTER decides which partitions of the fact table a query touches."""
-    from google_analytics_dataframes_spark.io import table_fingerprint
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = table_fingerprint(sf_dir, "events")
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_day_dim_{sf_tag}_{fp}"
-    )
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(path):
         dim = (
             T(spark, sf_dir, "events")
             .select(F.to_date(F.date_trunc("day", "ts")).alias("day"))
@@ -377,8 +357,9 @@ def _day_dim_dir(spark, sf_dir) -> str:
                 ),
             )
         )
-        dim.coalesce(1).write.mode("overwrite").parquet(out)
-    return out
+        dim.coalesce(1).write.parquet(path)
+
+    return staged_dir(sf_dir, "events", "day_dim", build)
 
 
 @register(
@@ -432,19 +413,9 @@ def _zordered_events_dir(spark, sf_dir) -> str:
     """Stage (once per dataset fingerprint) the Z-ORDERED copy of events —
     Morton-interleaved (user_id, epoch-day) layout (io.write_zordered), 16
     files.  Shared by s13 and the footer-evidence test."""
-    from google_analytics_dataframes_spark.io import (
-        table_fingerprint,
-        write_zordered,
-    )
+    from google_analytics_dataframes_spark.io import write_zordered
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = table_fingerprint(sf_dir, "events")
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_zorder_events_{sf_tag}_{fp}"
-    )
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(path):
         ev = T(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -453,8 +424,9 @@ def _zordered_events_dir(spark, sf_dir) -> str:
             "value",
             F.floor(F.unix_micros("ts") / 86_400_000_000).alias("day_num"),
         )
-        write_zordered(ev, out, "user_id", "day_num", num_files=16)
-    return out
+        write_zordered(ev, path, "user_id", "day_num", num_files=16)
+
+    return staged_dir(sf_dir, "events", "zorder_events", build)
 
 
 @register(
@@ -549,25 +521,18 @@ def _evolved_orders_dir(spark, sf_dir) -> str:
     o_orderpriority column; generation v2 (odd keys) carries it.  This is
     the layout every long-lived lake table actually has — files written
     before a column existed sit next to files written after."""
-    from google_analytics_dataframes_spark.io import table_fingerprint
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = table_fingerprint(sf_dir, "orders")
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_evolved_orders_{sf_tag}_{fp}"
-    )
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(path):
         o = T(spark, sf_dir, "orders")
         o.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
-        ).write.mode("overwrite").parquet(f"{out}/gen=v1")
+        ).write.parquet(f"{path}/gen=v1")
         o.filter(F.col("o_orderkey") % 2 == 1).select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
-        ).write.mode("overwrite").parquet(f"{out}/gen=v2")
-        open(marker, "w").close()
-    return out
+        ).write.parquet(f"{path}/gen=v2")
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    return staged_dir(sf_dir, "orders", "evolved_orders", build)
 
 
 @register(
@@ -615,25 +580,18 @@ def _corrupt_jsonl_dir(spark, sf_dir) -> str:
     7th document's line is TRUNCATED mid-object — the malformed-input
     reality of any crawl-scale ingest (connection cuts, partial flushes,
     non-JSON garbage in a .jsonl drop)."""
-    from google_analytics_dataframes_spark.io import table_fingerprint
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = table_fingerprint(sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_corrupt_jsonl_{sf_tag}_{fp}"
-    )
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(path):
         line = F.when(
             F.col("doc_id") % 7 == 0,
             F.concat(F.lit('{"doc_id": '), F.col("doc_id"), F.lit(', "n_chars":')),
         ).otherwise(F.to_json(F.struct("doc_id", "n_chars")))
-        T(spark, sf_dir, "documents").select(line.alias("value")).write.mode(
-            "overwrite"
-        ).text(f"{out}/data")
-        open(marker, "w").close()
-    return out
+        T(spark, sf_dir, "documents").select(line.alias("value")).write.text(
+            f"{path}/data"
+        )
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    return staged_dir(sf_dir, "documents", "corrupt_jsonl", build)
 
 
 @register(
@@ -712,8 +670,6 @@ def s17_footer_stats(spark, sf_dir):
     import urllib.parse
 
     import pandas as pd
-
-    from google_analytics_dataframes_spark.io import staged_dir
 
     def _build(path):
         ev = T(spark, sf_dir, "events").select("event_id", "event_type", "value")
@@ -807,7 +763,7 @@ def s18_manifest_pruned_read(spark, sf_dir):
     the footers, and the selected-file fraction IS the query's cost."""
     import pyarrow.parquet as pq
 
-    from google_analytics_dataframes_spark.io import staged_dir, write_clustered
+    from google_analytics_dataframes_spark.io import write_clustered
 
     def _build(path):
         ev = T(spark, sf_dir, "events").select("event_id", "user_id", "value")
@@ -874,7 +830,6 @@ def s19_python_datasource_writer(spark, sf_dir):
     is one manifest rename — O(tasks) metadata, zero data movement."""
     import json as _json
 
-    from google_analytics_dataframes_spark.io import scratch_dir
     from google_analytics_dataframes_spark.sources.ga_api import (
         register_upload_sink,
     )
@@ -961,18 +916,13 @@ def s20_bloom_pruned_join(spark, sf_dir):
     because sf0.1 sits under the feature's size thresholds — production
     defaults engage it exactly where it pays (see _BLOOM_CONFS).
 
-    The staging path is (sf, pid)-scoped: the result is REGENERATED on
-    every call (it is the measured operation), so unlike the
-    fingerprint-cached fixtures it needs per-process isolation, not
-    cache keying — two concurrent driver processes (bench + sweep) must
-    not rmtree each other's in-flight result (review-r8 class)."""
-    from google_analytics_dataframes_spark.io import sweep_dead_pid_dirs
-
-    sweep_dead_pid_dirs()
+    The result is REGENERATED on every call (it is the measured
+    operation), so unlike the fingerprint-cached fixtures it is staged in
+    io.scratch_dir: per-process isolation, not cache keying — two
+    concurrent driver processes must not rmtree each other's in-flight
+    result."""
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_bloom_join_{sf_tag}_pid{os.getpid()}"
-    )
+    out = scratch_dir(f"bloom_join_{sf_tag}")
     saved = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
     try:
         for k, v in _BLOOM_CONFS.items():
@@ -994,27 +944,15 @@ def _dpo_dir(sf_dir) -> str:
     Unlike the read-only fixtures (io.staged_dir), this directory is
     MUTATED by the query under test (the dynamic overwrite), so a shared
     fingerprint-keyed cache would let two processes overwrite the same
-    partition concurrently; the pid suffix gives each process its own
-    mutable copy while the fingerprint still invalidates on dataset
-    regeneration.  Stale fingerprints OF THIS PROCESS are swept on the
-    way in, so repeated regenerations don't accumulate copies."""
+    partition concurrently; io.scratch_dir gives each process its own
+    mutable copy while the fingerprint in the name still invalidates on
+    dataset regeneration.  Stale fingerprints are swept on the way in,
+    so repeated regenerations don't accumulate copies."""
     import glob
 
-    from google_analytics_dataframes_spark.io import (
-        sweep_dead_pid_dirs,
-        table_fingerprint,
-    )
-
-    sweep_dead_pid_dirs()
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = table_fingerprint(sf_dir, "events")
-    pid = os.getpid()
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_dpo_{sf_tag}_{fp}_pid{pid}"
-    )
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"spark_graft_dpo_{sf_tag}_*_pid{pid}")
-    ):
+    out = scratch_dir(f"dpo_{sf_tag}_{table_fingerprint(sf_dir, 'events')}")
+    for stale in glob.glob(os.path.join(os.path.dirname(out), f"dpo_{sf_tag}_*")):
         if stale != out:
             shutil.rmtree(stale, ignore_errors=True)
     return out
@@ -1108,19 +1046,14 @@ def s22_catalog_ctas(spark, sf_dir):
 
     The vanilla session uses the in-memory catalog (no Hive metastore),
     so table metadata is session-scoped and the only on-disk artifact is
-    the explicit /tmp LOCATION — re-created idempotently per call.
+    the explicit scratch LOCATION — re-created idempotently per call.
 
     Scale: CTAS/INSERT are ordinary distributed writes; the catalog adds
     name resolution, statistics storage, and (at 100 TB) the place where
     partitioning/bucketing metadata lives so Catalyst can prune and
     co-locate without listing files."""
-    from google_analytics_dataframes_spark.io import sweep_dead_pid_dirs
-
-    sweep_dead_pid_dirs()
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ctas_orders_{sf_tag}_pid{os.getpid()}"
-    )
+    out = scratch_dir(f"ctas_orders_{sf_tag}")
     spark.sql("DROP TABLE IF EXISTS s22_orders_slice")
     shutil.rmtree(out, ignore_errors=True)
     T(spark, sf_dir, "orders").createOrReplaceTempView("s22_src_orders")

@@ -17,6 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from google_analytics_dataframes_spark.registry import register
+from google_analytics_dataframes_spark.session import state
 from google_analytics_dataframes_spark.queries._util import T, dsum, dsum_sql
 
 _DEC = "decimal(30,6)"
@@ -159,26 +160,23 @@ def st3_sessionize(spark, sf_dir):
 # Staging-directory cache: the source directory a stream reads is FIXTURE
 # scaffolding (a real deployment reads an existing bus/landing zone), so
 # re-materializing it on every query invocation would charge the measured
-# stream a parquet write it doesn't own.  Keyed like llm_ops._SRC5_CACHE —
-# (variant, session, dataset, file fingerprint) — so a new session, a
+# stream a parquet write it doesn't own.  Memoized in the session's state
+# under (variant, dataset, file fingerprint), so a new session, a
 # different sf, or regenerated testdata re-stages; the cached dir is
-# re-validated on disk before reuse (the tmpfs sweeper only removes
+# re-validated on disk before reuse (the scratch sweep only removes
 # other-process orphans, but cheap paranoia).
-_STAGE_CACHE: dict[tuple, str] = {}
-
-
 def _stage_cached(spark, sf_dir: str, variant: str):
     import os
 
     from google_analytics_dataframes_spark.io import table_fingerprint
 
     key = (
+        "stage",
         variant,
-        spark.sparkContext.applicationId,
-        sf_dir,
+        os.path.abspath(sf_dir),
         table_fingerprint(sf_dir, "events"),
     )
-    d = _STAGE_CACHE.get(key)
+    d = state(spark).get(key)
     return key, (d if d is not None and os.path.isdir(d) else None)
 
 
@@ -211,7 +209,7 @@ def _stage_stream_dir(spark, sf_dir: str, ordered: bool) -> str:
         # 2 files -> 2 microbatches: enough to prove per-batch replanning of
         # the static side without paying 4 batch fixed costs per sweep
         ev.repartition(2).write.mode("overwrite").parquet(d)
-    _STAGE_CACHE[key] = d
+    state(spark)[key] = d
     return d
 
 
@@ -250,7 +248,7 @@ def _stage_stream_dir_with_replays(spark, sf_dir: str) -> str:
         t = 1_700_000_000 + i * 60
         os.utime(dst, (t, t))
     shutil.rmtree(stage, ignore_errors=True)
-    _STAGE_CACHE[key] = d
+    state(spark)[key] = d
     return d
 
 
@@ -340,7 +338,7 @@ def _stage_stream_dir_with_flush(
         pq.write_table(table, dst)
         t = 1_700_000_000 + (len(parts) + s) * 60
         os.utime(dst, (t, t))
-    _STAGE_CACHE[key] = d
+    state(spark)[key] = d
     return d
 
 
@@ -380,7 +378,7 @@ def _stage_doc_stream(spark, sf_dir: str) -> str:
         t = 1_700_000_000 + i * 60
         os.utime(dst, (t, t))
     shutil.rmtree(stage, ignore_errors=True)
-    _STAGE_CACHE[key] = d
+    state(spark)[key] = d
     return d
 
 
@@ -692,7 +690,7 @@ def _stage_restart_phases(spark, sf_dir: str) -> str:
             "value",
             "props",
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(d, name))
-    _STAGE_CACHE[key] = d
+    state(spark)[key] = d
     return d
 
 
@@ -1210,7 +1208,7 @@ def _stage_change_stream(spark, sf_dir: str) -> str:
         t = 1_700_000_000 + i * 60
         os.utime(dst, (t, t))
     shutil.rmtree(stage, ignore_errors=True)
-    _STAGE_CACHE[key] = d
+    state(spark)[key] = d
     return d
 
 
@@ -1403,7 +1401,7 @@ def _stage_stream_dir_with_late(spark, sf_dir: str) -> str:
     _marker(3, "sentinel0", (hi + 2 * 3600 * 1_000_000) * 1000, "__flush__")
     _marker(4, "sentinel1", (hi + 4 * 3600 * 1_000_000) * 1000, "__flush__")
     shutil.rmtree(stage, ignore_errors=True)
-    _STAGE_CACHE[key] = d
+    state(spark)[key] = d
     return d
 
 

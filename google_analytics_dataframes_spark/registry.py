@@ -16,16 +16,19 @@ Determinism hygiene enforced here by convention (SURVEY.md §5.2 item 4):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from google_analytics_dataframes_spark.io import TESTDATA_DIR
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 #: The dataset the DRIVER's oracle gate runs at; sf_dir-parameterized
 #: oracles resolve here for the driver-facing ``oracle_sqls()`` dict.
-DRIVER_SF_DIR = "/root/testdata/sf0.01"
+DRIVER_SF_DIR = os.path.join(TESTDATA_DIR, "sf0.01")
 
 
 @dataclass(frozen=True)

@@ -1,12 +1,14 @@
 """SparkSession factory + runtime-conf hygiene (SURVEY.md §4.2, §7 step 1).
 
-Two entry points:
+Three entry points:
 
 * :func:`get_spark` — build a session for our own tests/bench (local[N]).
 * :func:`configure` — idempotently apply the *runtime* confs any session
   needs for deterministic, DuckDB-hash-matching results.  The driver passes
   us its own SparkSession, so every query path calls ``configure(spark)``
   rather than assuming the session factory ran.
+* :func:`state` — the one owner of session-scoped memos (one dict per
+  session, forgotten when the application stops).
 
 Determinism rules (SURVEY.md §5.2 item 4):
 * session timezone UTC — `events.ts` / `o_orderdate` arithmetic must match
@@ -20,6 +22,7 @@ Determinism rules (SURVEY.md §5.2 item 4):
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -40,26 +43,43 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-#: Sessions (by applicationId) already configured — configure() is called
-#: by every load_table and costs ~3 ms of py4j round trips per call
-#: (~400 calls over a bench suite); nothing in the codebase mutates
-#: RUNTIME_CONFS keys mid-session (grep-verified round 15), so one
-#: application per key suffices.
-_CONFIGURED: set[str] = set()
+#: Session-scoped memos: SparkSession -> (applicationId, memo dict).  Every
+#: cache whose values die with a session (lazy table reads, configured
+#: flags, staged stream dirs, catalog index/stats names) lives in the one
+#: dict :func:`state` hands out, so a session's memos go away with it.
+_STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def state(spark: SparkSession) -> dict:
+    """The plain memo dict owned by ``spark`` (one per session object, so
+    ``spark.newSession()`` starts empty).  Only one SparkContext lives in a
+    driver process, so the first lookup under a new applicationId drops
+    every entry of any other application: a stop + restart leaves nothing
+    of the dead context behind.  Callers still re-validate what a memo
+    points at (catalog tables, directories) before trusting it."""
+    entry = _STATE.get(spark)
+    if entry is None:
+        app_id = spark.sparkContext.applicationId
+        for other, (other_app, _) in list(_STATE.items()):
+            if other_app != app_id:
+                del _STATE[other]
+        entry = _STATE[spark] = (app_id, {})
+    return entry[1]
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Idempotently apply runtime confs to an existing session (memoized
-    per applicationId)."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _CONFIGURED:
+    """Idempotently apply runtime confs to an existing session (once per
+    session: configure() runs on every load_table, ~3 ms of py4j round
+    trips each, and nothing mutates RUNTIME_CONFS keys mid-session)."""
+    memo = state(spark)
+    if ("configured",) in memo:
         return spark
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # conf not runtime-settable on this build — skip
             pass
-    _CONFIGURED.add(app_id)
+    memo[("configured",)] = True
     return spark
 
 

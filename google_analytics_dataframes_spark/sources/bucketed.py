@@ -20,7 +20,11 @@ in the catalog, not the parquet footers.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+
+from google_analytics_dataframes_spark.session import state
 
 
 def write_bucketed(
@@ -53,9 +57,9 @@ def write_bucketed(
 # incremental near-dup join, materialized ONCE as a bucketed+sorted catalog
 # table so every subsequent ingest batch joins against the STORED index —
 # no per-run recomputation of corpus signatures, no corpus-side shuffle.
-# Keyed like the streaming staging cache: (session, dataset, fingerprint),
-# so a new session, another sf, or regenerated testdata rebuilds.
-_GRAM_INDEX_CACHE: dict[tuple, str] = {}
+# Every index and stats artifact below is memoized in the session's state
+# (session.state) under (kind, dataset, fingerprint, ...), so a new
+# session, another sf, or regenerated testdata rebuilds.
 
 
 def gram_index_table(
@@ -79,16 +83,15 @@ def gram_index_table(
     SFs; at the 100 TB target the index would be written with
     thousands of buckets sized ~128 MB each — the count is a caller
     decision fixed at write time."""
-    import os
-
     from google_analytics_dataframes_spark.io import (
         scratch_dir,
         table_fingerprint,
     )
 
     fp = table_fingerprint(sf_dir, "documents")
-    key = ("gram_index", spark.sparkContext.applicationId, sf_dir, fp)
-    cached = _GRAM_INDEX_CACHE.get(key)
+    memo = state(spark)
+    key = ("gram_index", os.path.abspath(sf_dir), fp)
+    cached = memo.get(key)
     if cached is not None and spark.catalog.tableExists(cached):
         return cached
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
@@ -102,13 +105,8 @@ def gram_index_table(
         sort_col="item",
         path=os.path.join(scratch_dir("gram_index"), table),
     )
-    _GRAM_INDEX_CACHE[key] = table
+    memo[key] = table
     return table
-
-
-#: Same cache policy as the gram index; value is (vocab_table, mask_table)
-#: or None when the corpus vocabulary exceeds the bitmask regime bound.
-_MASK_INDEX_CACHE: dict[tuple, object] = {}
 
 
 def mask_index_tables(
@@ -137,8 +135,6 @@ def mask_index_tables(
       its distinct-gram count.  ~8V/64 bytes per doc regardless of text
       size; the whole 100 TB corpus reduces to a scan-only table that
       never shuffles and never re-reads text."""
-    import os
-
     from pyspark.sql import functions as F
 
     from google_analytics_dataframes_spark.io import (
@@ -150,9 +146,12 @@ def mask_index_tables(
     )
 
     fp = table_fingerprint(sf_dir, "documents")
-    key = ("mask_index", spark.sparkContext.applicationId, sf_dir, fp, max_vocab)
-    if key in _MASK_INDEX_CACHE:
-        cached = _MASK_INDEX_CACHE[key]
+    memo = state(spark)
+    # memo value is (vocab_table, mask_table), or None when the corpus
+    # vocabulary exceeds the bitmask regime bound — a cached None is a hit
+    key = ("mask_index", os.path.abspath(sf_dir), fp, max_vocab)
+    if key in memo:
+        cached = memo[key]
         if cached is None or all(
             spark.catalog.tableExists(t) for t in cached
         ):
@@ -160,7 +159,7 @@ def mask_index_tables(
     grams = corpus_gram_relation(spark, sf_dir)
     vocab_rows = grams.select("item").distinct().limit(max_vocab + 1).collect()
     if len(vocab_rows) > max_vocab:
-        _MASK_INDEX_CACHE[key] = None
+        memo[key] = None
         return None
     vocab = sorted(r["item"] for r in vocab_rows)
     n_words = (len(vocab) + 63) // 64
@@ -184,12 +183,8 @@ def mask_index_tables(
     masks.write.mode("overwrite").option(
         "path", os.path.join(base, mask_table)
     ).format("parquet").saveAsTable(mask_table)
-    _MASK_INDEX_CACHE[key] = (vocab_table, mask_table)
+    memo[key] = (vocab_table, mask_table)
     return vocab_table, mask_table
-
-
-#: Same cache policy as the gram index; value is (centroid_table, cells_table).
-_IVF_INDEX_CACHE: dict[tuple, tuple] = {}
 
 
 def ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -219,8 +214,6 @@ def ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     multiple ~128 MB files (the writer's maxRecordsPerFile lever); the
     layout — quantizer small and broadcastable, vectors hash-placed by
     cell — is the scale contract."""
-    import os
-
     from pyspark.sql import functions as F
 
     from google_analytics_dataframes_spark.io import (
@@ -233,8 +226,9 @@ def ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
 
     fp = table_fingerprint(sf_dir, "embeddings")
-    key = ("ivf_index", spark.sparkContext.applicationId, sf_dir, fp)
-    cached = _IVF_INDEX_CACHE.get(key)
+    memo = state(spark)
+    key = ("ivf_index", os.path.abspath(sf_dir), fp)
+    cached = memo.get(key)
     if cached is not None and all(spark.catalog.tableExists(t) for t in cached):
         return cached
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
@@ -252,13 +246,75 @@ def ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     ).partitionBy("cell").option(
         "path", os.path.join(base, cells_table)
     ).format("parquet").saveAsTable(cells_table)
-    _IVF_INDEX_CACHE[key] = (centroid_table, cells_table)
+    memo[key] = (centroid_table, cells_table)
     return centroid_table, cells_table
 
 
-#: Same cache policy as the other index artifacts; value is the complete
-#: stats dict (vocab list included — bounded at <= max_vocab entries).
-_CROSS_STATS_CACHE: dict[tuple, dict] = {}
+def _stored_stats(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    params: str,
+    params_re: str,
+    aggregate,
+    shape,
+) -> dict:
+    """The one writer behind the persisted one-row stats tables: serve
+    ``shape(row)`` for the catalog table ``{kind}_{sf_tag}_{fp}_{params}``
+    (fp = the documents fingerprint), building it at most once per
+    session.  ``aggregate(docs)`` returns the one-row DataFrame to store;
+    ``params`` is the caller's physical identity (max_vocab, slice, ...)
+    and ``params_re`` the regex every value of it matches.
+
+    Build path: memo miss -> reuse an existing catalog table -> else
+    evict stale siblings, DROP, write, read back.  A new fingerprint
+    (data regen) mints a new name, and without the eviction the old
+    fingerprint's tables leak catalog entries + scratch parquet forever
+    (ADVICE r12).  Same-fingerprint siblings with other ``params`` are
+    KEPT — live caches for other callers, not stale.  Eviction
+    candidates must match the FULL writer-owned name pattern (ADVICE
+    r13): a bare sf_tag prefix could sweep up a user table whose name
+    merely starts the same way, so only names this writer could have
+    produced qualify, and TEMPORARY catalog entries are skipped outright.
+    Scratch caches are SINGLE-SESSION by contract (VERDICT r13 nit #5):
+    the scratch root is per-process state, not a shared cache."""
+    import re
+    import shutil
+
+    from google_analytics_dataframes_spark.io import (
+        load_table,
+        scratch_dir,
+        table_fingerprint,
+    )
+
+    fp = table_fingerprint(sf_dir, "documents")
+    memo = state(spark)
+    key = (kind, os.path.abspath(sf_dir), fp, params)
+    if key not in memo:
+        sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+        stats_table = f"{kind}_{sf_tag}_{fp}_{params}"
+        if not spark.catalog.tableExists(stats_table):
+            agg = aggregate(load_table(spark, sf_dir, "documents"))
+            base = scratch_dir(kind)
+            owned = re.compile(
+                rf"^{kind}_{re.escape(sf_tag)}_[0-9a-f]{{16}}_{params_re}$"
+            )
+            live_prefix = f"{kind}_{sf_tag}_{fp}_"
+            for t in spark.catalog.listTables():
+                n = t.name
+                if (
+                    owned.match(n)
+                    and not n.startswith(live_prefix)
+                    and getattr(t, "tableType", "") != "TEMPORARY"
+                ):
+                    spark.sql(f"DROP TABLE IF EXISTS {n}")
+                    shutil.rmtree(os.path.join(base, n), ignore_errors=True)
+            spark.sql(f"DROP TABLE IF EXISTS {stats_table}")
+            agg.coalesce(1).write.mode("overwrite").option(
+                "path", os.path.join(base, stats_table)
+            ).format("parquet").saveAsTable(stats_table)
+        memo[key] = shape(spark.table(stats_table).head())
+    return dict(memo[key])
 
 
 def dedup_cross_stats(
@@ -274,7 +330,7 @@ def dedup_cross_stats(
     stored writer records it rather than trusting every caller to.
 
     Contents, persisted as a one-row catalog table next to the other
-    index artifacts (same (session, dataset, fingerprint) cache policy):
+    index artifacts (:func:`_stored_stats`):
 
     * ``n_in_docs`` / ``n_in_items`` — the incoming slice's doc and
       (doc, distinct-gram) row counts (``length(source) == 5``, the
@@ -287,31 +343,11 @@ def dedup_cross_stats(
       corpus lacks), or None past ``max_vocab`` — the operator then
       routes to a candidate-generation strategy, same regime logic as
       :func:`mask_index_tables`."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from google_analytics_dataframes_spark.io import (
-        load_table,
-        scratch_dir,
-        table_fingerprint,
-    )
     from google_analytics_dataframes_spark.operators.dedup import char_ngrams
 
-    fp = table_fingerprint(sf_dir, "documents")
-    key = ("cross_stats", spark.sparkContext.applicationId, sf_dir, fp, max_vocab)
-    cached = _CROSS_STATS_CACHE.get(key)
-    if cached is not None:
-        return dict(cached)
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    # max_vocab is part of the PHYSICAL identity: a table written under a
-    # smaller cap holds a truncated vocab that a larger-cap caller would
-    # otherwise read back as complete (review finding, round 12)
-    stats_table = f"dedup_cross_stats_{sf_tag}_{fp}_v{max_vocab}"
-    if spark.catalog.tableExists(stats_table):
-        row = spark.table(stats_table).head()
-    else:
-        docs = load_table(spark, sf_dir, "documents")
+    def aggregate(docs):
         grams = docs.filter(F.length("source").isin(4, 5)).select(
             "doc_id",
             F.length("source").alias("_side"),
@@ -338,70 +374,33 @@ def dedup_cross_stats(
             grams.select("item").distinct().limit(max_vocab + 1).collect()
         )
         grams.unpersist()
-        probe_vocab = sorted(r["item"] for r in vocab_rows)
-        agg = spark.createDataFrame(
+        return spark.createDataFrame(
             [
                 (
                     int(counts["n_in_docs"]),
                     int(counts["n_in_items"]),
                     int(counts["n_ex_items"]),
-                    probe_vocab,
+                    sorted(r["item"] for r in vocab_rows),
                 )
             ],
             "n_in_docs long, n_in_items long, n_ex_items long, "
             "vocab array<string>",
         )
-        # Evict stale siblings: a new table fingerprint (data regen)
-        # creates a new dedup_cross_stats_* name, and without this the
-        # old fingerprint's tables leak catalog entries + scratch
-        # parquet forever (ADVICE r12).  Same-fingerprint tables with a
-        # different max_vocab are KEPT — they are live caches for other
-        # callers, not stale.  Eviction candidates must match the FULL
-        # writer-owned name pattern (ADVICE r13): a bare sf_tag prefix
-        # could sweep up a user temp view whose name merely starts the
-        # same way (DROP TABLE errors on views on some Spark builds), so
-        # only names this writer could have produced qualify, and
-        # TEMPORARY catalog entries are skipped outright.  Scratch
-        # caches are SINGLE-SESSION by contract (VERDICT r13 nit #5):
-        # two concurrent sessions regenerating different fingerprints
-        # could race this rmtree against each other's live read — the
-        # scratch root is per-process state, not a shared cache.
-        import re
-        import shutil
 
-        owned = re.compile(
-            rf"^dedup_cross_stats_{re.escape(sf_tag)}_[0-9a-f]{{16}}_v\d+$"
-        )
-        live_prefix = f"dedup_cross_stats_{sf_tag}_{fp}_"
-        for t in spark.catalog.listTables():
-            n = t.name
-            if (
-                owned.match(n)
-                and not n.startswith(live_prefix)
-                and getattr(t, "tableType", "") != "TEMPORARY"
-            ):
-                spark.sql(f"DROP TABLE IF EXISTS {n}")
-                shutil.rmtree(
-                    os.path.join(scratch_dir("cross_stats"), n),
-                    ignore_errors=True,
-                )
-        spark.sql(f"DROP TABLE IF EXISTS {stats_table}")
-        agg.coalesce(1).write.mode("overwrite").option(
-            "path", os.path.join(scratch_dir("cross_stats"), stats_table)
-        ).format("parquet").saveAsTable(stats_table)
-        row = spark.table(stats_table).head()
-    vocab = list(row["vocab"]) if len(row["vocab"]) <= max_vocab else None
-    stats = {
-        "n_items": int(row["n_in_items"]) + int(row["n_ex_items"]),
-        "vocab": vocab,
-        "n_in_docs": int(row["n_in_docs"]),
-    }
-    _CROSS_STATS_CACHE[key] = dict(stats)
-    return stats
+    def shape(row):
+        return {
+            "n_items": int(row["n_in_items"]) + int(row["n_ex_items"]),
+            "vocab": list(row["vocab"]) if len(row["vocab"]) <= max_vocab else None,
+            "n_in_docs": int(row["n_in_docs"]),
+        }
 
-
-#: Same cache policy as dedup_cross_stats; value is the complete stats dict.
-_SIMJOIN_STATS_CACHE: dict[tuple, dict] = {}
+    # max_vocab is part of the PHYSICAL identity: a table written under a
+    # smaller cap holds a truncated vocab that a larger-cap caller would
+    # otherwise read back as complete (review finding, round 12)
+    return _stored_stats(
+        spark, sf_dir, "dedup_cross_stats", f"v{max_vocab}", r"v\d+",
+        aggregate, shape,
+    )
 
 
 def simjoin_token_stats(
@@ -437,38 +436,11 @@ def simjoin_token_stats(
     subset.  Coverage of a served vocab is still enforced IN-PLAN by the
     operators' _guarded_masks, so a stale-but-wrong value can never
     silently mis-pair (it fails the query loudly)."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from google_analytics_dataframes_spark.io import (
-        load_table,
-        scratch_dir,
-        table_fingerprint,
-    )
     from google_analytics_dataframes_spark.operators.dedup import tokens
 
-    fp = table_fingerprint(sf_dir, "documents")
-    key = (
-        "simjoin_stats",
-        spark.sparkContext.applicationId,
-        sf_dir,
-        fp,
-        mod,
-        res,
-        max_vocab,
-    )
-    cached = _SIMJOIN_STATS_CACHE.get(key)
-    if cached is not None:
-        return dict(cached)
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    stats_table = (
-        f"simjoin_stats_{sf_tag}_{fp}_m{mod}r{res}_v{max_vocab}"
-    )
-    if spark.catalog.tableExists(stats_table):
-        row = spark.table(stats_table).head()
-    else:
-        docs = load_table(spark, sf_dir, "documents")
+    def aggregate(docs):
         toks = (
             docs.filter(F.col("lang") == "en")
             .select(
@@ -493,54 +465,31 @@ def simjoin_token_stats(
             toks.select("item").distinct().limit(max_vocab + 1).collect()
         )
         toks.unpersist()
-        probe_vocab = sorted(r["item"] for r in vocab_rows)
-        agg = spark.createDataFrame(
+        return spark.createDataFrame(
             [
                 (
                     int(counts["n_items"]),
                     int(counts["n_slice_items"]),
                     int(counts["n_slice_docs"]),
-                    probe_vocab,
+                    sorted(r["item"] for r in vocab_rows),
                 )
             ],
             "n_items long, n_slice_items long, n_slice_docs long, "
             "vocab array<string>",
         )
-        # stale-fingerprint eviction, same writer-owned-pattern rules as
-        # dedup_cross_stats (ADVICE r12/r13)
-        import re
-        import shutil
 
-        owned = re.compile(
-            rf"^simjoin_stats_{re.escape(sf_tag)}_[0-9a-f]{{16}}_m\d+r\d+_v\d+$"
-        )
-        live_prefix = f"simjoin_stats_{sf_tag}_{fp}_"
-        for t in spark.catalog.listTables():
-            n = t.name
-            if (
-                owned.match(n)
-                and not n.startswith(live_prefix)
-                and getattr(t, "tableType", "") != "TEMPORARY"
-            ):
-                spark.sql(f"DROP TABLE IF EXISTS {n}")
-                shutil.rmtree(
-                    os.path.join(scratch_dir("simjoin_stats"), n),
-                    ignore_errors=True,
-                )
-        spark.sql(f"DROP TABLE IF EXISTS {stats_table}")
-        agg.coalesce(1).write.mode("overwrite").option(
-            "path", os.path.join(scratch_dir("simjoin_stats"), stats_table)
-        ).format("parquet").saveAsTable(stats_table)
-        row = spark.table(stats_table).head()
-    vocab = list(row["vocab"]) if len(row["vocab"]) <= max_vocab else None
-    stats = {
-        "n_items": int(row["n_items"]),
-        "n_slice_items": int(row["n_slice_items"]),
-        "n_slice_docs": int(row["n_slice_docs"]),
-        "vocab": vocab,
-    }
-    _SIMJOIN_STATS_CACHE[key] = dict(stats)
-    return dict(stats)
+    def shape(row):
+        return {
+            "n_items": int(row["n_items"]),
+            "n_slice_items": int(row["n_slice_items"]),
+            "n_slice_docs": int(row["n_slice_docs"]),
+            "vocab": list(row["vocab"]) if len(row["vocab"]) <= max_vocab else None,
+        }
+
+    return _stored_stats(
+        spark, sf_dir, "simjoin_stats", f"m{mod}r{res}_v{max_vocab}",
+        r"m\d+r\d+_v\d+", aggregate, shape,
+    )
 
 
 def corpus_gram_relation(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -15,9 +16,10 @@ from tests._protobuf_compat import install_worker_shim
 
 install_worker_shim()
 
+from google_analytics_dataframes_spark.io import TESTDATA_DIR
 from google_analytics_dataframes_spark.session import get_spark
 
-SF_DIR = "/root/testdata/sf0.001"
+SF_DIR = os.path.join(TESTDATA_DIR, "sf0.001")
 
 
 @pytest.fixture(scope="session")

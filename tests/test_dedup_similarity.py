@@ -639,6 +639,16 @@ def test_shipped_prefix_crossover_threshold(spark):
     assert "array_intersect" not in audit.formatted_plan(under_x)
 
 
+def _forget_memos(spark, kind):
+    """Drop one kind of entry from the session's memo owner, so the next
+    call rebuilds instead of serving the memo."""
+    from google_analytics_dataframes_spark.session import state
+
+    memo = state(spark)
+    for k in [k for k in memo if k[0] == kind]:
+        del memo[k]
+
+
 def test_stored_cross_stats_evicts_stale_fingerprint_siblings(spark):
     """ADVICE r12: a data regeneration changes the table fingerprint and
     creates a NEW dedup_cross_stats_* name; the writer must drop the old
@@ -666,8 +676,8 @@ def test_stored_cross_stats_evicts_stale_fingerprint_siblings(spark):
             "overwrite"
         ).saveAsTable(name)
     spark.createDataFrame([(1,)], "x long").createOrReplaceTempView(temp_view)
-    # force a real (re)write: clear the session cache and the live table
-    B._CROSS_STATS_CACHE.clear()
+    # force a real (re)write: drop the session memo and the live table
+    _forget_memos(spark, "dedup_cross_stats")
     spark.sql(f"DROP TABLE IF EXISTS dedup_cross_stats_{sf_tag}_{fp}_v4096")
     stats = B.dedup_cross_stats(spark, SF_DIR)
     assert stats["n_in_docs"] > 0
@@ -695,7 +705,7 @@ def test_simjoin_token_stats_match_direct_probe(spark):
     from google_analytics_dataframes_spark.sources import bucketed as B
 
     mod, res = 20, 5
-    B._SIMJOIN_STATS_CACHE.clear()
+    _forget_memos(spark, "simjoin_stats")
     stats = B.simjoin_token_stats(spark, SF_DIR, mod, res)
     toks = (
         load_table(spark, SF_DIR, "documents")

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from google_analytics_dataframes_spark.io import load_table
 from google_analytics_dataframes_spark.operators import multimodal as M
-from google_analytics_dataframes_spark.registry import registry
+from google_analytics_dataframes_spark.registry import DRIVER_SF_DIR, registry
 from tests.conftest import SF_DIR
 
 
@@ -2224,7 +2224,7 @@ def test_l44_clean_corpus_nonvacuous_at_driver_gate_scale(spark):
     capstone's driver evidence while every hash still "matched" on empty
     frames.  Pin the non-vacuousness at the gate scale."""
     reg = registry()
-    gate_dir = "/root/testdata/sf0.01"
+    gate_dir = DRIVER_SF_DIR
     n_l44 = reg["l44_clean_corpus"].fn(spark, gate_dir).count()
     n_l44b = reg["l44b_clean_corpus_slice"].fn(spark, gate_dir).count()
     assert n_l44 > 0, "l44 emits 0 rows at sf0.01 — driver evidence vacuous"

@@ -558,8 +558,9 @@ def test_st18_arms_tws_post_jvm(tmp_path):
         pytest.skip("no protobuf runtime on this host")
     script = textwrap.dedent(
         """
-        import os
+        import os, sys
         assert "PYTHONPATH" not in os.environ
+        SF_DIR = sys.argv[1]
         from pyspark.sql import SparkSession
         spark = (
             SparkSession.builder.master("local[4]")
@@ -571,11 +572,11 @@ def test_st18_arms_tws_post_jvm(tmp_path):
         )
         from google_analytics_dataframes_spark.registry import registry
         fn = registry()["st18_stream_typed_state"].fn
-        out = fn(spark, "/root/testdata/sf0.001").toPandas()
+        out = fn(spark, SF_DIR).toPandas()
         from pyspark.sql import functions as F
         from google_analytics_dataframes_spark.io import load_table
         exp = (
-            load_table(spark, "/root/testdata/sf0.001", "events")
+            load_table(spark, SF_DIR, "events")
             .groupBy("user_id").count().toPandas()
         )
         got = out.set_index("user_id")["total"].sort_index()
@@ -585,11 +586,11 @@ def test_st18_arms_tws_post_jvm(tmp_path):
         spark.stop()
         """
     )
-    # scratch dirs are PID-suffixed (io.scratch_dir), so the subprocess
+    # scratch dirs are per-process (io.scratch_dir), so the subprocess
     # cannot collide with this suite's staging
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     r = subprocess.run(
-        [sys.executable, "-c", script],
+        [sys.executable, "-c", script, SF_DIR],
         capture_output=True,
         text=True,
         timeout=300,
@@ -1023,13 +1024,17 @@ def test_sized_state_partitions_tracks_source_volume(tmp_path):
     # function; these pin the SHIPPED datasets' placement).
     import os
 
+    from google_analytics_dataframes_spark.io import TESTDATA_DIR
+
     for sf in ("sf0.001", "sf0.01"):
-        if os.path.isdir(f"/root/testdata/{sf}"):
-            assert _sized_state_partitions(f"/root/testdata/{sf}") == 8
+        d = os.path.join(TESTDATA_DIR, sf)
+        if os.path.isdir(d):
+            assert _sized_state_partitions(d) == 8
     # (the 12 s plateau is flat from ~15 to 32 partitions, so pin the
     # band, not the exact quotient of the parquet byte size)
-    if os.path.isdir("/root/testdata/sf0.1"):
-        assert 12 <= _sized_state_partitions("/root/testdata/sf0.1") <= 32
+    d = os.path.join(TESTDATA_DIR, "sf0.1")
+    if os.path.isdir(d):
+        assert 12 <= _sized_state_partitions(d) <= 32
 
 
 def test_micro_units_vec_matches_decimal_contract():
@@ -1101,26 +1106,32 @@ def test_segment_sessions_micro_overflow_guard_fires():
     assert counts == [2, 1] and accs == [2 * 10**15, 10**15]
 
 
-def test_sweep_dead_pid_dirs_reaps_only_dead(tmp_path):
-    """ADVICE r8: the reaper removes spark_graft_*_pid<N> dirs whose
-    process is gone, and must NOT touch the current process's dirs or
-    names without the pid suffix."""
+def test_scratch_base_sweep_reaps_only_dead(tmp_path, monkeypatch):
+    """The scratch root's first-use sweep is the one orphan reaper: it
+    removes spark_graft_scratch_<pid> dirs whose process is gone, and must
+    NOT touch this process's dir or other spark_graft_* names (the shared
+    staged_dir fixtures live beside it)."""
+    import subprocess
+    import sys
     import tempfile
 
-    from google_analytics_dataframes_spark.io import sweep_dead_pid_dirs
+    from google_analytics_dataframes_spark import io as pio
 
-    base = tempfile.gettempdir()
-    dead = os.path.join(base, "spark_graft_unittest_pid999999")
-    alive = os.path.join(base, f"spark_graft_unittest_pid{os.getpid()}")
-    nosuffix = os.path.join(base, "spark_graft_unittest_nopid")
-    for d in (dead, alive, nosuffix):
-        os.makedirs(d, exist_ok=True)
-    try:
-        sweep_dead_pid_dirs()
-        assert not os.path.exists(dead), "dead-pid dir not reaped"
-        assert os.path.exists(alive), "live (own) pid dir was reaped"
-        assert os.path.exists(nosuffix), "non-pid-suffixed dir was reaped"
-    finally:
-        shutil.rmtree(alive, ignore_errors=True)
-        shutil.rmtree(nosuffix, ignore_errors=True)
-        shutil.rmtree(dead, ignore_errors=True)
+    # a pid that is certainly dead: a child that has already exited
+    child = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                           capture_output=True, text=True, check=True)
+    dead = tmp_path / f"spark_graft_scratch_{int(child.stdout)}"
+    own = tmp_path / f"spark_graft_scratch_{os.getpid()}"
+    other = tmp_path / "spark_graft_text_sf0.001_0123456789abcdef"
+    for d in (dead, own, other):
+        d.mkdir()
+        (d / "f").write_text("x")
+    # re-run first-use selection against tmp_path (no tmpfs) and restore
+    # this suite's scratch root afterwards
+    monkeypatch.setattr(pio, "_SCRATCH_BASE", None)
+    monkeypatch.setattr(pio.os, "access", lambda path, mode: False)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert pio._scratch_base() == str(own)
+    assert not dead.exists(), "dead-pid scratch dir not reaped"
+    assert (own / "f").exists(), "this process's scratch dir was reaped"
+    assert (other / "f").exists(), "non-scratch spark_graft_* dir was reaped"

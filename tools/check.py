@@ -10,7 +10,7 @@ deltas so the query/oracle pair can be fixed before the driver sees it.
 Usage:
     python tools/check.py                 # all O-tier queries at sf0.01
     python tools/check.py a1 a2 f3        # name prefixes
-    python tools/check.py --sf /root/testdata/sf0.001
+    python tools/check.py --sf <testdata>/sf0.001   # another scale factor
 """
 
 from __future__ import annotations
@@ -26,6 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import numpy as np
 import pandas as pd
+
+from google_analytics_dataframes_spark.registry import DRIVER_SF_DIR
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -79,7 +81,7 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("patterns", nargs="*", help="query name prefixes (default: all)")
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--sf", default=DRIVER_SF_DIR)
     ap.add_argument("--include-r", action="store_true", help="also run R-tier (rows-only)")
     ap.add_argument(
         "--exclude",

@@ -15,11 +15,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from google_analytics_dataframes_spark.registry import DRIVER_SF_DIR
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("patterns", nargs="*")
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--sf", default=DRIVER_SF_DIR)
     ap.add_argument("--full", action="store_true", help="print full formatted plan")
     args = ap.parse_args()
 

@@ -30,7 +30,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     from pyspark.sql import functions as F
 
-    from google_analytics_dataframes_spark.io import load_table
+    from google_analytics_dataframes_spark.io import (
+        DEFAULT_SF_DIR,
+        TESTDATA_DIR,
+        load_table,
+    )
     from google_analytics_dataframes_spark.registry import registry
     from google_analytics_dataframes_spark.session import get_spark
 
@@ -40,9 +44,9 @@ def main() -> int:
     spark = get_spark(app_name="l60_floor")
     spark.sparkContext.setLogLevel("ERROR")
     if "--synth" in sys.argv:
-        sf_dir = SPm.build_synth(spark, "/root/testdata/sf0.1")
+        sf_dir = SPm.build_synth(spark, os.path.join(TESTDATA_DIR, "sf0.1"))
     else:
-        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+        sf_dir = DEFAULT_SF_DIR
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     inc = docs.filter(F.length("source") == 5).select(

@@ -36,7 +36,9 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from google_analytics_dataframes_spark.io import DEFAULT_SF_DIR
+
+SF = DEFAULT_SF_DIR
 POW = np.array([1, 2, 4, 8])
 
 

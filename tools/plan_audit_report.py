@@ -44,7 +44,7 @@ queries; this table tracks the shuffle/join story.
 
 def main() -> None:
     from google_analytics_dataframes_spark.plans import audit
-    from google_analytics_dataframes_spark.registry import registry
+    from google_analytics_dataframes_spark.registry import DRIVER_SF_DIR, registry
     from google_analytics_dataframes_spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit-report")
@@ -59,7 +59,7 @@ def main() -> None:
     ]
     worst: list[tuple[int, str]] = []
     for name in sorted(reg):
-        df = reg[name].fn(spark, "/root/testdata/sf0.01")
+        df = reg[name].fn(spark, DRIVER_SF_DIR)
         ex = audit.count_exchanges(df)
         joins = ",".join(sorted(set(audit.join_algorithms(df)))) or "—"
         scans = audit.scan_info(df)

@@ -329,6 +329,7 @@ def main() -> None:
     q_filter = _flag("--queries")
     p_filter = _flag("--points")
 
+    from google_analytics_dataframes_spark.io import TESTDATA_DIR
     from google_analytics_dataframes_spark.registry import registry
     from google_analytics_dataframes_spark.session import get_spark
 
@@ -337,12 +338,13 @@ def main() -> None:
     reg = registry()
 
     points: list[tuple[str, float, str]] = [
-        ("sf0.001", 0.001, "/root/testdata/sf0.001"),
-        ("sf0.01", 0.01, "/root/testdata/sf0.01"),
-        ("sf0.1", 0.1, "/root/testdata/sf0.1"),
+        (tag, sf, os.path.join(TESTDATA_DIR, tag))
+        for tag, sf in (("sf0.001", 0.001), ("sf0.01", 0.01), ("sf0.1", 0.1))
     ]
     if not skip_synth:
-        points.append(("synth-sf1", 1.0, build_synth(spark, "/root/testdata/sf0.1")))
+        points.append(
+            ("synth-sf1", 1.0, build_synth(spark, os.path.join(TESTDATA_DIR, "sf0.1")))
+        )
     if p_filter:
         keep = p_filter.split(",")
         points = [p for p in points if p[0] in keep]
