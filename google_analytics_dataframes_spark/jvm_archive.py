@@ -1,0 +1,263 @@
+"""Class-data-sharing archive for the driver JVM that :func:`session.get_spark`
+launches.
+
+About nine tenths of a cold driver start (gateway launch, SparkContext,
+SparkSession, the first action) is the JVM loading, verifying and
+interpreting Spark's classes, not this engine's code.  A JDK 17 dynamic
+AppCDS archive stores those classes already parsed and verified, and a later
+JVM maps it instead of redoing that work: it is a cache of JVM classes, as
+``__pycache__`` is of Python bytecode.
+
+The archive holds the classes a driver loads through start-up plus one noop
+action.  It lives in the per-user cache
+``${XDG_CACHE_HOME:-~/.cache}/spark_graft/`` (not the temp dir, which each
+benchmark set-up gets fresh):
+
+* ``driver-<key>.jsa`` — a published archive.  The key hashes ``java.home``,
+  the JDK's module image and JVM library, and every jar under
+  ``$SPARK_HOME/jars`` (path, size, mtime), so a JDK or Spark upgrade builds
+  a new archive, and publishing it sweeps the old one.
+* ``driver-<key>.jsa.<uuid>.part`` — a build in flight.
+* ``driver-<key>.failed`` — a build for this key failed (its stderr tail is
+  inside); later starts skip the archive instead of paying for the build
+  again.
+* ``conf/`` — an empty directory, the SPARK_CONF_DIR of archived launches.
+
+Delete the directory to start over.
+
+Only launches whose classpath is the conf dir plus ``$SPARK_HOME/jars`` use
+an archive, and only when the effective conf dir holds nothing but
+``*.template`` files, which Spark never reads.  JDK 17 refuses to dump or map
+an archive with a non-empty directory on the classpath, so those launches
+point SPARK_CONF_DIR at the empty ``conf/``.  Every other launch starts
+exactly as it would without this module.
+
+On a miss a child Python process starts Spark with
+``-XX:ArchiveClassesAtExit`` on a unique ``.part`` path, runs the noop
+action, stops, waits for its JVM to exit (the JVM writes the archive on its
+way out) and checks that a fresh JVM maps the part with ``-Xshare:on
+-XX:+VerifySharedSpaces``.  Only then does the parent publish it, with one
+atomic ``os.replace`` (the pattern of ``io.staged_dir``): a truncated archive
+with an intact header crashes the JVM with SIGBUS even under
+VerifySharedSpaces, so a partial file must never sit at the final path.
+Concurrent misses each build their own part and the last rename wins.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import hashlib
+import os
+import shutil
+import subprocess
+import sys
+import tempfile
+import time
+import uuid
+import warnings
+
+#: JVM unified logging to stderr, warnings kept.  The archive dump warns once
+#: per class it skips (signed jars, pre-JDK-6 class files) and a rejected
+#: archive warns at start, by default on stdout, which callers such as the
+#: benchmark's set-up child parse.
+LOG_OPTIONS = "-Xlog:disable -Xlog:all=warning:stderr"
+
+#: Environment the launcher turns into classpath entries beyond the conf dir
+#: and ``$SPARK_HOME/jars``; a launch with any of them set starts as today.
+_CLASSPATH_ENV = (
+    "SPARK_DIST_CLASSPATH",
+    "HADOOP_CONF_DIR",
+    "YARN_CONF_DIR",
+    "SPARK_PREPEND_CLASSES",
+    "SPARK_TESTING",
+)
+
+#: Seconds a build may take: a cold start, one action, the dump and the
+#: check.  A ``.part`` file older than this belongs to no live builder.
+BUILD_TIMEOUT_S = 90
+
+_CHILD = (
+    "import sys\n"
+    "from google_analytics_dataframes_spark import jvm_archive\n"
+    "jvm_archive._build_child(sys.argv[1])\n"
+)
+
+
+def archive_path() -> str | None:
+    """The archive for the driver JVM the next launch would start, or None
+    when that launch must start as today: extra classpath entries, a conf
+    dir with real files in it, or no JDK or Spark jars to key on."""
+    if any(os.environ.get(v) for v in _CLASSPATH_ENV):
+        return None
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    if "--driver-class-path" in submit or "extraClassPath" in submit:
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        if any(not n.endswith(".template") for n in os.listdir(conf)):
+            return None
+    except FileNotFoundError:
+        pass
+    # the launcher runs $JAVA_HOME/bin/java, else the java on PATH
+    java = os.environ.get("JAVA_HOME")
+    java = os.path.join(java, "bin", "java") if java else shutil.which("java")
+    if not java:
+        return None
+    java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    key = hashlib.sha256(java_home.encode())
+    try:
+        files = [
+            os.path.join(java_home, "lib", "modules"),
+            os.path.join(java_home, "lib", "server", "libjvm.so"),
+        ]
+        files += sorted(e.path for e in os.scandir(os.path.join(spark_home, "jars")))
+        for f in files:
+            st = os.stat(f)
+            key.update(f"{f}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
+    except OSError:
+        return None
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(cache, "spark_graft", f"driver-{key.hexdigest()[:20]}.jsa")
+
+
+@contextlib.contextmanager
+def driver_java_options():
+    """Wrap the launch of the driver JVM (the builder's ``getOrCreate``).
+
+    Yields the JVM options that map this launch's archive, after building
+    and publishing it on a miss, with SPARK_CONF_DIR pointed at the empty
+    conf dir until the block exits.  Yields None and changes nothing when no
+    JVM will be launched (a live gateway, or a driver that spark-submit
+    started), when the launch does not qualify, or when the archive cannot
+    be had: a failure here never fails the launch."""
+    from pyspark import SparkContext
+
+    archive = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        try:
+            archive = archive_path()
+            if archive is not None:
+                conf = os.path.join(os.path.dirname(archive), "conf")
+                os.makedirs(conf, exist_ok=True)
+                if not (os.path.exists(archive) or _build(archive, conf)):
+                    archive = None
+        except OSError as e:  # an unreadable conf dir, an unwritable cache
+            warnings.warn(f"JVM class archive unavailable, starting without it: {e}")
+            archive = None
+    if archive is None:
+        yield None
+        return
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf
+    try:
+        yield f"{LOG_OPTIONS} -XX:SharedArchiveFile={archive} -XX:+VerifySharedSpaces"
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+
+
+def _build(archive: str, conf: str) -> bool:
+    """Build ``archive`` in a child process and publish it; False, with a
+    warning, when the build fails.  A failure the child reports leaves the
+    ``.failed`` marker; a killed or timed-out child leaves nothing and the
+    next start tries again."""
+    failed = archive[: -len(".jsa")] + ".failed"
+    if os.path.exists(failed):
+        return False
+    part = f"{archive}.{uuid.uuid4().hex}.part"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_CONF_DIR=conf)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    # the child's stderr goes to a file, not a pipe: a JVM orphaned by a
+    # killed child would hold a pipe open until it exits
+    with tempfile.TemporaryFile("w+", errors="replace") as log:
+        try:
+            child = subprocess.run(
+                [sys.executable, "-c", _CHILD, part],
+                env=env,
+                stdin=subprocess.DEVNULL,
+                stdout=subprocess.DEVNULL,
+                stderr=log,
+                timeout=BUILD_TIMEOUT_S,
+            )
+        except subprocess.TimeoutExpired:
+            child = None
+        if child is not None and child.returncode == 0:
+            os.replace(part, archive)
+            _sweep(archive)
+            return True
+        if child is None:
+            reason = f"timed out after {BUILD_TIMEOUT_S} s"
+        elif child.returncode < 0:
+            reason = f"killed by signal {-child.returncode}"
+        else:
+            log.seek(0)
+            with open(failed, "w") as f:
+                f.write(log.read()[-4000:])
+            reason = f"exit status {child.returncode}, see {failed}"
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(part)
+    warnings.warn(f"JVM class archive build failed ({reason}); starting without it")
+    return False
+
+
+def _sweep(keep: str) -> None:
+    """Remove other keys' archives and markers, and parts no live builder
+    owns.  Another process's in-flight part is younger than the build
+    timeout and stays.  A JVM that has an old archive mapped keeps its
+    mapping after the unlink."""
+    now = time.time()
+    for e in os.scandir(os.path.dirname(keep)):
+        if not e.name.startswith("driver-") or e.path == keep:
+            continue
+        with contextlib.suppress(OSError):
+            if e.name.endswith(".part") and now - e.stat().st_mtime < BUILD_TIMEOUT_S:
+                continue
+            os.unlink(e.path)
+
+
+def _build_child(part: str) -> None:
+    """Entry point of the build child: one driver start with the dump
+    armed, one noop action, stop, then wait for the JVM to exit.  Exits 0
+    only when the JVM exited cleanly and a fresh JVM maps the part."""
+    from pyspark import SparkContext
+
+    from google_analytics_dataframes_spark import session
+
+    spark = (
+        session._builder()
+        .config(
+            "spark.driver.defaultJavaOptions",
+            f"{LOG_OPTIONS} -XX:ArchiveClassesAtExit={part}",
+        )
+        .getOrCreate()
+    )
+    session.configure(spark)
+    spark.range(1).write.format("noop").mode("overwrite").save()
+    system = spark._jvm.java.lang.System
+    java = os.path.join(system.getProperty("java.home"), "bin", "java")
+    classpath = system.getProperty("java.class.path")
+    spark.stop()
+    jvm = SparkContext._gateway.proc
+    jvm.stdin.close()  # the gateway exits on EOF
+    status = jvm.wait(BUILD_TIMEOUT_S)
+    if status < 0:  # killed: die of the same signal, so the next start retries
+        os.kill(os.getpid(), -status)
+    if status != 0:
+        sys.exit(f"driver JVM exited with status {status} while writing {part}")
+    check = subprocess.run(
+        [java, "-Xshare:on", f"-XX:SharedArchiveFile={part}",
+         "-XX:+VerifySharedSpaces", f"-XX:ErrorFile={part}.crash.log",
+         "-cp", classpath, "-version"],
+        capture_output=True,
+        text=True,
+        errors="replace",
+        timeout=BUILD_TIMEOUT_S,
+    )
+    if check.returncode != 0:
+        sys.exit(f"a fresh JVM rejects {part}: {check.stdout[-2000:]}{check.stderr[-2000:]}")

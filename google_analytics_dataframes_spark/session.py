@@ -2,7 +2,9 @@
 
 Three entry points:
 
-* :func:`get_spark` — build a session for our own tests/bench (local[N]).
+* :func:`get_spark` — build a session for our own tests/bench (local[N]);
+  the driver JVM it launches maps a class-data-sharing archive of Spark's
+  start-up classes (:mod:`google_analytics_dataframes_spark.jvm_archive`).
 * :func:`configure` — idempotently apply the *runtime* confs any session
   needs for deterministic, DuckDB-hash-matching results.  The driver passes
   us its own SparkSession, so every query path calls ``configure(spark)``
@@ -25,6 +27,8 @@ import os
 import weakref
 
 from pyspark.sql import SparkSession
+
+from google_analytics_dataframes_spark import jvm_archive
 
 #: Runtime (session-level) confs — settable on a live session.
 RUNTIME_CONFS: dict[str, str] = {
@@ -83,25 +87,19 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(
+def _builder(
     app_name: str = "google-analytics-dataframes-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's static confs.
-
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
-    ``shuffle_partitions`` defaults to the core count — at sf<=0.1 AQE
-    coalesces tiny post-shuffle partitions anyway; on a real cluster this is
-    sized so a shuffle partition fits executor memory (SURVEY.md §4.2).
-    """
+) -> SparkSession.Builder:
+    """A fresh builder carrying the engine's static confs (see :func:`get_spark`)."""
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -121,5 +119,30 @@ def get_spark(
         # issuing many distinct plans set this low.
         .config("spark.cleaner.periodicGC.interval", "1min")
     )
-    spark = builder.getOrCreate()
+
+
+def get_spark(
+    app_name: str = "google-analytics-dataframes-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+) -> SparkSession:
+    """Build (or reuse) a SparkSession with the engine's static confs.
+
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
+    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_SHUFFLE`` or 32 — at
+    sf<=0.1 AQE coalesces tiny post-shuffle partitions anyway; on a real
+    cluster this is sized so a shuffle partition fits executor memory
+    (SURVEY.md §4.2).
+
+    When this call launches the driver JVM, the JVM maps a class-data-sharing
+    archive of Spark's start-up classes, built on the first such launch
+    (:mod:`google_analytics_dataframes_spark.jvm_archive`).  A call that
+    reuses a live SparkContext does no archive work.
+    """
+    b = _builder(app_name, master, shuffle_partitions)
+    with jvm_archive.driver_java_options() as java_options:
+        if java_options:
+            # prepended to the caller's --driver-java-options, not replacing them
+            b = b.config("spark.driver.defaultJavaOptions", java_options)
+        spark = b.getOrCreate()
     return configure(spark)

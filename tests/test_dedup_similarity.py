@@ -426,6 +426,55 @@ def test_cross_bitmask_broadcast_guard_falls_back(spark):
     assert got == want and want
 
 
+@pytest.mark.parametrize(
+    "prefix_min_items,fallback", [(0, "_cross_prefix"), (2_000_000, "_cross_index")]
+)
+def test_cross_mid_regime_fallback_matches_bitmask(
+    spark, monkeypatch, prefix_min_items, fallback
+):
+    """l7b's between-regimes corner on the probe path (no stats): the
+    vocabulary fits the bitmask regime (<= 4096 grams) but the incoming
+    mask table exceeds the broadcast cap, so the router must fall back to
+    candidate generation, which runs without the probe's persists.  With
+    the cap lowered until a small corpus crosses it, each fallback must
+    emit exactly the pair set of the bitmask path (and of a direct
+    computation)."""
+    import itertools
+
+    rng = np.random.default_rng(11)
+    pool = [f"g{i}" for i in range(150)]
+    docs = {d: set(rng.choice(pool, size=rng.integers(6, 16), replace=False)) for d in range(20)}
+    for d in range(20, 50):  # near-copies of incoming docs, 1-4 grams swapped
+        src = sorted(docs[int(rng.integers(0, 20))])
+        drop = set(rng.choice(src, size=rng.integers(1, 5), replace=False))
+        docs[d] = (set(src) - drop) | set(rng.choice(pool, size=len(drop), replace=False))
+    pdf = pd.DataFrame([(d, it) for d, s in docs.items() for it in sorted(s)], columns=["doc_id", "item"])
+    inc = spark.createDataFrame(pdf[pdf.doc_id < 20])
+    ex = spark.createDataFrame(pdf[pdf.doc_id >= 20])
+
+    called = []
+    for name in ("_cross_bitmask", "_cross_prefix", "_cross_index"):
+        fn = getattr(D, name)
+        monkeypatch.setattr(
+            D, name, lambda *a, _fn=fn, _name=name: called.append(_name) or _fn(*a)
+        )
+    key = lambda r: (r.doc_in, r.doc_ex, r.inter, r.uni)
+    bitmask = {key(r) for r in D.jaccard_pairs_cross(inc, ex, 50, prefix_min_items=prefix_min_items).collect()}
+    assert called == ["_cross_bitmask"]
+
+    # 20 incoming docs x (3 mask words x 8 B + 48 B) = 1440 B of mask table
+    monkeypatch.setattr(D, "_BITMASK_BROADCAST_CAP", 1000)
+    got = {key(r) for r in D.jaccard_pairs_cross(inc, ex, 50, prefix_min_items=prefix_min_items).collect()}
+    assert called == ["_cross_bitmask", fallback]
+
+    want = set()
+    for a, b in itertools.product(range(20), range(20, 50)):
+        inter, uni = len(docs[a] & docs[b]), len(docs[a] | docs[b])
+        if 100 * inter >= 50 * uni:
+            want.add((a, b, inter, uni))
+    assert got == bitmask == want and len(want) >= 10
+
+
 def test_exact_substr_spans_finds_planted_passage(spark):
     """l61 (ExactSubstr, Lee et al. 2022): two otherwise-unrelated docs
     sharing one verbatim 60-char passage must pair with max_run == 60 and

@@ -1,0 +1,278 @@
+"""The driver JVM's class-data-sharing archive (jvm_archive).
+
+The archive is a cache: it may change how fast the driver starts, never
+what the driver does.  These tests pin that.  The archive is built and
+published atomically, and a build killed half way leaves nothing at the
+final path.  A hit keeps the caller's own JVM options and the answers.  A
+rejected archive falls back to a plain start, with the JVM's warning on
+stderr, not stdout.  A conf dir with real files starts exactly as before.
+A session that reuses a live SparkContext never touches the archive.
+Subprocess drivers get ``XDG_CACHE_HOME`` under ``tmp_path``, so the user's
+cache is never read or written.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+import subprocess
+import sys
+import textwrap
+import time
+from pathlib import Path
+
+import pytest
+
+from google_analytics_dataframes_spark import jvm_archive, session
+from tests.conftest import SF_DIR, small_env
+
+REPO = Path(__file__).resolve().parent.parent
+
+# One driver start; prints exactly one line: the JVM's input arguments,
+# the archives it has mapped and an answer read through load_table.
+_DRIVER = textwrap.dedent(
+    """
+    import json, sys
+    from google_analytics_dataframes_spark import session
+    from google_analytics_dataframes_spark.io import load_table
+
+    spark = session.get_spark(app_name="archive")
+    lang = spark._jvm.java.lang
+    pid = int(lang.ProcessHandle.current().pid())
+    args = list(lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    with open(f"/proc/{pid}/maps") as f:
+        mapped = sorted({l.split()[-1] for l in f if "spark_graft" in l})
+    ev = load_table(spark, sys.argv[1], "events")
+    answer = [list(r) for r in ev.groupBy("event_type").count().orderBy("event_type").collect()]
+    print(json.dumps({
+        "args": args,
+        "mapped": mapped,
+        "answer": answer,
+        "probe": spark.sparkContext.getConf().get("spark.graft.probe", None),
+    }))
+    """
+)
+
+
+def _driver(cache: Path, **env: str) -> subprocess.Popen:
+    return subprocess.Popen(
+        [sys.executable, "-c", _DRIVER, SF_DIR],
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
+        text=True,
+        env=small_env(XDG_CACHE_HOME=str(cache), **env),
+        cwd=REPO,
+    )
+
+
+def _result(p: subprocess.Popen) -> tuple[dict, str]:
+    """The driver's one stdout line, parsed, and its stderr; fails unless
+    the driver exited 0 and printed nothing else on stdout."""
+    out, err = p.communicate(timeout=300)
+    lines = out.splitlines()
+    assert p.returncode == 0 and len(lines) == 1, (out[-2000:], err[-3000:])
+    return json.loads(lines[0]), err
+
+
+def _pids(needle: bytes) -> list[int]:
+    """Live processes whose NUL-separated command line contains ``needle``."""
+    pids = []
+    for d in os.listdir("/proc"):
+        if d.isdigit():
+            try:
+                with open(f"/proc/{d}/cmdline", "rb") as f:
+                    if needle in f.read():
+                        pids.append(int(d))
+            except OSError:
+                pass
+    return pids
+
+
+def _wait_for(pred, timeout: float, what: str):
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        got = pred()
+        if got:
+            return got
+        time.sleep(0.05)
+    raise AssertionError(f"timed out waiting for {what}")
+
+
+def _archives(root: Path) -> list[Path]:
+    return sorted((root / "spark_graft").glob("driver-*.jsa"))
+
+
+def test_archive_lifecycle(tmp_path):
+    """Killed build, then build, hit, and a corrupted archive, on one cache.
+
+    1. The first start's build child is killed while its JVM runs: nothing
+       reaches the final path, no failure is remembered, and the start
+       falls back to a plain JVM.
+    2. The next start builds, publishes and maps the archive, and prints
+       only its own line on stdout (the dump's JVM warnings go elsewhere).
+    3. A hit keeps ``-Dgraft.probe=1`` from ``--driver-java-options`` and
+       the JVM really maps the file.
+    4. A bit-flipped archive is rejected by VerifySharedSpaces: the start
+       still works, and the JVM's warning lands on stderr, not stdout.
+    All four answer the same."""
+    cache = tmp_path / "cache"
+    store = cache / "spark_graft"
+
+    first = _driver(cache)
+    try:
+        dump_jvm = _wait_for(
+            lambda: _pids(b"\0-XX:ArchiveClassesAtExit=" + str(store).encode()),
+            120, "the build child's JVM",
+        )[0]
+        child = [p for p in _pids(b"_build_child") if p in _pids(str(store).encode())]
+        assert len(child) == 1, child
+        os.kill(child[0], 9)
+        plain, err = _result(first)
+    finally:
+        first.kill()
+    # the orphaned JVM exits on its stdin's EOF and may still write its part
+    _wait_for(lambda: not os.path.exists(f"/proc/{dump_jvm}"), 120, "the orphaned JVM")
+    assert "archive build failed" in err
+    assert not any("SharedArchiveFile" in a for a in plain["args"])
+    assert _archives(cache) == [] and not list(store.glob("*.failed"))
+
+    built, _ = _result(_driver(cache))
+    [archive] = _archives(cache)
+    assert f"-XX:SharedArchiveFile={archive}" in built["args"]
+    assert built["mapped"] == [str(archive)]
+    assert built["answer"] == plain["answer"]
+
+    hit, _ = _result(
+        _driver(
+            cache,
+            PYSPARK_SUBMIT_ARGS="--driver-java-options '-Dgraft.probe=1' pyspark-shell",
+        )
+    )
+    assert "-Dgraft.probe=1" in hit["args"]
+    assert f"-XX:SharedArchiveFile={archive}" in hit["args"]
+    assert hit["mapped"] == [str(archive)]
+    assert hit["answer"] == plain["answer"]
+
+    archive.chmod(0o644)
+    with open(archive, "r+b") as f:
+        f.seek(archive.stat().st_size // 3)
+        b = f.read(1)
+        f.seek(-1, os.SEEK_CUR)
+        f.write(bytes([b[0] ^ 0xFF]))
+    rejected, err = _result(_driver(cache))
+    assert rejected["mapped"] == [] and "failed to load" in err
+    assert rejected["answer"] == plain["answer"]
+    shutil.rmtree(cache)  # ~160 MB that pytest would keep with its temp dirs
+
+
+def test_spark_defaults_conf_is_honoured_without_archive(tmp_path):
+    """A conf dir holding a real spark-defaults.conf is read as before, and
+    the launch neither builds nor maps an archive."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.graft.probe  from-defaults\n")
+    cache = tmp_path / "cache"
+    got, _ = _result(_driver(cache, SPARK_CONF_DIR=str(conf)))
+    assert got["probe"] == "from-defaults"
+    assert not any("SharedArchiveFile" in a for a in got["args"])
+    assert got["mapped"] == [] and not cache.exists()
+
+
+def test_only_plain_classpath_launches_qualify(tmp_path, monkeypatch):
+    """The archive is keyed only when the launch classpath is a
+    templates-only conf dir plus $SPARK_HOME/jars."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-env.sh.template").write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    path = jvm_archive.archive_path()
+    assert path and path.startswith(str(tmp_path / "spark_graft" / "driver-"))
+    (conf / "log4j2.properties").write_text("")
+    assert jvm_archive.archive_path() is None
+    (conf / "log4j2.properties").unlink()
+    monkeypatch.setenv("HADOOP_CONF_DIR", str(tmp_path))
+    assert jvm_archive.archive_path() is None
+
+
+def test_reused_context_does_no_archive_work(spark, monkeypatch):
+    """getOrCreate on a live SparkContext launches no JVM, so the factory
+    must not key, build or map an archive."""
+
+    def boom(*a, **k):
+        raise AssertionError("archive work on a reused context")
+
+    monkeypatch.setattr(jvm_archive, "archive_path", boom)
+    monkeypatch.setattr(jvm_archive, "_build", boom)
+    assert session.get_spark(app_name="tests", master="local[4]", shuffle_partitions=4) is spark
+
+
+def test_launch_options_scope_the_conf_dir_and_never_raise(tmp_path, monkeypatch):
+    """On a hit the options name the archive and SPARK_CONF_DIR points at
+    the empty conf dir only inside the block; an unwritable cache warns
+    and yields None instead of failing the launch."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)  # as before a JVM exists
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    archive = Path(jvm_archive.archive_path())
+    archive.parent.mkdir()
+    archive.write_bytes(b"")
+    with jvm_archive.driver_java_options() as opts:
+        assert f"-XX:SharedArchiveFile={archive}" in opts
+        assert os.environ["SPARK_CONF_DIR"] == str(archive.parent / "conf")
+    assert "SPARK_CONF_DIR" not in os.environ
+
+    (tmp_path / "file").write_text("")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "file"))
+    with pytest.warns(UserWarning, match="unavailable"):
+        with jvm_archive.driver_java_options() as opts:
+            assert opts is None and "SPARK_CONF_DIR" not in os.environ
+
+
+def test_failed_build_is_remembered(tmp_path, monkeypatch):
+    """A build the child reports as failed leaves no part, warns, and
+    writes the marker that stops later starts from paying for it again."""
+    store = tmp_path / "spark_graft"
+    archive = str(store / "driver-k.jsa")
+    store.mkdir()
+    monkeypatch.setattr(jvm_archive, "_CHILD", "import sys; sys.exit('no archive here')")
+    with pytest.warns(UserWarning, match="build failed"):
+        assert not jvm_archive._build(archive, str(store / "conf"))
+    assert sorted(p.name for p in store.iterdir()) == ["driver-k.failed"]
+    assert "no archive here" in (store / "driver-k.failed").read_text()
+
+    def boom(*a, **k):
+        raise AssertionError("rebuilt after a remembered failure")
+
+    monkeypatch.setattr(jvm_archive.subprocess, "run", boom)
+    assert not jvm_archive._build(archive, str(store / "conf"))
+
+
+def test_sweep_keeps_only_the_new_archive_and_live_parts(tmp_path):
+    """Publishing a key removes other keys' archives and markers and dead
+    builders' parts; another process's in-flight part and files that are
+    not archives stay."""
+    keep = tmp_path / "driver-new.jsa"
+    names = [
+        "driver-new.jsa",
+        "driver-old.jsa",
+        "driver-old.failed",
+        "driver-new.jsa.aaa.part",  # in flight
+        "driver-old.jsa.bbb.part",  # dead builder
+        "notes.txt",
+    ]
+    for n in names:
+        (tmp_path / n).write_text("x")
+    (tmp_path / "conf").mkdir()
+    stale = time.time() - 2 * jvm_archive.BUILD_TIMEOUT_S
+    os.utime(tmp_path / "driver-old.jsa.bbb.part", (stale, stale))
+    jvm_archive._sweep(str(keep))
+    assert sorted(p.name for p in tmp_path.iterdir()) == [
+        "conf",
+        "driver-new.jsa",
+        "driver-new.jsa.aaa.part",
+        "notes.txt",
+    ]

@@ -11,7 +11,6 @@ at once do not clobber each other.
 
 from __future__ import annotations
 
-import os
 import subprocess
 import sys
 import textwrap
@@ -19,19 +18,9 @@ from pathlib import Path
 
 from google_analytics_dataframes_spark.io import load_table, load_tables
 from google_analytics_dataframes_spark.session import RUNTIME_CONFS
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, small_env
 
 REPO = Path(__file__).resolve().parent.parent
-
-
-def _small_env(**extra: str) -> dict:
-    """Environment for a child Spark driver: two cores, a small heap."""
-    env = dict(os.environ)
-    env.update(
-        SPARK_GRAFT_CPUS="2", SPARK_GRAFT_SHUFFLE="4", SPARK_GRAFT_DRIVER_MEM="1g"
-    )
-    env.update(extra)
-    return env
 
 
 def test_new_session_gets_its_own_confs_and_views(spark):
@@ -85,7 +74,7 @@ def test_memos_forget_a_stopped_application(tmp_path):
         capture_output=True,
         text=True,
         timeout=300,
-        env=_small_env(TMPDIR=str(tmp_path)),
+        env=small_env(TMPDIR=str(tmp_path)),
         cwd=REPO,
     )
     assert "RESTART-OK" in r.stdout, (r.stdout[-2000:], r.stderr[-2000:])
@@ -113,7 +102,7 @@ def test_concurrent_staging_does_not_clobber(tmp_path):
         runpy.run_path("tools/check.py", run_name="__main__")
         """
     )
-    env = _small_env(TMPDIR=str(tmp_path))
+    env = small_env(TMPDIR=str(tmp_path))
     procs = [
         subprocess.Popen(
             [sys.executable, "-c", script, str(barrier), SF_DIR],
