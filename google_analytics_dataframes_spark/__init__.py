@@ -16,7 +16,8 @@ re-expressed Spark-first:
 
 Public surface:
     from google_analytics_dataframes_spark import session, io, report
-    from google_analytics_dataframes_spark.queries import REGISTRY
+    from google_analytics_dataframes_spark.registry import registry
+    registry()  # query name -> Query, in canonical registration order
 """
 
 from google_analytics_dataframes_spark.session import configure, get_spark

@@ -123,6 +123,14 @@ def archive_path() -> str | None:
     return os.path.join(cache, "spark_graft", f"driver-{key.hexdigest()[:20]}.jsa")
 
 
+def launches_jvm() -> bool:
+    """True when the next SparkContext start launches the driver JVM: no
+    live gateway, and no driver that spark-submit started."""
+    from pyspark import SparkContext
+
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
 @contextlib.contextmanager
 def driver_java_options():
     """Wrap the launch of the driver JVM (the builder's ``getOrCreate``).
@@ -133,10 +141,8 @@ def driver_java_options():
     JVM will be launched (a live gateway, or a driver that spark-submit
     started), when the launch does not qualify, or when the archive cannot
     be had: a failure here never fails the launch."""
-    from pyspark import SparkContext
-
     archive = None
-    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+    if launches_jvm():
         try:
             archive = archive_path()
             if archive is not None:

@@ -908,7 +908,8 @@ def l60_incremental_neardup(spark, sf_dir):
     Dense-vocab corner, CORRECTED in round 6 (VERDICT r5 item #6): the
     rounds-4/5 story — "the ~449 s at synth-sf1 is the cost of emitting a
     Θ(|batch| x |corpus|) answer" — was FALSIFIED by measurement
-    (tools/l60_floor_probe.py): enumerating all 625M cross pairs through
+    (`git show aa27f3b:tools/l60_floor_probe.py`): enumerating all 625M
+    cross pairs through
     the same sink costs 9.4 s, and the true qualifying output is 4.26M
     pairs (0.7% of batch x corpus), so nothing about the answer forced
     hundreds of seconds.  The real cost was Catalyst's CollapseProject

@@ -4,7 +4,9 @@ Three entry points:
 
 * :func:`get_spark` — build a session for our own tests/bench (local[N]);
   the driver JVM it launches maps a class-data-sharing archive of Spark's
-  start-up classes (:mod:`google_analytics_dataframes_spark.jvm_archive`).
+  start-up classes (:mod:`google_analytics_dataframes_spark.jvm_archive`),
+  and a second thread initialises the session extensions while the
+  SparkContext starts.
 * :func:`configure` — idempotently apply the *runtime* confs any session
   needs for deterministic, DuckDB-hash-matching results.  The driver passes
   us its own SparkSession, so every query path calls ``configure(spark)``
@@ -24,8 +26,11 @@ Determinism rules (SURVEY.md §5.2 item 4):
 from __future__ import annotations
 
 import os
+import threading
+import warnings
 import weakref
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 from google_analytics_dataframes_spark import jvm_archive
@@ -87,25 +92,25 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def _builder(
+def _static_confs(
     app_name: str = "google-analytics-dataframes-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-) -> SparkSession.Builder:
-    """A fresh builder carrying the engine's static confs (see :func:`get_spark`)."""
+) -> dict[str, str]:
+    """The engine's static confs (see :func:`get_spark`), as SparkConf keys."""
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
-    return (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    return {
+        "spark.app.name": app_name,
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # Long-lived-session hygiene (round 13): ContextCleaner reclaims
         # unreferenced persisted blocks / broadcasts only after a JVM GC
         # processes their weak references, and a suite that never fills
@@ -117,8 +122,70 @@ def _builder(
         # heap is a few hundred ms — noise next to the eviction churn it
         # prevents.  Same posture on a real cluster: long-lived drivers
         # issuing many distinct plans set this low.
-        .config("spark.cleaner.periodicGC.interval", "1min")
-    )
+        "spark.cleaner.periodicGC.interval": "1min",
+    }
+
+
+def _builder(
+    app_name: str = "google-analytics-dataframes-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+) -> SparkSession.Builder:
+    """A fresh builder carrying the engine's static confs (see :func:`get_spark`)."""
+    return SparkSession.builder.config(map=_static_confs(app_name, master, shuffle_partitions))
+
+
+#: Name of the thread that initialises the session extensions during a launch.
+WARM_UP_THREAD = "spark-extensions-warm-up"
+
+
+def _warm_extensions(jvm) -> None:
+    """Load each ``SparkSessionExtensionsProvider`` on the classpath through
+    ``java.util.ServiceLoader`` and apply it to a throwaway
+    ``SparkSessionExtensions``: what the SparkSession constructor does, so
+    the providers' static initialisers (spark-mllib's builds Scala's
+    runtime-reflection universe and encoders) run on the calling thread's
+    JVM thread instead of the constructor's."""
+    provider = jvm.org.apache.spark.sql.SparkSessionExtensionsProvider._java_lang_class
+    providers = jvm.java.util.ServiceLoader.load(provider, provider.getClassLoader()).iterator()
+    extensions = jvm.org.apache.spark.sql.SparkSessionExtensions()
+    while providers.hasNext():
+        providers.next().apply(extensions)
+
+
+def _start_context(confs: dict[str, str]) -> None:
+    """Launch the driver JVM and start its SparkContext with ``confs``
+    while a daemon thread runs :func:`_warm_extensions` as soon as the
+    gateway is up; return only after that thread has ended, also when the
+    start raises.  A failed warm-up warns and is otherwise ignored."""
+    stop = threading.Event()
+    failed: list[Exception] = []
+
+    def warm_up() -> None:
+        try:
+            # py4j's input converters import this module, and pandas with
+            # it (~0.5 s), on the first call that has arguments; import it
+            # while the JVM launches, not on both threads once it is up
+            import pyspark.testing.utils  # noqa: F401
+
+            while SparkContext._jvm is None and not stop.is_set():
+                stop.wait(0.01)
+            if not stop.is_set():  # else the start is over: it raised, or was quicker
+                _warm_extensions(SparkContext._jvm)
+        except Exception as e:
+            failed.append(e)
+
+    thread = threading.Thread(target=warm_up, name=WARM_UP_THREAD, daemon=True)
+    thread.start()
+    try:
+        SparkContext.getOrCreate(SparkConf().setAll(list(confs.items())))
+    finally:
+        stop.set()
+        thread.join()
+    if failed:
+        warnings.warn(
+            f"session extension warm-up failed, the SparkSession start does it instead: {failed[0]}"
+        )
 
 
 def get_spark(
@@ -136,13 +203,34 @@ def get_spark(
 
     When this call launches the driver JVM, the JVM maps a class-data-sharing
     archive of Spark's start-up classes, built on the first such launch
-    (:mod:`google_analytics_dataframes_spark.jvm_archive`).  A call that
-    reuses a live SparkContext does no archive work.
+    (:mod:`google_analytics_dataframes_spark.jvm_archive`), and the start is
+    split in two so that its costliest serial step overlaps another:
+
+    1. While the main thread creates the SparkContext, a daemon thread
+       imports what py4j's input converters import on their first call
+       (pandas among it), waits for the py4j gateway and then, on its own
+       JVM thread, initialises the session extensions the SparkSession
+       constructor would otherwise initialise on the critical path
+       (:func:`_warm_extensions`).
+    2. The main thread joins that thread, and only then builds the
+       SparkSession over the live context.  The join is what keeps this
+       safe: the extensions initialise SQL-layer Scala objects whose static
+       initialisers depend on each other (``StaticSQLConf$`` calls into
+       ``SQLConf$``), and two JVM threads initialising such a cycle at once
+       deadlock for good.  During the warm-up the main thread touches only
+       core classes.
+
+    A failed warm-up warns and the constructor does the work itself; the
+    thread never outlives the call, also when the start raises.  A call
+    that reuses a live SparkContext does no archive work and starts no
+    thread.
     """
-    b = _builder(app_name, master, shuffle_partitions)
+    confs = _static_confs(app_name, master, shuffle_partitions)
     with jvm_archive.driver_java_options() as java_options:
         if java_options:
             # prepended to the caller's --driver-java-options, not replacing them
-            b = b.config("spark.driver.defaultJavaOptions", java_options)
-        spark = b.getOrCreate()
+            confs["spark.driver.defaultJavaOptions"] = java_options
+        if jvm_archive.launches_jvm():
+            _start_context(confs)
+        spark = SparkSession.builder.config(map=confs).getOrCreate()
     return configure(spark)

@@ -270,7 +270,7 @@ def test_connected_components_path_and_singleton(spark):
     assert 99 not in cc.index  # only nodes that appear in edges
 
 
-def test_jaccard_incomplete_supplied_vocab_raises(spark):
+def test_jaccard_incomplete_supplied_vocab_raises(spark, tmp_path):
     """ADVICE r4: a caller-supplied stats['vocab'] missing any item must
     raise, not dictionary-encode to vid -1 (whose shiftleft silently sets
     bit 63 of word 0 — phantom intersections)."""
@@ -296,6 +296,13 @@ def test_jaccard_incomplete_supplied_vocab_raises(spark):
     )
     with pytest.raises(Exception, match="vocab"):
         cross_bad.collect()
+    # a write is an action too: neither form may finish a noop or parquet
+    # write silently with the uncovered vocab
+    for name, df in (("within", bad), ("cross", cross_bad)):
+        with pytest.raises(Exception, match="vocab"):
+            df.write.format("noop").mode("overwrite").save()
+        with pytest.raises(Exception, match="vocab"):
+            df.write.mode("overwrite").parquet(str(tmp_path / name))
     # complete vocab still works and matches the probe-driven result
     full = {
         (r.doc_a, r.doc_b, r.inter, r.uni)

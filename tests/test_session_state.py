@@ -1,4 +1,11 @@
-"""Session-scoped memos (session.state) and scratch-path isolation.
+"""The session factory's launch, session-scoped memos (session.state) and
+scratch-path isolation.
+
+A launching ``get_spark`` starts the SparkContext while a second thread
+initialises the session extensions, then builds the SparkSession.  These
+tests pin that the split start configures the driver exactly as one
+``getOrCreate`` does, that the warm-up never fails a start nor outlives
+it, and that a reused context starts no thread.
 
 The memo owner hands out one dict per SparkSession and forgets a stopped
 application; staging paths are either fingerprint-keyed shared fixtures
@@ -11,16 +18,154 @@ at once do not clobber each other.
 
 from __future__ import annotations
 
+import json
 import subprocess
 import sys
 import textwrap
 from pathlib import Path
 
+from google_analytics_dataframes_spark import session
 from google_analytics_dataframes_spark.io import load_table, load_tables
 from google_analytics_dataframes_spark.session import RUNTIME_CONFS
 from tests.conftest import SF_DIR, small_env
 
 REPO = Path(__file__).resolve().parent.parent
+
+
+def _run_driver(script: str, **env: str) -> subprocess.Popen:
+    return subprocess.Popen(
+        [sys.executable, "-c", textwrap.dedent(script)],
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
+        text=True,
+        env=small_env(**env),
+        cwd=REPO,
+    )
+
+
+def _last_line(p: subprocess.Popen) -> str:
+    """The driver's last stdout line; fails unless it exited 0."""
+    out, err = p.communicate(timeout=300)
+    assert p.returncode == 0 and out.strip(), (out[-2000:], err[-3000:])
+    return out.strip().splitlines()[-1]
+
+
+def test_split_launch_configures_the_driver_as_one_getorcreate():
+    """A launching get_spark runs the warm-up once, on a thread that is
+    gone when it returns, and its SparkContext and session confs equal
+    those of the builder's single getOrCreate (started afterwards in the
+    same process, over the same gateway).  The launched JVM's heap is
+    the configured driver memory, so that conf reached the launch."""
+    script = """
+        import json, threading, warnings
+        from google_analytics_dataframes_spark import session
+
+        KEYS = ("spark.app.name", "spark.master", "spark.sql.shuffle.partitions",
+                "spark.driver.memory", "spark.ui.enabled",
+                "spark.sql.autoBroadcastJoinThreshold",
+                "spark.cleaner.periodicGC.interval")
+        calls = []
+        warm = session._warm_extensions
+        session._warm_extensions = lambda jvm: (calls.append(1), warm(jvm))
+
+        def confs(spark):
+            sc = spark.sparkContext.getConf()
+            return {k: [sc.get(k, None), spark.conf.get(k, None)] for k in KEYS}
+
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            split = session.get_spark(app_name="split")
+        out = {
+            "calls": len(calls),
+            "warnings": [str(w.message) for w in caught if "warm-up" in str(w.message)],
+            "alive": [t.name for t in threading.enumerate() if t.name == session.WARM_UP_THREAD],
+            "heap": split._jvm.java.lang.Runtime.getRuntime().maxMemory(),
+            "split": confs(split),
+            "rows": split.range(5).count(),
+        }
+        split.stop()
+        out["single"] = confs(session._builder(app_name="split").getOrCreate())
+        print(json.dumps(out))
+    """
+    got = json.loads(_last_line(_run_driver(script)))
+    assert got["calls"] == 1 and got["warnings"] == [] and got["alive"] == []
+    assert got["split"] == got["single"], (got["split"], got["single"])
+    assert got["split"]["spark.driver.memory"] == ["1g", "1g"]
+    assert got["split"]["spark.app.name"] == ["split", "split"]
+    assert 512 << 20 < got["heap"] <= 1 << 30
+    assert got["rows"] == 5
+
+
+def test_warm_up_never_fails_nor_outlives_a_launch():
+    """Three launches that go wrong, in two driver processes run at once:
+
+    * no java: the start raises before the gateway is up;
+    * a warm-up that raises: it warns, and the session still answers;
+    * a master the launcher accepts but the SparkContext cannot parse: the
+      start raises after the gateway is up, while the warm-up runs.
+
+    After each, no warm-up thread is alive."""
+    prelude = """
+        import os, threading, warnings
+        from google_analytics_dataframes_spark import session
+
+        def alive():
+            return [t for t in threading.enumerate() if t.name == session.WARM_UP_THREAD]
+
+        def raises(**kw):
+            try:
+                session.get_spark(**kw)
+            except Exception as e:
+                return str(e)
+            raise SystemExit(f"get_spark({kw}) did not raise")
+    """
+    no_java_then_boom = prelude + """
+        java_home = os.environ.get("JAVA_HOME")
+        os.environ["JAVA_HOME"] = os.path.join(os.getcwd(), "no-such-jdk")
+        raises(app_name="no-java")
+        assert not alive()
+        if java_home is None:
+            del os.environ["JAVA_HOME"]
+        else:
+            os.environ["JAVA_HOME"] = java_home
+
+        def boom(jvm):
+            raise RuntimeError("warm-up boom")
+
+        session._warm_extensions = boom
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            spark = session.get_spark(app_name="boom")
+        assert not alive()
+        assert any("warm-up boom" in str(w.message) for w in caught), caught
+        assert spark.sql("SELECT sum(id) FROM range(5)").first()[0] == 10
+        print("BOOM-OK")
+    """
+    bogus_master = prelude + """
+        err = raises(app_name="bogus", master="local[bogus]")
+        assert not alive()
+        assert "Could not parse Master URL" in err, err
+        print("BOGUS-OK")
+    """
+    procs = [_run_driver(no_java_then_boom), _run_driver(bogus_master)]
+    try:
+        lines = [_last_line(p) for p in procs]
+    finally:
+        for p in procs:
+            p.kill()
+    assert lines == ["BOOM-OK", "BOGUS-OK"]
+
+
+def test_reused_context_starts_no_warm_up_thread(spark, monkeypatch):
+    """get_spark over a live SparkContext launches no JVM, so it must start
+    no thread and look up no extension."""
+
+    def boom(*a, **k):
+        raise AssertionError("warm-up work on a reused context")
+
+    monkeypatch.setattr(session.threading, "Thread", boom)
+    monkeypatch.setattr(session, "_warm_extensions", boom)
+    assert session.get_spark(app_name="tests", master="local[4]", shuffle_partitions=4) is spark
 
 
 def test_new_session_gets_its_own_confs_and_views(spark):
