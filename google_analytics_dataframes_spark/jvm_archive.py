@@ -14,9 +14,18 @@ action.  It lives in the per-user cache
 benchmark set-up gets fresh):
 
 * ``driver-<key>.jsa`` — a published archive.  The key hashes ``java.home``,
-  the JDK's module image and JVM library, and every jar under
-  ``$SPARK_HOME/jars`` (path, size, mtime), so a JDK or Spark upgrade builds
-  a new archive, and publishing it sweeps the old one.
+  the JDK's module image and JVM library, and every jar the launch view
+  links (path, size, mtime), so a JDK or Spark upgrade builds a new
+  archive, and publishing it sweeps the old one.
+* ``driver-<key>.home/`` — the launch view of ``$SPARK_HOME`` that archived
+  launches start from: a symlink to every top-level entry but ``jars/``,
+  and a ``jars/`` with a symlink to every entry of ``$SPARK_HOME/jars``
+  except ``spark-mllib_*.jar``.  spark-mllib registers a session-extensions
+  provider whose static initialiser builds Scala's runtime-reflection
+  universe and ML encoders at every SparkSession start; no query of this
+  engine uses ML.  The view is published like an archive: built under
+  ``driver-<key>.home.<uuid>.part``, then renamed into place, and a
+  publisher that loses the rename uses the winner's view.
 * ``driver-<key>.jsa.<uuid>.part`` — a build in flight.
 * ``driver-<key>.failed`` — a build for this key failed (its stderr tail is
   inside); later starts skip the archive instead of paying for the build
@@ -25,14 +34,17 @@ benchmark set-up gets fresh):
 
 Delete the directory to start over.
 
-Only launches whose classpath is the conf dir plus ``$SPARK_HOME/jars`` use
-an archive, and only when the effective conf dir holds nothing but
-``*.template`` files, which Spark never reads.  JDK 17 refuses to dump or map
-an archive with a non-empty directory on the classpath, so those launches
+Only launches whose classpath would be the conf dir plus ``$SPARK_HOME/jars``
+qualify, and only when the effective conf dir holds nothing but
+``*.template`` files, which Spark never reads.  Those launches start with
+SPARK_HOME pointed at the view, so their classpath is the conf dir plus the
+view's jars, and the JVM keeps the view in its environment (its Python
+workers find ``python/lib/pyspark.zip`` through it).  JDK 17 refuses to dump
+or map an archive with a non-empty directory on the classpath, so they also
 point SPARK_CONF_DIR at the empty ``conf/``.  Every other launch starts
-exactly as it would without this module.
+exactly as it would without this module, spark-mllib included.
 
-On a miss a child Python process starts Spark with
+On a miss a child Python process starts Spark from the view with
 ``-XX:ArchiveClassesAtExit`` on a unique ``.part`` path, runs the noop
 action, stops, waits for its JVM to exit (the JVM writes the archive on its
 way out) and checks that a fresh JVM maps the part with ``-Xshare:on
@@ -46,6 +58,7 @@ Concurrent misses each build their own part and the last rename wins.
 from __future__ import annotations
 
 import contextlib
+import fnmatch
 import hashlib
 import os
 import shutil
@@ -71,6 +84,9 @@ _CLASSPATH_ENV = (
     "SPARK_PREPEND_CLASSES",
     "SPARK_TESTING",
 )
+
+#: The jar the launch view leaves out of ``$SPARK_HOME/jars``.
+LEFT_OUT_JAR = "spark-mllib_*.jar"
 
 #: Seconds a build may take: a cold start, one action, the dump and the
 #: check.  A ``.part`` file older than this belongs to no live builder.
@@ -113,14 +129,47 @@ def archive_path() -> str | None:
             os.path.join(java_home, "lib", "modules"),
             os.path.join(java_home, "lib", "server", "libjvm.so"),
         ]
-        files += sorted(e.path for e in os.scandir(os.path.join(spark_home, "jars")))
+        files += _view_jars(spark_home)
         for f in files:
             st = os.stat(f)
             key.update(f"{f}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
     except OSError:
         return None
+    # an archive dumped from $SPARK_HOME/jars itself never matches the
+    # view's classpath, even where no jar is left out
+    key.update(b"view\0")
     cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
     return os.path.join(cache, "spark_graft", f"driver-{key.hexdigest()[:20]}.jsa")
+
+
+def _view_jars(spark_home: str) -> list[str]:
+    """The entries of ``$SPARK_HOME/jars`` the launch view links, sorted."""
+    jars = os.path.join(os.path.abspath(spark_home), "jars")
+    return sorted(e.path for e in os.scandir(jars) if not fnmatch.fnmatchcase(e.name, LEFT_OUT_JAR))
+
+
+def _publish_view(spark_home: str, view: str) -> str:
+    """Return ``view``, the launch view of ``spark_home``, building and
+    publishing it first if it does not exist (see the module docstring).
+    Raises OSError when it can be neither built nor found."""
+    if os.path.isdir(view):
+        return view
+    part = f"{view}.{uuid.uuid4().hex}.part"
+    home = os.path.abspath(spark_home)
+    try:
+        os.mkdir(part)
+        for e in os.scandir(home):
+            if e.name != "jars":
+                os.symlink(e.path, os.path.join(part, e.name))
+        os.mkdir(os.path.join(part, "jars"))
+        for jar in _view_jars(home):
+            os.symlink(jar, os.path.join(part, "jars", os.path.basename(jar)))
+        os.rename(part, view)
+    except OSError:
+        shutil.rmtree(part, ignore_errors=True)
+        if not os.path.isdir(view):  # else a concurrent publisher won the rename
+            raise
+    return view
 
 
 def launches_jvm() -> bool:
@@ -135,12 +184,13 @@ def launches_jvm() -> bool:
 def driver_java_options():
     """Wrap the launch of the driver JVM (the builder's ``getOrCreate``).
 
-    Yields the JVM options that map this launch's archive, after building
-    and publishing it on a miss, with SPARK_CONF_DIR pointed at the empty
-    conf dir until the block exits.  Yields None and changes nothing when no
-    JVM will be launched (a live gateway, or a driver that spark-submit
-    started), when the launch does not qualify, or when the archive cannot
-    be had: a failure here never fails the launch."""
+    Yields the JVM options that map this launch's archive, after publishing
+    the launch view and, on a miss, building and publishing the archive,
+    with SPARK_HOME pointed at the view and SPARK_CONF_DIR at the empty conf
+    dir until the block exits.  Yields None and changes nothing when no JVM
+    will be launched (a live gateway, or a driver that spark-submit
+    started), when the launch does not qualify, or when the view or the
+    archive cannot be had: a failure here never fails the launch."""
     archive = None
     if launches_jvm():
         try:
@@ -148,7 +198,10 @@ def driver_java_options():
             if archive is not None:
                 conf = os.path.join(os.path.dirname(archive), "conf")
                 os.makedirs(conf, exist_ok=True)
-                if not (os.path.exists(archive) or _build(archive, conf)):
+                from pyspark.find_spark_home import _find_spark_home
+
+                home = _publish_view(_find_spark_home(), archive[: -len(".jsa")] + ".home")
+                if not (os.path.exists(archive) or _build(archive, conf, home)):
                     archive = None
         except OSError as e:  # an unreadable conf dir, an unwritable cache
             warnings.warn(f"JVM class archive unavailable, starting without it: {e}")
@@ -156,20 +209,22 @@ def driver_java_options():
     if archive is None:
         yield None
         return
-    saved = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = conf
+    launch_env = {"SPARK_CONF_DIR": conf, "SPARK_HOME": home}
+    saved = {v: os.environ.get(v) for v in launch_env}
+    os.environ.update(launch_env)
     try:
         yield f"{LOG_OPTIONS} -XX:SharedArchiveFile={archive} -XX:+VerifySharedSpaces"
     finally:
-        if saved is None:
-            del os.environ["SPARK_CONF_DIR"]
-        else:
-            os.environ["SPARK_CONF_DIR"] = saved
+        for v, value in saved.items():
+            if value is None:
+                del os.environ[v]
+            else:
+                os.environ[v] = value
 
 
-def _build(archive: str, conf: str) -> bool:
-    """Build ``archive`` in a child process and publish it; False, with a
-    warning, when the build fails.  A failure the child reports leaves the
+def _build(archive: str, conf: str, home: str) -> bool:
+    """Build ``archive`` in a child process that launches from the view
+    ``home`` and publish it; False, with a warning, when the build fails.  A failure the child reports leaves the
     ``.failed`` marker; a killed or timed-out child leaves nothing and the
     next start tries again."""
     failed = archive[: -len(".jsa")] + ".failed"
@@ -177,7 +232,7 @@ def _build(archive: str, conf: str) -> bool:
         return False
     part = f"{archive}.{uuid.uuid4().hex}.part"
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, SPARK_CONF_DIR=conf)
+    env = dict(os.environ, SPARK_CONF_DIR=conf, SPARK_HOME=home)
     env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
     # the child's stderr goes to a file, not a pipe: a JVM orphaned by a
     # killed child would hold a pipe open until it exits
@@ -213,18 +268,22 @@ def _build(archive: str, conf: str) -> bool:
 
 
 def _sweep(keep: str) -> None:
-    """Remove other keys' archives and markers, and parts no live builder
-    owns.  Another process's in-flight part is younger than the build
-    timeout and stays.  A JVM that has an old archive mapped keeps its
-    mapping after the unlink."""
+    """Remove other keys' archives, markers and views, and parts no live
+    builder owns.  Another process's in-flight part (an archive or a view)
+    is younger than the build timeout and stays.  A JVM that has an old
+    archive mapped keeps its mapping after the unlink."""
     now = time.time()
+    view = keep[: -len(".jsa")] + ".home"
     for e in os.scandir(os.path.dirname(keep)):
-        if not e.name.startswith("driver-") or e.path == keep:
+        if not e.name.startswith("driver-") or e.path in (keep, view):
             continue
         with contextlib.suppress(OSError):
             if e.name.endswith(".part") and now - e.stat().st_mtime < BUILD_TIMEOUT_S:
                 continue
-            os.unlink(e.path)
+            if e.is_dir(follow_symlinks=False):
+                shutil.rmtree(e.path)  # removes a view's links, never their targets
+            else:
+                os.unlink(e.path)
 
 
 def _build_child(part: str) -> None:

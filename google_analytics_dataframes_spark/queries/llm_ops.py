@@ -733,7 +733,7 @@ def l7_string_simjoin(spark, sf_dir):
     the bitmask bound (vocab None), fall back to the probe path
     unchanged: the index/prefix strategies re-read the item stream
     multiple times and NEED the probe's persist — stats would skip the
-    persist and regress them (measured reasoning in OPTIMIZATION_r15.md)."""
+    persist and regress them (BASELINE.md, "Measured and rejected")."""
     stats = _simjoin_stats(spark, sf_dir)
     docs = T(spark, sf_dir, "documents").filter(F.col("lang") == "en")
     toks = docs.select(

@@ -3,10 +3,10 @@
 Three entry points:
 
 * :func:`get_spark` — build a session for our own tests/bench (local[N]);
-  the driver JVM it launches maps a class-data-sharing archive of Spark's
-  start-up classes (:mod:`google_analytics_dataframes_spark.jvm_archive`),
-  and a second thread initialises the session extensions while the
-  SparkContext starts.
+  the driver JVM it launches starts from a Spark home without spark-mllib
+  and maps a class-data-sharing archive of Spark's start-up classes
+  (:mod:`google_analytics_dataframes_spark.jvm_archive`), and a second
+  thread warms the SQL layer's start-up while the SparkContext starts.
 * :func:`configure` — idempotently apply the *runtime* confs any session
   needs for deterministic, DuckDB-hash-matching results.  The driver passes
   us its own SparkSession, so every query path calls ``configure(spark)``
@@ -135,27 +135,77 @@ def _builder(
     return SparkSession.builder.config(map=_static_confs(app_name, master, shuffle_partitions))
 
 
-#: Name of the thread that initialises the session extensions during a launch.
-WARM_UP_THREAD = "spark-extensions-warm-up"
+#: Name of the thread that warms the SQL layer's start-up during a launch.
+SQL_WARM_UP_THREAD = "spark-sql-warm-up"
+
+#: A class body for Janino to compile during the warm-up: a few of the
+#: constructs Spark's generated code uses (fields, loops, casts, arrays, an
+#: inner class, a checked exception), and nothing from Spark.  A class-load
+#: log of a start plus three ga queries left 9 Janino classes to load after
+#: this compile, and 38 after a one-method body.
+_WARM_UP_CLASS_BODY = """
+private final long[] values = new long[8];
+private int nulls;
+
+public long fold(java.util.Iterator rows) throws java.io.IOException {
+  long total = 0L;
+  while (rows.hasNext()) {
+    Object row = rows.next();
+    if (row == null) {
+      nulls++;
+    } else if (row instanceof Long) {
+      total += ((Long) row).longValue();
+    } else {
+      throw new java.io.IOException("unexpected row " + row);
+    }
+  }
+  for (int i = 0; i < values.length; i++) {
+    total += values[i] * i;
+  }
+  return total + new Scale().apply(nulls);
+}
+
+private final class Scale {
+  long apply(int n) { return (long) (n * 2.0d); }
+}
+"""
 
 
-def _warm_extensions(jvm) -> None:
-    """Load each ``SparkSessionExtensionsProvider`` on the classpath through
-    ``java.util.ServiceLoader`` and apply it to a throwaway
-    ``SparkSessionExtensions``: what the SparkSession constructor does, so
-    the providers' static initialisers (spark-mllib's builds Scala's
-    runtime-reflection universe and encoders) run on the calling thread's
-    JVM thread instead of the constructor's."""
+def _warm_sql_start(jvm) -> None:
+    """Do two jobs of the SparkSession start and the first action ahead of
+    time, on the calling thread's JVM thread:
+
+    1. load each ``SparkSessionExtensionsProvider`` on the classpath through
+       ``java.util.ServiceLoader`` and apply it to a throwaway
+       ``SparkSessionExtensions``, as the SparkSession constructor does, so
+       the providers' static initialisers run here (the launch view leaves
+       spark-mllib's out, so archived launches find none);
+    2. compile one class with Janino (:func:`_compile_warm_up_class`),
+       which loads and verifies the compiler the first action's codegen
+       needs: Janino's jars are signed, and JDK 17 keeps classes of signed
+       jars out of the class-data-sharing archive."""
     provider = jvm.org.apache.spark.sql.SparkSessionExtensionsProvider._java_lang_class
     providers = jvm.java.util.ServiceLoader.load(provider, provider.getClassLoader()).iterator()
     extensions = jvm.org.apache.spark.sql.SparkSessionExtensions()
     while providers.hasNext():
         providers.next().apply(extensions)
+    _compile_warm_up_class(jvm)
+
+
+def _compile_warm_up_class(jvm) -> None:
+    """Compile :data:`_WARM_UP_CLASS_BODY` with Janino's
+    ``ClassBodyEvaluator``.  The class is named outside every Spark package
+    and has no Spark import or superclass, so the compile initialises no
+    Spark class and cannot race the JavaSparkContext's static
+    initialisers."""
+    evaluator = jvm.org.codehaus.janino.ClassBodyEvaluator()
+    evaluator.setClassName("google_analytics_dataframes_spark.JaninoWarmUp")
+    evaluator.cook(_WARM_UP_CLASS_BODY)
 
 
 def _start_context(confs: dict[str, str]) -> None:
     """Launch the driver JVM and start its SparkContext with ``confs``
-    while a daemon thread runs :func:`_warm_extensions` as soon as the
+    while a daemon thread runs :func:`_warm_sql_start` as soon as the
     gateway is up; return only after that thread has ended, also when the
     start raises.  A failed warm-up warns and is otherwise ignored."""
     stop = threading.Event()
@@ -171,11 +221,11 @@ def _start_context(confs: dict[str, str]) -> None:
             while SparkContext._jvm is None and not stop.is_set():
                 stop.wait(0.01)
             if not stop.is_set():  # else the start is over: it raised, or was quicker
-                _warm_extensions(SparkContext._jvm)
+                _warm_sql_start(SparkContext._jvm)
         except Exception as e:
             failed.append(e)
 
-    thread = threading.Thread(target=warm_up, name=WARM_UP_THREAD, daemon=True)
+    thread = threading.Thread(target=warm_up, name=SQL_WARM_UP_THREAD, daemon=True)
     thread.start()
     try:
         SparkContext.getOrCreate(SparkConf().setAll(list(confs.items())))
@@ -184,7 +234,7 @@ def _start_context(confs: dict[str, str]) -> None:
         thread.join()
     if failed:
         warnings.warn(
-            f"session extension warm-up failed, the SparkSession start does it instead: {failed[0]}"
+            f"SQL start-up warm-up failed, the SparkSession start does it instead: {failed[0]}"
         )
 
 
@@ -201,17 +251,23 @@ def get_spark(
     cluster this is sized so a shuffle partition fits executor memory
     (SURVEY.md §4.2).
 
-    When this call launches the driver JVM, the JVM maps a class-data-sharing
-    archive of Spark's start-up classes, built on the first such launch
-    (:mod:`google_analytics_dataframes_spark.jvm_archive`), and the start is
-    split in two so that its costliest serial step overlaps another:
+    When this call launches the driver JVM and the launch qualifies (a conf
+    dir of templates only, no extra classpath), the JVM's classpath is the
+    conf dir plus the launch view's jars: ``$SPARK_HOME/jars`` without
+    spark-mllib, whose session-extensions provider builds Scala's
+    runtime-reflection universe at every SparkSession start.  It maps a
+    class-data-sharing archive of Spark's start-up classes, built on the
+    first such launch (:mod:`google_analytics_dataframes_spark.jvm_archive`).
+    Every launch, qualifying or not, is split in two so that serial steps
+    overlap:
 
     1. While the main thread creates the SparkContext, a daemon thread
        imports what py4j's input converters import on their first call
        (pandas among it), waits for the py4j gateway and then, on its own
        JVM thread, initialises the session extensions the SparkSession
-       constructor would otherwise initialise on the critical path
-       (:func:`_warm_extensions`).
+       constructor would otherwise initialise on the critical path, and
+       compiles one class with Janino, which the first action would
+       otherwise load and verify (:func:`_warm_sql_start`).
     2. The main thread joins that thread, and only then builds the
        SparkSession over the live context.  The join is what keeps this
        safe: the extensions initialise SQL-layer Scala objects whose static

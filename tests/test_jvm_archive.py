@@ -30,11 +30,14 @@ from tests.conftest import SF_DIR, small_env
 REPO = Path(__file__).resolve().parent.parent
 
 # One driver start; prints exactly one line: the JVM's input arguments,
-# the archives it has mapped and an answer read through load_table.
+# the archives it has mapped, the spark-mllib jars on its classpath, the
+# session-extensions providers it finds, an answer read through load_table
+# and one Python UDF's answer.
 _DRIVER = textwrap.dedent(
     """
-    import json, sys
-    from google_analytics_dataframes_spark import session
+    import fnmatch, json, os, sys
+    from pyspark.sql.functions import udf
+    from google_analytics_dataframes_spark import jvm_archive, session
     from google_analytics_dataframes_spark.io import load_table
 
     spark = session.get_spark(app_name="archive")
@@ -43,11 +46,23 @@ _DRIVER = textwrap.dedent(
     args = list(lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
     with open(f"/proc/{pid}/maps") as f:
         mapped = sorted({l.split()[-1] for l in f if "spark_graft" in l})
+    classpath = lang.System.getProperty("java.class.path").split(os.pathsep)
+    mllib = [c for c in classpath if fnmatch.fnmatchcase(os.path.basename(c), jvm_archive.LEFT_OUT_JAR)]
+    provider = spark._jvm.org.apache.spark.sql.SparkSessionExtensionsProvider._java_lang_class
+    found = spark._jvm.java.util.ServiceLoader.load(provider, provider.getClassLoader()).iterator()
+    providers = 0
+    while found.hasNext():
+        found.next()
+        providers += 1
     ev = load_table(spark, sys.argv[1], "events")
     answer = [list(r) for r in ev.groupBy("event_type").count().orderBy("event_type").collect()]
+    tripled = udf(lambda x: 3 * x, "long")
     print(json.dumps({
         "args": args,
         "mapped": mapped,
+        "mllib": mllib,
+        "providers": providers,
+        "udf": [r[0] for r in spark.range(1, 4).select(tripled("id")).collect()],
         "answer": answer,
         "probe": spark.sparkContext.getConf().get("spark.graft.probe", None),
     }))
@@ -115,7 +130,9 @@ def test_archive_lifecycle(tmp_path):
        the JVM really maps the file.
     4. A bit-flipped archive is rejected by VerifySharedSpaces: the start
        still works, and the JVM's warning lands on stderr, not stdout.
-    All four answer the same."""
+    All four answer the same, and their Python UDFs run.  The plain start
+    has spark-mllib on its classpath; the three that launch from the view
+    have no spark-mllib jar and find no session-extensions provider."""
     cache = tmp_path / "cache"
     store = cache / "spark_graft"
 
@@ -136,12 +153,15 @@ def test_archive_lifecycle(tmp_path):
     assert "archive build failed" in err
     assert not any("SharedArchiveFile" in a for a in plain["args"])
     assert _archives(cache) == [] and not list(store.glob("*.failed"))
+    assert plain["mllib"] and plain["udf"] == [3, 6, 9]
 
     built, _ = _result(_driver(cache))
     [archive] = _archives(cache)
     assert f"-XX:SharedArchiveFile={archive}" in built["args"]
     assert built["mapped"] == [str(archive)]
     assert built["answer"] == plain["answer"]
+    assert built["mllib"] == [] and built["providers"] == 0
+    assert built["udf"] == [3, 6, 9]
 
     hit, _ = _result(
         _driver(
@@ -153,6 +173,7 @@ def test_archive_lifecycle(tmp_path):
     assert f"-XX:SharedArchiveFile={archive}" in hit["args"]
     assert hit["mapped"] == [str(archive)]
     assert hit["answer"] == plain["answer"]
+    assert hit["mllib"] == [] and hit["providers"] == 0 and hit["udf"] == [3, 6, 9]
 
     archive.chmod(0o644)
     with open(archive, "r+b") as f:
@@ -163,12 +184,14 @@ def test_archive_lifecycle(tmp_path):
     rejected, err = _result(_driver(cache))
     assert rejected["mapped"] == [] and "failed to load" in err
     assert rejected["answer"] == plain["answer"]
+    assert rejected["mllib"] == [] and rejected["udf"] == [3, 6, 9]
     shutil.rmtree(cache)  # ~160 MB that pytest would keep with its temp dirs
 
 
 def test_spark_defaults_conf_is_honoured_without_archive(tmp_path):
     """A conf dir holding a real spark-defaults.conf is read as before, and
-    the launch neither builds nor maps an archive."""
+    the launch neither builds nor maps an archive: it starts from
+    $SPARK_HOME itself, spark-mllib on its classpath."""
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-defaults.conf").write_text("spark.graft.probe  from-defaults\n")
@@ -177,6 +200,7 @@ def test_spark_defaults_conf_is_honoured_without_archive(tmp_path):
     assert got["probe"] == "from-defaults"
     assert not any("SharedArchiveFile" in a for a in got["args"])
     assert got["mapped"] == [] and not cache.exists()
+    assert got["mllib"] and got["udf"] == [3, 6, 9]
 
 
 def test_only_plain_classpath_launches_qualify(tmp_path, monkeypatch):
@@ -209,21 +233,26 @@ def test_reused_context_does_no_archive_work(spark, monkeypatch):
 
 
 def test_launch_options_scope_the_conf_dir_and_never_raise(tmp_path, monkeypatch):
-    """On a hit the options name the archive and SPARK_CONF_DIR points at
-    the empty conf dir only inside the block; an unwritable cache warns
-    and yields None instead of failing the launch."""
+    """On a hit the options name the archive, SPARK_CONF_DIR points at the
+    empty conf dir and SPARK_HOME at the launch view, only inside the
+    block; an unwritable cache warns and yields None instead of failing
+    the launch."""
     from pyspark import SparkContext
 
     monkeypatch.setattr(SparkContext, "_gateway", None)  # as before a JVM exists
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    spark_home = os.environ.get("SPARK_HOME")
     archive = Path(jvm_archive.archive_path())
     archive.parent.mkdir()
     archive.write_bytes(b"")
     with jvm_archive.driver_java_options() as opts:
         assert f"-XX:SharedArchiveFile={archive}" in opts
         assert os.environ["SPARK_CONF_DIR"] == str(archive.parent / "conf")
+        assert os.environ["SPARK_HOME"] == str(archive.with_suffix(".home"))
+        assert os.path.isfile(os.path.join(os.environ["SPARK_HOME"], "bin", "spark-submit"))
     assert "SPARK_CONF_DIR" not in os.environ
+    assert os.environ.get("SPARK_HOME") == spark_home
 
     (tmp_path / "file").write_text("")
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "file"))
@@ -240,7 +269,7 @@ def test_failed_build_is_remembered(tmp_path, monkeypatch):
     store.mkdir()
     monkeypatch.setattr(jvm_archive, "_CHILD", "import sys; sys.exit('no archive here')")
     with pytest.warns(UserWarning, match="build failed"):
-        assert not jvm_archive._build(archive, str(store / "conf"))
+        assert not jvm_archive._build(archive, str(store / "conf"), str(store / "home"))
     assert sorted(p.name for p in store.iterdir()) == ["driver-k.failed"]
     assert "no archive here" in (store / "driver-k.failed").read_text()
 
@@ -248,13 +277,14 @@ def test_failed_build_is_remembered(tmp_path, monkeypatch):
         raise AssertionError("rebuilt after a remembered failure")
 
     monkeypatch.setattr(jvm_archive.subprocess, "run", boom)
-    assert not jvm_archive._build(archive, str(store / "conf"))
+    assert not jvm_archive._build(archive, str(store / "conf"), str(store / "home"))
 
 
 def test_sweep_keeps_only_the_new_archive_and_live_parts(tmp_path):
-    """Publishing a key removes other keys' archives and markers and dead
-    builders' parts; another process's in-flight part and files that are
-    not archives stay."""
+    """Publishing a key removes other keys' archives, markers and launch
+    views (directories of links, removed without touching their targets)
+    and dead builders' parts; the key's own view, another process's
+    in-flight part and files that are not archives stay."""
     keep = tmp_path / "driver-new.jsa"
     names = [
         "driver-new.jsa",
@@ -267,12 +297,62 @@ def test_sweep_keeps_only_the_new_archive_and_live_parts(tmp_path):
     for n in names:
         (tmp_path / n).write_text("x")
     (tmp_path / "conf").mkdir()
+    for view in ("driver-new.home", "driver-old.home"):
+        (tmp_path / view / "jars").mkdir(parents=True)
+        (tmp_path / view / "jars" / "a.jar").symlink_to(tmp_path / "notes.txt")
     stale = time.time() - 2 * jvm_archive.BUILD_TIMEOUT_S
     os.utime(tmp_path / "driver-old.jsa.bbb.part", (stale, stale))
     jvm_archive._sweep(str(keep))
     assert sorted(p.name for p in tmp_path.iterdir()) == [
         "conf",
+        "driver-new.home",
         "driver-new.jsa",
         "driver-new.jsa.aaa.part",
         "notes.txt",
     ]
+    assert (tmp_path / "notes.txt").read_text() == "x"
+
+
+def test_launch_view_leaves_out_spark_mllib(tmp_path, monkeypatch):
+    """The view links every top-level entry of $SPARK_HOME but jars/, and
+    every jar but spark-mllib's; adding a jar changes the key.  A publisher
+    that loses the rename to a concurrent one uses the winner's view and
+    leaves no part behind."""
+    home = tmp_path / "spark"
+    (home / "bin").mkdir(parents=True)
+    (home / "RELEASE").write_text("Spark\n")
+    (home / "jars").mkdir()
+    for jar in ("spark-mllib_2.13-4.1.2.jar", "spark-core_2.13-4.1.2.jar", "janino-3.1.9.jar"):
+        (home / "jars" / jar).write_bytes(b"PK")
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    archive = jvm_archive.archive_path()
+    (tmp_path / "cache" / "spark_graft").mkdir(parents=True)
+    view = Path(jvm_archive._publish_view(str(home), archive[: -len(".jsa")] + ".home"))
+    assert sorted(p.name for p in view.iterdir()) == ["RELEASE", "bin", "jars"]
+    assert (view / "bin").resolve() == (home / "bin").resolve()
+    assert sorted(p.name for p in (view / "jars").iterdir()) == [
+        "janino-3.1.9.jar",
+        "spark-core_2.13-4.1.2.jar",
+    ]
+    assert (view / "jars" / "janino-3.1.9.jar").resolve() == (home / "jars" / "janino-3.1.9.jar").resolve()
+
+    (home / "jars" / "extra.jar").write_bytes(b"PK")
+    grown = jvm_archive.archive_path()
+    assert grown != archive
+
+    rename = os.rename
+
+    def lose(part, dest):  # a concurrent publisher renames its view first
+        shutil.copytree(view, dest, symlinks=True)
+        rename(part, dest)
+
+    monkeypatch.setattr(jvm_archive.os, "rename", lose)
+    won = grown[: -len(".jsa")] + ".home"
+    assert jvm_archive._publish_view(str(home), won) == won
+    assert sorted(os.listdir(Path(won) / "jars")) == [
+        "janino-3.1.9.jar",
+        "spark-core_2.13-4.1.2.jar",
+    ]
+    assert not list(view.parent.glob("*.part"))

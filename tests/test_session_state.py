@@ -2,7 +2,8 @@
 scratch-path isolation.
 
 A launching ``get_spark`` starts the SparkContext while a second thread
-initialises the session extensions, then builds the SparkSession.  These
+initialises the session extensions and compiles one class with Janino,
+then builds the SparkSession.  These
 tests pin that the split start configures the driver exactly as one
 ``getOrCreate`` does, that the warm-up never fails a start nor outlives
 it, and that a reused context starts no thread.
@@ -52,7 +53,8 @@ def _last_line(p: subprocess.Popen) -> str:
 
 def test_split_launch_configures_the_driver_as_one_getorcreate():
     """A launching get_spark runs the warm-up once, on a thread that is
-    gone when it returns, and its SparkContext and session confs equal
+    gone when it returns, and the warm-up's Janino compile runs once, on
+    that thread, without a warning.  Its SparkContext and session confs equal
     those of the builder's single getOrCreate (started afterwards in the
     same process, over the same gateway).  The launched JVM's heap is
     the configured driver memory, so that conf reached the launch."""
@@ -64,9 +66,12 @@ def test_split_launch_configures_the_driver_as_one_getorcreate():
                 "spark.driver.memory", "spark.ui.enabled",
                 "spark.sql.autoBroadcastJoinThreshold",
                 "spark.cleaner.periodicGC.interval")
-        calls = []
-        warm = session._warm_extensions
-        session._warm_extensions = lambda jvm: (calls.append(1), warm(jvm))
+        calls, janino = [], []
+        warm = session._warm_sql_start
+        session._warm_sql_start = lambda jvm: (calls.append(1), warm(jvm))
+        compile_class = session._compile_warm_up_class
+        session._compile_warm_up_class = lambda jvm: (
+            janino.append(threading.current_thread().name), compile_class(jvm))
 
         def confs(spark):
             sc = spark.sparkContext.getConf()
@@ -77,8 +82,9 @@ def test_split_launch_configures_the_driver_as_one_getorcreate():
             split = session.get_spark(app_name="split")
         out = {
             "calls": len(calls),
+            "janino": janino,
             "warnings": [str(w.message) for w in caught if "warm-up" in str(w.message)],
-            "alive": [t.name for t in threading.enumerate() if t.name == session.WARM_UP_THREAD],
+            "alive": [t.name for t in threading.enumerate() if t.name == session.SQL_WARM_UP_THREAD],
             "heap": split._jvm.java.lang.Runtime.getRuntime().maxMemory(),
             "split": confs(split),
             "rows": split.range(5).count(),
@@ -89,6 +95,7 @@ def test_split_launch_configures_the_driver_as_one_getorcreate():
     """
     got = json.loads(_last_line(_run_driver(script)))
     assert got["calls"] == 1 and got["warnings"] == [] and got["alive"] == []
+    assert got["janino"] == [session.SQL_WARM_UP_THREAD]
     assert got["split"] == got["single"], (got["split"], got["single"])
     assert got["split"]["spark.driver.memory"] == ["1g", "1g"]
     assert got["split"]["spark.app.name"] == ["split", "split"]
@@ -110,7 +117,7 @@ def test_warm_up_never_fails_nor_outlives_a_launch():
         from google_analytics_dataframes_spark import session
 
         def alive():
-            return [t for t in threading.enumerate() if t.name == session.WARM_UP_THREAD]
+            return [t for t in threading.enumerate() if t.name == session.SQL_WARM_UP_THREAD]
 
         def raises(**kw):
             try:
@@ -132,7 +139,7 @@ def test_warm_up_never_fails_nor_outlives_a_launch():
         def boom(jvm):
             raise RuntimeError("warm-up boom")
 
-        session._warm_extensions = boom
+        session._warm_sql_start = boom
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
             spark = session.get_spark(app_name="boom")
@@ -158,13 +165,14 @@ def test_warm_up_never_fails_nor_outlives_a_launch():
 
 def test_reused_context_starts_no_warm_up_thread(spark, monkeypatch):
     """get_spark over a live SparkContext launches no JVM, so it must start
-    no thread and look up no extension."""
+    no thread, look up no extension and compile nothing."""
 
     def boom(*a, **k):
         raise AssertionError("warm-up work on a reused context")
 
     monkeypatch.setattr(session.threading, "Thread", boom)
-    monkeypatch.setattr(session, "_warm_extensions", boom)
+    monkeypatch.setattr(session, "_warm_sql_start", boom)
+    monkeypatch.setattr(session, "_compile_warm_up_class", boom)
     assert session.get_spark(app_name="tests", master="local[4]", shuffle_partitions=4) is spark
 
 
