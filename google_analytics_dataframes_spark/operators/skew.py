@@ -3,41 +3,16 @@ handling"; the 100-TB posture of the task brief).
 
 AQE's OptimizeSkewedJoin splits oversized *post-shuffle* partitions
 automatically — that is the first line of defense and is on by default
-(session.py).  Salting is the explicit fallback for the cases AQE can't fix:
-
-* a single hot key inside one aggregation group (salted two-phase agg);
-* a hot join key where the other side is small enough to replicate per salt
-  (salted replicate-join).
-
-Both are pure DataFrame compositions — deterministic results, no RDDs.
+(session.py).  Salting is the explicit fallback for a hot join key where
+the other side is small enough to replicate per salt (salted
+replicate-join, j14) — a pure DataFrame composition, deterministic
+results, no RDDs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_groupby_sum(
-    df: DataFrame, key: str, value: Column | str, out: str, salt: int = 16
-) -> DataFrame:
-    """Two-phase aggregation for skewed keys: phase 1 aggregates on
-    (key, salt) — the hot key's rows spread over `salt` reducers — phase 2
-    merges the per-salt partials.  With exact-decimal partials the result is
-    bit-identical to the unsalted plan.
-
-    (For plain sums Spark's map-side partial aggregation usually suffices;
-    salting pays off when per-key state is large — collect_list, distinct
-    counts — or when one key dominates a stage.)"""
-    value = F.col(value) if isinstance(value, str) else value
-    phase1 = (
-        df.withColumn("_salt", F.pmod(F.crc32(F.col(key).cast("string")), F.lit(salt)))
-        .groupBy(key, "_salt")
-        .agg(F.sum(value.cast("decimal(30,6)")).alias("_partial"))
-    )
-    return phase1.groupBy(key).agg(
-        F.sum("_partial").cast("double").alias(out)
-    )
 
 
 def salted_join(

@@ -5,7 +5,7 @@ done when it returns the right rows but when its plan is the plan you'd
 ship — filters in `PushedFilters`, projection in `ReadSchema`, the right
 join algorithm, no stray exchanges.  These helpers parse the formatted plan
 so audits run as tests (tests/test_plans.py) and as a CLI
-(tools/explain_audit.py), not as eyeballing.
+(tools/plan_audit_report.py), not as eyeballing.
 """
 
 from __future__ import annotations

@@ -48,17 +48,6 @@ def _bloom_positions_sql(expr: str) -> str:
     return f"[{slices}]"
 
 
-def _word_shingles(arr_col: str, k: int):
-    """Adjacent k-word shingles of a pre-split token array column (total
-    occurrences, not distinct); empty for docs shorter than k words."""
-    return F.expr(
-        f"CASE WHEN size({arr_col}) >= {k} THEN "
-        f"transform(sequence(0, size({arr_col}) - {k}), "
-        f"i -> array_join(slice({arr_col}, i + 1, {k}), ' ')) "
-        f"ELSE array() END"
-    )
-
-
 # ------------------------------------------------------------------- l50 ---
 
 

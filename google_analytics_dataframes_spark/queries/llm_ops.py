@@ -1558,10 +1558,9 @@ def l67_jpeg_roundtrip(spark, sf_dir):
     driver's row count) or moves px_sum/coeff_sum off the closed form
     (failing the value hash).  Scale shape: identical to l63/l64 — pure
     per-row Arrow-batched compute on the scan, no shuffle, no driver
-    involvement.  4:2:0 chroma subsampling decodes for real since round 9
-    (tests/test_invariants.py round-trips a planted 4:2:0 fixture
-    exactly); progressive JPEG and sampling factors above 2 stay honest
-    NotImplementedError seams (operators/multimodal.decode_jpeg)."""
+    involvement.  Progressive JPEG, chroma subsampling and restart
+    intervals are honest NotImplementedError seams
+    (operators/multimodal.decode_jpeg)."""
     import numpy as np
 
     def per_batch(batches):

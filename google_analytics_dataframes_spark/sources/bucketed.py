@@ -515,25 +515,3 @@ def corpus_gram_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(char_ngrams(F.col("text"), 3)).alias("item"))
         .withColumn("sz", F.count("*").over(W.partitionBy("doc_id")))
     )
-
-
-def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on,
-    how: str = "inner",
-    merge_hint: bool = False,
-) -> DataFrame:
-    """Join two same-bucketed catalog tables.  With both sides bucketed on
-    the join key into equal bucket counts, the physical plan contains no
-    Exchange: each task reads bucket i of both sides and joins locally.
-
-    ``merge_hint`` forces SortMergeJoin — use it when demonstrating/testing
-    co-location on toy-sized tables, where Catalyst would otherwise pick a
-    broadcast join (at the target scale neither fact table fits the
-    broadcast threshold, so the SMJ path is the one that matters)."""
-    left = spark.table(left_table)
-    if merge_hint:
-        left = left.hint("MERGE")
-    return left.join(spark.table(right_table), on, how)

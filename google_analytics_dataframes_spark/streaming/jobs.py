@@ -3,7 +3,7 @@
 Batch-first design: every streaming job here has an oracle-checked batch
 twin in queries/streaming_batch.py; tests run these with
 ``Trigger.AvailableNow`` over the same parquet and assert stream == batch
-(st1/st3) or the documented late-data/dedup behavior (st4/st5).
+(st1/st3) or the documented late-data behavior (st4).
 
 The event source is parquet with TIMESTAMP(NANOS) `ts` — the stream reader
 declares `ts` as LONG (nanosAsLong, session.py) and converts to a µs
@@ -119,14 +119,6 @@ def st4_watermarked_counts(events: DataFrame, lateness: str = "1 hour") -> DataF
     )
 
 
-def st5_stream_dedup(events: DataFrame, lateness: str = "1 hour") -> DataFrame:
-    """Stateful stream dedup on the event key within the watermark horizon
-    (exactly-once event delivery on an at-least-once feed)."""
-    return events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
 def st6_stateful_funnel(events: DataFrame) -> DataFrame:
     """Custom per-key state via applyInPandasWithState: per user, a running
     (views, purchases) funnel counter emitted on every update."""
@@ -155,59 +147,6 @@ def st6_stateful_funnel(events: DataFrame) -> DataFrame:
     )
 
 
-def st8_stateful_funnel_tws(events: DataFrame) -> DataFrame:
-    """st6's funnel on the Spark 4.x arbitrary-state API
-    (`transformWithStateInPandas` + StatefulProcessor): same per-user
-    (views, purchases) semantics, but on the new engine that adds typed
-    value/list/map state, timers, TTL, and initial-state bootstrap — the
-    forward path for custom stateful operators (applyInPandasWithState is
-    the maintenance-mode predecessor).  State per user is one 2-long value
-    row; output on every update, same as st6, so tests can assert the two
-    APIs agree row-for-row.
-
-    Runtime requirements: (1) the TWS Python state server speaks protobuf
-    — when the wheel is absent the test suite locates a pure-python
-    runtime vendored elsewhere on the host and exposes it to driver and
-    worker interpreters via a sitecustomize shim (tests/_protobuf_compat
-    .py: namespace-package shadowing by jar resources and a minor-version
-    gencode check are the two traps); (2) each TWS state variable lives in
-    its own state-store column family, which only the RocksDB provider
-    supports — callers must set spark.sql.streaming.stateStore
-    .providerClass to RocksDBStateStoreProvider for this query.  Plan
-    construction itself has neither dependency."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    state_schema = StructType(
-        [StructField("views", LongType()), StructField("purchases", LongType())]
-    )
-    output_schema = "user_id bigint, views bigint, purchases bigint"
-
-    class FunnelProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("funnel", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            views, purchases = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                views += int((pdf["event_type"] == "view").sum())
-                purchases += int((pdf["event_type"] == "purchase").sum())
-            self._state.update((views, purchases))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "views": [views], "purchases": [purchases]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=FunnelProcessor(),
-        outputStructType=output_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def st18_typed_state_census(events: DataFrame) -> DataFrame:
     """Per-user event-type census on TWS TYPED state: a MapState keyed by
     event_type (one dynamically-growing counter map per user) plus a
@@ -216,8 +155,7 @@ def st18_typed_state_census(events: DataFrame) -> DataFrame:
     opaque tuple per key; a map would need whole-value rewrite per update,
     where MapState writes only the touched event_type entries).  Each TWS
     state variable lives in its own RocksDB column family, so this is also
-    the query that actually exercises the multi-column-family state store
-    (st8's single ValueState merely requires it).
+    the query that exercises the multi-column-family state store.
 
     Emits one row per (user, microbatch-it-changed-in) with the map
     flattened onto the five census columns; counters are monotone, so the
@@ -715,78 +653,6 @@ def run_available_now(
     return stream_df.sparkSession.table(query_name)
 
 
-def run_until_drained(
-    stream_df: DataFrame,
-    query_name: str,
-    expected_input_rows: int,
-    output_mode: str = "update",
-    timeout_s: float = 180.0,
-) -> DataFrame:
-    """availableNow execution for streams that never self-terminate.
-
-    transformWithStateInPandas with ``timeMode="ProcessingTime"`` (the TTL
-    clock) re-arms a state-cleanup wakeup every microbatch, so the
-    availableNow trigger keeps scheduling no-data batches forever — measured:
-    600+ stages and no COMMIT after 5 minutes on a 2-file fixture that
-    drains in ~20 s under ``timeMode="None"``.  Production runs such a
-    stream continuously, so non-termination is the CORRECT engine behavior;
-    a bounded test instead polls query progress and stops the query once
-
-    * cumulative ``numInputRows`` across microbatches reaches
-      ``expected_input_rows`` (every staged row was processed), and
-    * the most recent microbatch consumed 0 rows (the source is drained,
-      so no in-flight batch holds unemitted output).
-
-    Raises ``TimeoutError`` if the source does not drain inside
-    ``timeout_s`` — a hang here means staged fixtures or the source glob
-    are wrong, and failing loudly beats a silent pytest timeout."""
-    import shutil
-    import time
-
-    from google_analytics_dataframes_spark.io import scratch_dir
-
-    ckpt = scratch_dir(f"ckpt_{query_name}")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        deadline = time.monotonic() + timeout_s
-        seen_batches: set[int] = set()
-        consumed = 0
-        drained = False
-        while time.monotonic() < deadline and q.isActive:
-            for p in q.recentProgress:
-                bid = p["batchId"]
-                if bid not in seen_batches:
-                    seen_batches.add(bid)
-                    consumed += p["numInputRows"]
-            last = q.lastProgress
-            if (
-                consumed >= expected_input_rows
-                and last is not None
-                and last["numInputRows"] == 0
-            ):
-                drained = True
-                break
-            time.sleep(0.5)
-        if not drained and q.isActive:
-            raise TimeoutError(
-                f"{query_name}: consumed {consumed}/{expected_input_rows} "
-                f"rows in {timeout_s}s"
-            )
-    finally:
-        q.stop()
-        q.awaitTermination()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return stream_df.sparkSession.table(query_name)
-
-
 def run_available_now_parquet(stream_df: DataFrame, query_name: str) -> DataFrame:
     """Append-mode availableNow execution through a PARQUET file sink,
     returned as the sink directory read back.
@@ -828,16 +694,3 @@ def run_available_now_parquet(stream_df: DataFrame, query_name: str) -> DataFram
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return stream_df.sparkSession.read.parquet(out)
-
-
-def run_foreach_batch(stream_df: DataFrame, collector: list) -> None:
-    """st7: foreachBatch sink — per-microbatch callback (the arbitrary-sink
-    escape hatch: upserts, external indexes).  Appends (batch_id, rows) to
-    `collector`."""
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: collector.append((bid, df.count())))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

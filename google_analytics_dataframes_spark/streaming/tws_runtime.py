@@ -19,8 +19,7 @@ makes it importable in every interpreter a TWS query touches:
   workers/daemons with exactly those envVars — so a ``sitecustomize`` shim
   dir placed on ``sc.environment['PYTHONPATH']`` while the TWS plan is being
   built reaches every interpreter the runners spawn, with no pre-JVM
-  ``$PYTHONPATH`` requirement.  (The pre-JVM route — tests/conftest.py —
-  still works and simply makes this a no-op-in-effect.)
+  ``$PYTHONPATH`` requirement.
 
 Three wrinkles, found the hard way:
 
@@ -139,22 +138,6 @@ def _write_shim_dir() -> str:
     with open(os.path.join(shim_dir, "sitecustomize.py"), "w") as f:
         f.write(SITECUSTOMIZE_SRC.format(dirs=_candidate_dirs()))
     return shim_dir
-
-
-def install_worker_shim() -> bool:
-    """Pre-JVM route: prepend the shim dir to ``$PYTHONPATH`` so worker
-    interpreters of a session created LATER import it via ``site``.
-
-    Returns True if a shim was (or had already been) installed."""
-    if not _candidate_dirs():
-        return False
-    shim_dir = _write_shim_dir()
-    existing = os.environ.get("PYTHONPATH", "")
-    if shim_dir not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = shim_dir + (
-            os.pathsep + existing if existing else ""
-        )
-    return True
 
 
 @contextmanager

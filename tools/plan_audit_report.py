@@ -1,16 +1,21 @@
 #!/usr/bin/env python
-"""Generate PLAN_AUDIT.md — the scale-relevant physical-plan facts for every
-registered query: shuffle (Exchange) count, join algorithms, scans and how
-many of them have pushed filters.
+"""Plan audit: the scale-relevant physical-plan facts of registered queries —
+shuffle (Exchange) count, join algorithms, scans with their pushed filters
+and read schema, codegen spans.
 
-    python tools/plan_audit_report.py    # writes PLAN_AUDIT.md in the checkout root
+    python tools/plan_audit_report.py                    # writes PLAN_AUDIT.md
+    python tools/plan_audit_report.py j2 l3 o4           # print, by name prefix
+    python tools/plan_audit_report.py --full j2_broadcast  # + formatted plan
 
-This is evidence, not vibes: each row is read off the compiled physical plan
-at sf0.01.  Regenerate after touching any operator.
+With no name prefixes it writes PLAN_AUDIT.md in the checkout root, one row
+per registered query.  This is evidence, not vibes: each row is read off the
+compiled physical plan at sf0.01 (``--sf`` picks another dataset).
+Regenerate after touching any operator.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 from datetime import date
@@ -42,14 +47,32 @@ queries; this table tracks the shuffle/join story.
 """
 
 
-def main() -> None:
+def print_facts(spark, reg, patterns: list[str], sf: str, full: bool) -> None:
+    """Per-query facts for every registered name starting with a prefix."""
     from google_analytics_dataframes_spark.plans import audit
-    from google_analytics_dataframes_spark.registry import DRIVER_SF_DIR, registry
-    from google_analytics_dataframes_spark.session import get_spark
 
-    spark = get_spark(app_name="plan-audit-report")
-    spark.sparkContext.setLogLevel("ERROR")
-    reg = registry()
+    for name in sorted(reg):
+        if not any(name.startswith(p) for p in patterns):
+            continue
+        df = reg[name].fn(spark, sf)
+        print(f"== {name}")
+        for s in audit.scan_info(df):
+            print(f"   scan: pushed={s.get('pushed_filters', '-')}")
+            print(f"         schema={s.get('read_schema', '-')}")
+        joins = audit.join_algorithms(df)
+        if joins:
+            print(f"   joins: {joins}")
+        print(
+            f"   exchanges={audit.count_exchanges(df)} "
+            f"codegen_spans={audit.codegen_span_count(df)}"
+        )
+        if full:
+            print(audit.formatted_plan(df))
+
+
+def write_report(spark, reg, sf: str) -> None:
+    from google_analytics_dataframes_spark.plans import audit
+
     lines = [
         HEADER,
         f"_Generated {date.today().isoformat()}; {len(reg)} queries._",
@@ -59,7 +82,7 @@ def main() -> None:
     ]
     worst: list[tuple[int, str]] = []
     for name in sorted(reg):
-        df = reg[name].fn(spark, DRIVER_SF_DIR)
+        df = reg[name].fn(spark, sf)
         ex = audit.count_exchanges(df)
         joins = ",".join(sorted(set(audit.join_algorithms(df)))) or "—"
         scans = audit.scan_info(df)
@@ -86,6 +109,25 @@ def main() -> None:
     with open(os.path.join(REPO, "PLAN_AUDIT.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLAN_AUDIT.md ({len(reg)} queries); top shuffles: {worst[:5]}")
+
+
+def main() -> None:
+    from google_analytics_dataframes_spark.registry import DRIVER_SF_DIR, registry
+    from google_analytics_dataframes_spark.session import get_spark
+
+    ap = argparse.ArgumentParser()
+    ap.add_argument("patterns", nargs="*", help="query name prefixes to print")
+    ap.add_argument("--sf", default=DRIVER_SF_DIR)
+    ap.add_argument("--full", action="store_true", help="print full formatted plan")
+    args = ap.parse_args()
+
+    spark = get_spark(app_name="plan-audit-report")
+    spark.sparkContext.setLogLevel("ERROR")
+    reg = registry()
+    if args.patterns:
+        print_facts(spark, reg, args.patterns, args.sf, args.full)
+    else:
+        write_report(spark, reg, args.sf)
 
 
 if __name__ == "__main__":
