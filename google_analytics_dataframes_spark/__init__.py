@@ -21,7 +21,7 @@ Public surface:
 """
 
 from google_analytics_dataframes_spark.session import configure, get_spark
-from google_analytics_dataframes_spark.io import load_table, load_tables, TABLES
+from google_analytics_dataframes_spark.io import load_table, TABLES
 
-__all__ = ["configure", "get_spark", "load_table", "load_tables", "TABLES"]
+__all__ = ["configure", "get_spark", "load_table", "TABLES"]
 __version__ = "0.1.0"

@@ -83,12 +83,3 @@ def fmt_d(c: Column | str) -> Column:
 
 
 FMT_D_SQL = "strftime({expr}, '%Y-%m-%d')"
-
-
-def fmt_ts(c: Column | str) -> Column:
-    """Render a timestamp as 'yyyy-MM-dd HH:mm:ss' (second resolution)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.date_format(c, "yyyy-MM-dd HH:mm:ss")
-
-
-FMT_TS_SQL = "strftime({expr}, '%Y-%m-%d %H:%M:%S')"

@@ -13,7 +13,6 @@ from google_analytics_dataframes_spark.determinism import (
     dsum,
     dsum_sql,
     fmt_d,
-    fmt_ts,
     r6,
 )
 from google_analytics_dataframes_spark.operators.similarity import (
@@ -33,7 +32,6 @@ __all__ = [
     "dsum",
     "dsum_sql",
     "fmt_d",
-    "fmt_ts",
     "r6",
     "as_double",
     "cosine",

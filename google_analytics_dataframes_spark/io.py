@@ -74,8 +74,8 @@ def _scratch_base() -> str:
     The PID suffix isolates concurrent processes (parallel pytest sessions,
     a sweep racing a bench) — without it two runs sharing a query name would
     rmtree each other's live checkpoints.  The atexit rmtree is what keeps a
-    tmpfs-backed base from accumulating staged stream parquet + state stores
-    across a long sweep; /dev/shm is typically capped at 50% RAM.  If tmpfs
+    tmpfs-backed base from accumulating sink output + state stores across
+    a long sweep; /dev/shm is typically capped at 50% RAM.  If tmpfs
     free space is already low at first use, fall back to the disk tempdir
     rather than risk exhausting it mid-run."""
     global _SCRATCH_BASE
@@ -111,11 +111,12 @@ def scratch_dir(name: str) -> str:
     """Ephemeral scratch directory for staging/checkpoint artifacts,
     RAM-backed when the host offers tmpfs (with headroom).
 
-    The one home for per-call or mutable output (sink round-trips, staged
-    stream sources, checkpoints, dirs a query overwrites): it sits under
-    the per-process scratch root, so concurrent processes never share a
-    path, and orphans of dead processes are reaped by the root's sweep.
-    Read-only fixtures shared across processes use :func:`staged_dir`.
+    The one home for per-call or mutable output (sink round-trips,
+    checkpoints, per-run copies of a stream source, dirs a query
+    overwrites): it sits under the per-process scratch root, so
+    concurrent processes never share a path, and orphans of dead
+    processes are reaped by the root's sweep.  Read-only fixtures shared
+    across processes, stream sources included, use :func:`staged_dir`.
 
     Streaming state stores and checkpoint WALs fsync every microbatch
     commit; on a disk-backed /tmp that fsync IS the fixed cost (and the
@@ -292,17 +293,6 @@ def fanout_by(df: DataFrame, *cols: str, min_partitions: int | None = None) -> D
     return df.repartition(n, *[F.col(c) for c in cols])
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all tables; also registers each as a temp view ``<name>`` so the
-    SQL entry point (SURVEY.md §3.2 E3) works on the same data."""
-    out = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def write_clustered(
     df: DataFrame,
     path: str,
@@ -430,18 +420,20 @@ def write_zordered(
 
 
 def staged_dir(sf_dir: str, table: str, name: str, build_fn) -> str:
-    """Fingerprint-keyed, marker-cached fixture staging (the contract
-    s10/s15/s16 established and s17/s18 share): the cache path carries the
-    sf tag AND the source table's byte fingerprint, so a regenerated
+    """Fingerprint-keyed, marker-cached fixture staging (the scan rows'
+    layout copies, the rollup, every stream source): the cache path
+    carries the sf tag AND the source table's byte fingerprint, so a regenerated
     dataset under the same sf tag re-materializes instead of serving a
     stale copy, and a `_SUCCESS` marker gates reuse so plan-only callers
     (plan audits, repeated query invocations) never pay the staging write
     twice.  ``build_fn(path)`` must produce the directory contents
     including the marker (Spark's parquet writer emits `_SUCCESS`
-    itself).
+    itself).  ``name`` must be unique, and no ``{name}_{sf_tag}_`` may
+    begin another fixture's path: the sweep below globs on it.
 
-    The one home for read-only fixtures shared across processes
-    (per-call or mutable output goes to :func:`scratch_dir`).
+    The one home for read-only fixtures shared across processes; no
+    caller writes into a published directory (per-call or mutable output
+    goes to :func:`scratch_dir`).
     Cross-process safety (review r8): the path is SHARED /tmp, so the
     build goes into a unique scratch dir and publishes via one atomic
     rename — two racing processes each build their own copy and exactly

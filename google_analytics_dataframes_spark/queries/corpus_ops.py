@@ -1261,9 +1261,9 @@ def l69_indexed_neardup(spark, sf_dir, _force_gram_path: bool = False):
     test_gram_index_row_groups_prunable (gram-table form: sorted buckets
     give footer-stats row-group pruning on the gram key — the s8
     write_clustered evidence extended to the index, VERDICT r7 item #8).
-    Index staging is charged once per session, same policy as the
-    streaming staging cache — a real deployment maintains the index at
-    ingest, not per query."""
+    Index staging is charged once per session, as stream sources are
+    staged once per dataset (io.staged_dir) — a real deployment maintains
+    the index at ingest, not per query."""
     docs = T(spark, sf_dir, "documents")
     from google_analytics_dataframes_spark.operators.dedup import char_ngrams
 

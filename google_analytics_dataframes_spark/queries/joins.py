@@ -19,7 +19,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from google_analytics_dataframes_spark.registry import register
-from google_analytics_dataframes_spark.queries._util import T, dsum, dsum_sql
+from google_analytics_dataframes_spark.queries._util import (
+    T,
+    dsum,
+    dsum_sql,
+    pinned_confs,
+)
 
 
 @register(
@@ -483,18 +488,9 @@ def j16_aqe_skew_join(spark, sf_dir):
 
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     out = scratch_dir(f"skewjoin_{sf_tag}")
-    saved = {k: spark.conf.get(k, None) for k in _SKEW_CONFS}
-    try:
-        for k, v in _SKEW_CONFS.items():
-            spark.conf.set(k, v)
+    with pinned_confs(spark, _SKEW_CONFS):
         shutil.rmtree(out, ignore_errors=True)
         skew_join_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.read.parquet(out)
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from google_analytics_dataframes_spark.io import fanout
 from google_analytics_dataframes_spark.registry import register
-from google_analytics_dataframes_spark.queries._util import T
+from google_analytics_dataframes_spark.queries._util import T, pinned_confs
 
 
 @register(
@@ -744,9 +744,7 @@ def sf21_sql_scripting(spark, sf_dir):
     ordinary distributed plans — scripting adds sequencing, never a
     per-row loop."""
     T(spark, sf_dir, "events").createOrReplaceTempView("sf21_events")
-    saved = spark.conf.get("spark.sql.scripting.enabled", None)
-    try:
-        spark.conf.set("spark.sql.scripting.enabled", "true")
+    with pinned_confs(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -765,11 +763,6 @@ def sf21_sql_scripting(spark, sf_dir):
             END
             """
         )
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", saved)
 
 
 @register(

@@ -34,7 +34,12 @@ from google_analytics_dataframes_spark.io import (
     table_fingerprint,
 )
 from google_analytics_dataframes_spark.registry import register
-from google_analytics_dataframes_spark.queries._util import T, dsum, dsum_sql
+from google_analytics_dataframes_spark.queries._util import (
+    T,
+    dsum,
+    dsum_sql,
+    pinned_confs,
+)
 
 
 @register(
@@ -923,18 +928,9 @@ def s20_bloom_pruned_join(spark, sf_dir):
     result."""
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     out = scratch_dir(f"bloom_join_{sf_tag}")
-    saved = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            spark.conf.set(k, v)
+    with pinned_confs(spark, _BLOOM_CONFS):
         shutil.rmtree(out, ignore_errors=True)
         bloom_join_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.read.parquet(out)
 
 
@@ -1005,15 +1001,8 @@ def s21_dynamic_partition_overwrite(spark, sf_dir):
         .withColumn("value", F.col("value") * 2)
         .repartition(F.col("day"))
     )
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with pinned_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         restated.write.partitionBy("day").mode("overwrite").parquet(out)
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
     back = spark.read.parquet(out)
     # idempotent across runs: the restated partition is rebuilt from the
     # SOURCE each time, so a cached staging dir that was already restated

@@ -16,9 +16,14 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from google_analytics_dataframes_spark.io import load_table, scratch_dir, staged_dir
 from google_analytics_dataframes_spark.registry import register
-from google_analytics_dataframes_spark.session import state
-from google_analytics_dataframes_spark.queries._util import T, dsum, dsum_sql
+from google_analytics_dataframes_spark.queries._util import (
+    T,
+    dsum,
+    dsum_sql,
+    pinned_confs,
+)
 
 _DEC = "decimal(30,6)"
 
@@ -157,229 +162,159 @@ def st3_sessionize(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# Staging-directory cache: the source directory a stream reads is FIXTURE
-# scaffolding (a real deployment reads an existing bus/landing zone), so
-# re-materializing it on every query invocation would charge the measured
-# stream a parquet write it doesn't own.  Memoized in the session's state
-# under (variant, dataset, file fingerprint), so a new session, a
-# different sf, or regenerated testdata re-stages; the cached dir is
-# re-validated on disk before reuse (the scratch sweep only removes
-# other-process orphans, but cheap paranoia).
-def _stage_cached(spark, sf_dir: str, variant: str):
-    import os
+# Stream sources.  The directory a stream reads is FIXTURE scaffolding (a
+# real deployment reads an existing bus/landing zone), so staging it on
+# every invocation would charge the measured stream a parquet write it
+# doesn't own.  Staging goes to the same two places as every other
+# fixture: each source below is a read-only directory published by
+# io.staged_dir, keyed on the table it is built from, so a different sf
+# or a regenerated table re-stages; checkpoints, sinks and any directory
+# a query writes into go to io.scratch_dir.  No consumer writes into a
+# staged source (st17 copies its phases into a per-run directory).
+def _stream_source(sf_dir: str, table: str, name: str, pieces) -> str:
+    """Publish an ordered stream source built from ``table``: ``pieces()``
+    returns ``(label, piece)`` pairs, a piece being a DataFrame (each part
+    file of its write becomes the next file) or a pyarrow Table (written
+    as one file).  The files land flat in one directory with ascending
+    mtimes, so FileStreamSource's initial listing (mtime order) replays
+    them in piece order.  ``pieces`` runs only when the source is built."""
 
-    from google_analytics_dataframes_spark.io import table_fingerprint
+    def build(path: str) -> None:
+        import os
+        import shutil
 
-    key = (
-        "stage",
-        variant,
-        os.path.abspath(sf_dir),
-        table_fingerprint(sf_dir, "events"),
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        os.makedirs(path)
+        stage = os.path.join(path, "_stage")  # '_' names are never listed
+        n = 0
+        for label, piece in pieces():
+            if isinstance(piece, pa.Table):
+                os.makedirs(stage)
+                pq.write_table(piece, os.path.join(stage, "part-0.parquet"))
+            else:
+                piece.write.parquet(stage)
+            for fname in sorted(os.listdir(stage)):
+                if fname.endswith(".parquet"):
+                    dst = os.path.join(path, f"{n}_{label}.parquet")
+                    os.rename(os.path.join(stage, fname), dst)
+                    t = 1_700_000_000 + n * 60
+                    os.utime(dst, (t, t))
+                    n += 1
+            shutil.rmtree(stage)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    return staged_dir(sf_dir, table, name, build)
+
+
+def _wire_events(spark, sf_dir: str):
+    """events with ``ts`` back in its raw epoch-ns LONG wire format (the
+    schema jobs.read_event_stream reads)."""
+    return load_table(spark, sf_dir, "events").withColumn(
+        "ts", F.unix_micros("ts") * 1000
     )
-    d = state(spark).get(key)
-    return key, (d if d is not None and os.path.isdir(d) else None)
+
+
+def _marker_events(ts_ns: int, *rows: tuple[int, str]):
+    """A pyarrow table of marker events at ``ts_ns``, one per ``(id,
+    event_type)``; the negative id is both event_id and user_id, so a
+    marker never matches a real row and every consumer can filter it.
+    Written directly: a Spark write job per marker file cost ~4 s each,
+    all of it scaffolding."""
+    import pyarrow as pa
+
+    ids = [i for i, _ in rows]
+    return pa.table(
+        {
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array([ts_ns] * len(rows), pa.int64()),
+            "user_id": pa.array(ids, pa.int64()),
+            "event_type": pa.array([t for _, t in rows], pa.string()),
+            "value": pa.array([0.0] * len(rows), pa.float64()),
+            "props": pa.array(["{}"] * len(rows), pa.string()),
+        }
+    )
 
 
 def _stage_stream_dir(spark, sf_dir: str, ordered: bool) -> str:
-    """Copy events.parquet into a directory of 4 files (FileStreamSource
-    wants a directory).  ``ordered=True`` range-partitions on ts and stamps
-    ascending mtimes so the initial listing replays files in event-time
-    order — required for watermarked stream-stream joins (a random split
-    would evict state still needed by older rows arriving later)."""
-    import os
+    """events as a stream source (FileStreamSource wants a directory).
+    ``ordered=True`` range-partitions on ts into 4 files, replayed in
+    event-time order — required for watermarked stream-stream joins (a
+    random split would evict state still needed by older rows arriving
+    later).  Unordered is a plain 2-way split: 2 files -> 2 microbatches,
+    enough to prove per-batch replanning of a static side without paying
+    4 batch fixed costs per sweep."""
 
-    from google_analytics_dataframes_spark.io import load_table, scratch_dir
+    def pieces():
+        ev = _wire_events(spark, sf_dir)
+        if ordered:
+            return [("ord", ev.repartitionByRange(4, "ts"))]
+        return [("raw", ev.repartition(2))]
 
-    tag = "ord" if ordered else "raw"
-    key, cached = _stage_cached(spark, sf_dir, f"stream_{tag}")
-    if cached is not None:
-        return cached
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    d = scratch_dir(f"stream_{tag}_{sf_tag}")
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.unix_micros("ts") * 1000  # back to raw ns LONG wire format
-    )
-    if ordered:
-        ev.repartitionByRange(4, "ts").write.mode("overwrite").parquet(d)
-        parts = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-        for i, fname in enumerate(parts):
-            t = 1_700_000_000 + i * 60
-            os.utime(os.path.join(d, fname), (t, t))
-    else:
-        # 2 files -> 2 microbatches: enough to prove per-batch replanning of
-        # the static side without paying 4 batch fixed costs per sweep
-        ev.repartition(2).write.mode("overwrite").parquet(d)
-    state(spark)[key] = d
-    return d
+    name = "stream_ord" if ordered else "stream_raw"
+    return _stream_source(sf_dir, "events", name, pieces)
 
 
 def _stage_stream_dir_with_replays(spark, sf_dir: str) -> str:
-    """Stage events as an AT-LEAST-ONCE stream: file 1 is the complete
-    table, file 2 replays every 5th event (the redelivery a real bus
-    produces on ack timeout / consumer restart).  Ascending mtimes make the
-    initial listing deliver the full pass before the replays, so the replay
-    batch exercises the dedup state rather than racing it."""
-    import os
-    import shutil
+    """events as an AT-LEAST-ONCE stream: file 0 is the complete table,
+    file 1 replays every 5th event (the redelivery a real bus produces on
+    ack timeout / consumer restart).  The full pass is delivered before
+    the replays, so the replay batch exercises the dedup state rather
+    than racing it."""
 
-    from google_analytics_dataframes_spark.io import load_table, scratch_dir
+    def pieces():
+        ev = _wire_events(spark, sf_dir)
+        replay = ev.filter(F.col("event_id") % 5 == 0)
+        return [("full", ev.coalesce(1)), ("replay", replay.coalesce(1))]
 
-    key, cached = _stage_cached(spark, sf_dir, "stream_dup")
-    if cached is not None:
-        return cached
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    d = scratch_dir(f"stream_dup_{sf_tag}")
-    stage = d + "_stage"
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.unix_micros("ts") * 1000  # raw ns LONG wire format
-    )
-    ev.coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "full"))
-    ev.filter(F.col("event_id") % 5 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "replay"))
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    for i, sub in enumerate(("full", "replay")):
-        [part] = [
-            f for f in os.listdir(os.path.join(stage, sub)) if f.endswith(".parquet")
-        ]
-        dst = os.path.join(d, f"{i}_{sub}.parquet")
-        shutil.copyfile(os.path.join(stage, sub, part), dst)
-        t = 1_700_000_000 + i * 60
-        os.utime(dst, (t, t))
-    shutil.rmtree(stage, ignore_errors=True)
-    state(spark)[key] = d
-    return d
+    return _stream_source(sf_dir, "events", "stream_dup", pieces)
 
 
-def _stage_stream_dir_with_flush(
-    spark, sf_dir: str, n_sentinels: int = 1, sentinel_hours: tuple = None
-) -> str:
-    """Ordered staging (see `_stage_stream_dir`) plus ``n_sentinels`` final
-    SENTINEL files, each holding one event 2h/4h/... past max(ts) for
-    pseudo-user -1.  Append-mode stateful queries only emit what the
-    data-derived watermark has passed; the sentinel is the explicit
-    end-of-stream clock advance that finalizes every real session/window
-    (its own state stays beyond the watermark and never emits).  Real
-    buses do the same with idle-time punctuations.
+def _stage_stream_dir_with_flush(spark, sf_dir: str, sentinel_hours: int = 2) -> str:
+    """The ordered source (see `_stage_stream_dir`) plus a final SENTINEL
+    file: one event per side, a view and a purchase for pseudo-users
+    -1/-2, ``sentinel_hours`` past max(ts).  Append-mode stateful queries
+    only emit what the data-derived watermark has passed; the sentinel is
+    the explicit end-of-stream clock advance that finalizes every real
+    session/window (its own state stays beyond the watermark and never
+    emits).  Real buses do the same with idle-time punctuations.
 
-    Why anyone needs TWO: Spark applies the watermark with a one-batch
-    delay — the watermark used while processing batch N derives from data
-    seen through batch N-1 — and stream-stream OUTER joins emit their
-    null-extended rows only on state eviction under the APPLIED
-    watermark.  With a single sentinel, the sentinel's own batch is the
-    last batch, so the watermark it advances is never applied and
-    preserved rows from the final `lateness` window never get their null
-    verdict (measured: st16 dropped exactly the last-2h unmatched
-    purchases).  A second, later sentinel file forces one more batch in
-    which the first sentinel's watermark is live.  Session windows (st14)
-    don't need this: their eviction check runs against the batch-start
-    watermark, which the single sentinel has already advanced by then."""
-    import os
-    import shutil
+    One row PER EVENT TYPE the downstream query splits on: a
+    multi-watermark query (stream-stream join: views side + purchases
+    side) takes the MIN across its watermark operators, so a view-only
+    sentinel leaves the purchase-side watermark — and with it the global
+    one — stuck `lateness` behind the last real purchase (measured:
+    st16's final-2h null verdicts never flushed).  The default 2 h is
+    exactly `lateness` past max(ts); st16, which applies the sentinel's
+    watermark in the batch where it must already CLEAR max(ts), passes 3
+    for an hour of margin."""
 
-    from google_analytics_dataframes_spark.io import load_table, scratch_dir
+    def pieces():
+        ev = _wire_events(spark, sf_dir)
+        sent_ns = ev.agg(F.max("ts")).first()[0] + sentinel_hours * 3600 * 10**9
+        sentinel = _marker_events(sent_ns, (-1, "view"), (-2, "purchase"))
+        return [("ord", ev.repartitionByRange(4, "ts")), ("sentinel", sentinel)]
 
-    # default spacing 2h/4h/...: exactly `lateness` past max(ts), the
-    # historical layout; callers that apply the sentinel watermark in a
-    # batch where it must already CLEAR max(ts) (st16's single-data-batch
-    # layout) pass explicit hours with margin above lateness.
-    if sentinel_hours is None:
-        sentinel_hours = tuple(2 * (s + 1) for s in range(n_sentinels))
-    assert len(sentinel_hours) == n_sentinels
-    hrs_tag = "_".join(str(h) for h in sentinel_hours)
-    key, cached = _stage_cached(
-        spark, sf_dir, f"stream_flush{n_sentinels}h{hrs_tag}"
-    )
-    if cached is not None:
-        return cached
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    d = scratch_dir(f"stream_flush{n_sentinels}h{hrs_tag}_{sf_tag}")
-    base = _stage_stream_dir(spark, sf_dir, ordered=True)
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    parts = sorted(f for f in os.listdir(base) if f.endswith(".parquet"))
-    for i, fname in enumerate(parts):
-        dst = os.path.join(d, f"{i}_{fname}")
-        shutil.copyfile(os.path.join(base, fname), dst)
-        t = 1_700_000_000 + i * 60
-        os.utime(dst, (t, t))
-    ev = load_table(spark, sf_dir, "events")
-    max_ns = ev.agg(F.max(F.unix_micros("ts"))).first()[0] * 1000
-    # sentinel files are written DIRECTLY with pyarrow — one 2-row file
-    # per sentinel; spinning up a Spark write job per sentinel cost ~4 s
-    # each (stream-probe measurement: 14 s staging for the 3-sentinel
-    # variant), all of it scaffolding overhead
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for s in range(n_sentinels):
-        # one sentinel row PER EVENT TYPE the downstream query splits on:
-        # a multi-watermark query (stream-stream join: views side +
-        # purchases side) takes the MIN across its watermark operators,
-        # so a view-only sentinel leaves the purchase-side watermark — and
-        # with it the global one — stuck `lateness` behind the last real
-        # purchase (measured: st16's final-2h null verdicts never
-        # flushed).  Sentinel rows all carry negative user ids; every
-        # consumer filters them (or, for joins, they can never match a
-        # real row).
-        sent_ts = max_ns + int(sentinel_hours[s] * 3600) * 1_000_000_000
-        table = pa.table(
-            {
-                "event_id": pa.array([-1 - 2 * s, -2 - 2 * s], pa.int64()),
-                "ts": pa.array([sent_ts, sent_ts], pa.int64()),
-                "user_id": pa.array([-1 - 2 * s, -2 - 2 * s], pa.int64()),
-                "event_type": pa.array(["view", "purchase"], pa.string()),
-                "value": pa.array([0.0, 0.0], pa.float64()),
-                "props": pa.array(["{}", "{}"], pa.string()),
-            }
-        )
-        dst = os.path.join(d, f"{len(parts) + s}_sentinel{s}.parquet")
-        pq.write_table(table, dst)
-        t = 1_700_000_000 + (len(parts) + s) * 60
-        os.utime(dst, (t, t))
-    state(spark)[key] = d
-    return d
+    return _stream_source(sf_dir, "events", f"stream_flush{sentinel_hours}h", pieces)
 
 
 def _stage_doc_stream(spark, sf_dir: str) -> str:
-    """Stage DOCUMENTS as a 2-file re-crawl stream: file 0 is the full
-    corpus (doc_id, text); file 1 "re-crawls" every 7th document — same
-    text, fresh doc_id offset past the id space (what a crawler emits
-    when it refetches a URL or hits a mirror).  Ascending mtimes deliver
-    the corpus before the re-crawls, so the replay batch exercises
-    existing dedup state."""
-    import os
+    """DOCUMENTS as a 2-file re-crawl stream: file 0 is the full corpus
+    (doc_id, text); file 1 "re-crawls" every 7th document — same text,
+    fresh doc_id offset past the id space (what a crawler emits when it
+    refetches a URL or hits a mirror).  The corpus is delivered before
+    the re-crawls, so the replay batch exercises existing dedup state."""
 
-    from google_analytics_dataframes_spark.io import load_table, scratch_dir
+    def pieces():
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        n = docs.agg(F.max("doc_id")).first()[0] + 1
+        recrawl = docs.filter(F.col("doc_id") % 7 == 0).select(
+            (F.col("doc_id") + F.lit(n)).alias("doc_id"), "text"
+        )
+        return [("full", docs.coalesce(1)), ("recrawl", recrawl.coalesce(1))]
 
-    key, cached = _stage_cached(spark, sf_dir, "stream_docs")
-    if cached is not None:
-        return cached
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    d = scratch_dir(f"stream_docs_{sf_tag}")
-    import shutil
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n = docs.agg(F.max("doc_id")).first()[0] + 1
-    stage = d + "_stage"
-    docs.coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "full"))
-    docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + F.lit(n)).alias("doc_id"), "text"
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "recrawl"))
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    for i, sub in enumerate(("full", "recrawl")):
-        [part] = [
-            f for f in os.listdir(os.path.join(stage, sub)) if f.endswith(".parquet")
-        ]
-        dst = os.path.join(d, f"{i}_{sub}.parquet")
-        shutil.copyfile(os.path.join(stage, sub, part), dst)
-        t = 1_700_000_000 + i * 60
-        os.utime(dst, (t, t))
-    shutil.rmtree(stage, ignore_errors=True)
-    state(spark)[key] = d
-    return d
+    return _stream_source(sf_dir, "documents", "stream_docs", pieces)
 
 
 @register(
@@ -417,7 +352,7 @@ def st15_stream_content_dedup(spark, sf_dir):
     docs = spark.readStream.schema("doc_id long, text string").option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    with _few_state_partitions(spark):
+    with pinned_confs(spark, _state_partitions()):
         out = jobs.run_available_now(
             jobs.st15_content_dedup(docs),
             f"st15_mem_{uuid.uuid4().hex[:8]}",
@@ -426,24 +361,14 @@ def st15_stream_content_dedup(spark, sf_dir):
     return out.select("keeper_id", "n_seen")
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _few_state_partitions(spark, n: int = 8):
-    """Run a stateful streaming job with few shuffle (= state store)
-    partitions, restoring the session conf after.  Stateful microbatches
-    pay per-state-partition overhead (store open/commit/checkpoint) every
-    batch and AQE is disabled for them, so 32 partitions x 4 batches of
-    tiny state is pure fixed cost: 25s -> a few seconds at sf0.01.  At
-    real scale the caller sizes this to state volume instead."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+def _state_partitions(n: int = 8) -> dict[str, str]:
+    """Confs to pin a stateful streaming job to few shuffle (= state
+    store) partitions.  Stateful microbatches pay per-state-partition
+    overhead (store open/commit/checkpoint) every batch and AQE is
+    disabled for them, so 32 partitions x 4 batches of tiny state is pure
+    fixed cost: 25s -> a few seconds at sf0.01.  At real scale the caller
+    sizes this to state volume instead."""
+    return {"spark.sql.shuffle.partitions": str(n)}
 
 
 def _sized_state_partitions(sf_dir: str) -> int:
@@ -461,7 +386,7 @@ def _sized_state_partitions(sf_dir: str) -> int:
     lands on each measured optimum: sf0.01 -> 8 (per-partition store
     open/commit dominates tiny state), sf0.1 -> 16, 10x -> 32.  This is
     the "caller sizes this to state volume" note on
-    _few_state_partitions made executable; on a real cluster the same
+    _state_partitions made executable; on a real cluster the same
     rule maps state partitions to total executor cores."""
     import os
 
@@ -479,30 +404,15 @@ def _sized_state_partitions(sf_dir: str) -> int:
     return max(8, min(32, b // (1 << 17)))
 
 
-@contextmanager
-def _rocksdb_state_provider(spark):
-    """Switch the state-store provider to RocksDB for the block, restoring
-    the previous conf (or unsetting an absent one) after.  TWS stores each
-    typed state variable in its own column family, which only the RocksDB
-    provider supports (HDFSBackedStateStore raises
-    STATE_STORE_UNSUPPORTED_OPERATION: multipleColumnFamilies); the
-    GroupState-tier streams keep the default provider.  One shared
-    implementation (review r8): three hand-rolled copies of this
-    save/restore dance had already drifted in their restore idiom."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+#: TWS stores each typed state variable in its own column family, which
+#: only the RocksDB state-store provider supports (HDFSBackedStateStore
+#: raises STATE_STORE_UNSUPPORTED_OPERATION: multipleColumnFamilies); the
+#: GroupState-tier streams keep the default provider.
+_ROCKSDB_STATE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
-    try:
-        yield
-    finally:
-        if old is not None:
-            spark.conf.set(key, old)
-        else:
-            spark.conf.unset(key)
+}
 
 
 @register(
@@ -537,7 +447,7 @@ def st9_stream_interval_join(spark, sf_dir):
     # same time-ordered arrival (batches take consecutive file groups),
     # half the per-batch state-store fixed cost.
     stream = jobs.read_event_stream(spark, src, files_per_trigger=2)
-    with _few_state_partitions(spark):
+    with pinned_confs(spark, _state_partitions()):
         out = jobs.run_available_now_parquet(
             jobs.st9_attribution_join(stream),
             f"st9_pq_{uuid.uuid4().hex[:8]}",
@@ -566,10 +476,9 @@ def st10_stream_static_enrich(spark, sf_dir):
     stream joins a static customer dimension per microbatch
     (streaming/jobs.py st10_stream_static_enrich).  Stateless — no
     watermark, no join state; file order is irrelevant, so the staged
-    source is a plain 4-way split."""
+    source is a plain 2-way split."""
     import uuid
 
-    from google_analytics_dataframes_spark.io import load_table
     from google_analytics_dataframes_spark.streaming import jobs
 
     src = _stage_stream_dir(spark, sf_dir, ordered=False)
@@ -637,11 +546,9 @@ def st16_stream_outer_join(spark, sf_dir):
     # straddle the eviction predicate.  2 microbatches total (was 3), 5
     # staged files (was 7): same-window A/B medians 4.85 -> 2.65 s at sf0.1,
     # 4.93 -> 2.68 s at 10x, identical emitted rows (20084 / 200840).
-    src = _stage_stream_dir_with_flush(
-        spark, sf_dir, n_sentinels=1, sentinel_hours=(3,)
-    )
+    src = _stage_stream_dir_with_flush(spark, sf_dir, sentinel_hours=3)
     stream = jobs.read_event_stream(spark, src, files_per_trigger=5)
-    with _few_state_partitions(spark):
+    with pinned_confs(spark, _state_partitions()):
         out = jobs.run_available_now_parquet(
             jobs.st16_attribution_left_join(stream),
             f"st16_pq_{uuid.uuid4().hex[:8]}",
@@ -661,37 +568,20 @@ def st16_stream_outer_join(spark, sf_dir):
 
 
 def _stage_restart_phases(spark, sf_dir: str) -> str:
-    """Stage (cached) the two RESTART phases st17 replays: phase 1 = the
+    """The two RESTART phases st17 replays, one file each: phase 1 = the
     first half of events by time (ts < 2024-01-16); phase 2 = the second
     half PLUS a replay of every 5th phase-1 event.  The replays landing
     AFTER the restart are the proof obligation: only dedup state that
     SURVIVED the checkpoint restore can drop them."""
-    import os
 
-    from google_analytics_dataframes_spark.io import load_table, scratch_dir
+    def pieces():
+        ev = _wire_events(spark, sf_dir)
+        cut = F.col("ts") < F.unix_micros(F.lit("2024-01-16").cast("timestamp")) * 1000
+        p1 = ev.filter(cut)
+        p2 = ev.filter(~cut).unionAll(p1.filter(F.col("event_id") % 5 == 0))
+        return [("p1", p1.coalesce(1)), ("p2", p2.coalesce(1))]
 
-    key, cached = _stage_cached(spark, sf_dir, "restart_phases")
-    if cached is not None:
-        return cached
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    d = scratch_dir(f"restart_phases_{sf_tag}")
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_wire", F.unix_micros("ts") * 1000
-    )
-    cut = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-    p1 = ev.filter(cut)
-    p2 = ev.filter(~cut).unionAll(p1.filter(F.col("event_id") % 5 == 0))
-    for name, df in (("p1", p1), ("p2", p2)):
-        df.select(
-            "event_id",
-            F.col("ts_wire").alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(d, name))
-    state(spark)[key] = d
-    return d
+    return _stream_source(sf_dir, "events", "stream_restart", pieces)
 
 
 @register(
@@ -726,7 +616,6 @@ def st17_stream_restart_resume(spark, sf_dir):
     import shutil
     import uuid
 
-    from google_analytics_dataframes_spark.io import scratch_dir
     from google_analytics_dataframes_spark.streaming import jobs
 
     phases = _stage_restart_phases(spark, sf_dir)
@@ -738,17 +627,9 @@ def st17_stream_restart_resume(spark, sf_dir):
         shutil.rmtree(dpath, ignore_errors=True)
     os.makedirs(live)
 
-    def add_phase(name: str, mtime: int) -> None:
-        src = os.path.join(phases, name)
-        for fn in os.listdir(src):
-            if fn.endswith(".parquet"):
-                dst = os.path.join(live, f"{name}_{fn}")
-                shutil.copyfile(os.path.join(src, fn), dst)
-                os.utime(dst, (mtime, mtime))
-
     def run_once() -> None:
         stream = jobs.read_event_stream(spark, live, files_per_trigger=1)
-        with _few_state_partitions(spark):
+        with pinned_confs(spark, _state_partitions()):
             q = (
                 jobs.st11_stream_dedup(stream)
                 .writeStream.format("parquet")
@@ -760,10 +641,12 @@ def st17_stream_restart_resume(spark, sf_dir):
             )
             q.awaitTermination()
 
-    add_phase("p1", 1_700_000_000)
-    run_once()  # run 1: first half, then the query STOPS
-    add_phase("p2", 1_700_000_060)
-    run_once()  # run 2: resumes from the checkpoint; replays must dedup
+    # run 1: first half, then the query STOPS; run 2 resumes from the
+    # checkpoint over the grown directory, where the replays must dedup.
+    # copy2 keeps the staged mtimes, so the listing stays in phase order.
+    for fname in sorted(f for f in os.listdir(phases) if f.endswith(".parquet")):
+        shutil.copy2(os.path.join(phases, fname), live)
+        run_once()
     # the checkpoint and the per-invocation SOURCE copy are both done —
     # only `out` stays (the returned DataFrame reads it lazily)
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -813,7 +696,7 @@ def st12_stream_stateful_funnel(spark, sf_dir):
     # cross-batch carry-over this row exists to prove was vacuous
     # (tests/test_streaming.py pins multi-update users now).
     stream = jobs.read_event_stream(spark, src, files_per_trigger=1)
-    with _few_state_partitions(spark):
+    with pinned_confs(spark, _state_partitions()):
         out = jobs.run_available_now(
             jobs.st6_stateful_funnel(stream),
             f"st12_mem_{uuid.uuid4().hex[:8]}",
@@ -876,12 +759,12 @@ def st18_stream_typed_state(spark, sf_dir):
     # st12): the MapState/ValueState written in batch 1 must be READ BACK
     # in batch 2 or the typed-state carry-over proof is vacuous
     stream = jobs.read_event_stream(spark, src, files_per_trigger=1)
-    with _rocksdb_state_provider(spark):
+    with pinned_confs(spark, _ROCKSDB_STATE):
         with armed_worker_env(spark):
             # plan construction must happen inside the armed block — this
             # is where the python function's envVars are captured
             tws = jobs.st18_typed_state_census(stream)
-        with _few_state_partitions(spark, _sized_state_partitions(sf_dir)):
+        with pinned_confs(spark, _state_partitions(_sized_state_partitions(sf_dir))):
             out = jobs.run_available_now(
                 tws, f"st18_mem_{uuid.uuid4().hex[:8]}", output_mode="update"
             )
@@ -960,10 +843,10 @@ def st19_stream_timer_sessions(spark, sf_dir):
 
     src = _stage_stream_dir_with_flush(spark, sf_dir)
     stream = jobs.read_event_stream(spark, src, files_per_trigger=3)
-    with _rocksdb_state_provider(spark):
+    with pinned_confs(spark, _ROCKSDB_STATE):
         with armed_worker_env(spark):
             tws = jobs.st19_timer_sessionize(stream)
-        with _few_state_partitions(spark, _sized_state_partitions(sf_dir)):
+        with pinned_confs(spark, _state_partitions(_sized_state_partitions(sf_dir))):
             out = jobs.run_available_now_parquet(
                 tws, f"st19_pq_{uuid.uuid4().hex[:8]}"
             )
@@ -1010,7 +893,7 @@ def st13_stream_windowed_agg(spark, sf_dir):
 
     src = _stage_stream_dir(spark, sf_dir, ordered=True)
     stream = jobs.read_event_stream(spark, src, files_per_trigger=2)
-    with _few_state_partitions(spark):
+    with pinned_confs(spark, _state_partitions()):
         out = jobs.run_available_now(
             jobs.st4_watermarked_counts(stream),
             f"st13_mem_{uuid.uuid4().hex[:8]}",
@@ -1032,7 +915,7 @@ def st13_stream_windowed_agg(spark, sf_dir):
 )
 def st11_stream_dedup(spark, sf_dir):
     """Streaming ingest dedup, EXECUTED as a stream: the staged source is
-    AT-LEAST-ONCE (file 2 replays every 5th event — bus redelivery), and
+    AT-LEAST-ONCE (file 1 replays every 5th event — bus redelivery), and
     `dropDuplicatesWithinWatermark` on event_id must restore exactly-once
     (streaming/jobs.py st11_stream_dedup).  Append mode + availableNow
     through a parquet file sink (full stream volume never transits the
@@ -1045,7 +928,7 @@ def st11_stream_dedup(spark, sf_dir):
 
     src = _stage_stream_dir_with_replays(spark, sf_dir)
     stream = jobs.read_event_stream(spark, src)
-    with _few_state_partitions(spark):
+    with pinned_confs(spark, _state_partitions()):
         out = jobs.run_available_now_parquet(
             jobs.st11_stream_dedup(stream),
             f"st11_pq_{uuid.uuid4().hex[:8]}",
@@ -1123,7 +1006,7 @@ def st14_stream_sessionize(spark, sf_dir):
     # (`git show 0dd433a:tools/stream_probe_r10.py`), identical emitted
     # rows.
     stream = jobs.read_event_stream(spark, src, files_per_trigger=3)
-    with _few_state_partitions(spark):
+    with pinned_confs(spark, _state_partitions()):
         out = jobs.run_available_now_parquet(
             jobs.st3_session_stream(stream),
             f"st14_pq_{uuid.uuid4().hex[:8]}",
@@ -1141,7 +1024,7 @@ def _ck(col):
 
 
 def _stage_change_stream(spark, sf_dir: str) -> str:
-    """Stage the CDC change feed as a 2-file stream (ascending mtimes):
+    """The CDC change feed over documents as a 2-file stream:
 
     * wave 1 — deletes (doc_id%13==0) and v2 re-edits (doc_id%9==0,
       surviving);
@@ -1151,65 +1034,44 @@ def _stage_change_stream(spark, sf_dir: str) -> str:
     The v3-over-v2 overlap is the point: a sink that applies batches out
     of order, merges them as one set, or is not idempotent per version
     lands the wrong final checksum."""
-    import os
-    import shutil
 
-    from google_analytics_dataframes_spark.io import load_table, scratch_dir
-
-    key, cached = _stage_cached(spark, sf_dir, "change_stream")
-    if cached is not None:
-        return cached
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    d = scratch_dir(f"change_stream_{sf_tag}")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n = docs.agg(F.max("doc_id")).first()[0] + 1
-    did = F.col("doc_id")
-    wave1 = (
-        docs.filter(did % 13 == 0)
-        .select(
-            "doc_id",
-            F.lit("delete").alias("op"),
-            F.lit(None).cast("long").alias("ck"),
-        )
-        .unionAll(
-            docs.filter((did % 9 == 0) & (did % 13 != 0)).select(
+    def pieces():
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        n = docs.agg(F.max("doc_id")).first()[0] + 1
+        did = F.col("doc_id")
+        wave1 = (
+            docs.filter(did % 13 == 0)
+            .select(
                 "doc_id",
-                F.lit("upsert").alias("op"),
-                _ck(F.concat("text", F.lit(" v2"))).alias("ck"),
+                F.lit("delete").alias("op"),
+                F.lit(None).cast("long").alias("ck"),
+            )
+            .unionAll(
+                docs.filter((did % 9 == 0) & (did % 13 != 0)).select(
+                    "doc_id",
+                    F.lit("upsert").alias("op"),
+                    _ck(F.concat("text", F.lit(" v2"))).alias("ck"),
+                )
             )
         )
-    )
-    wave2 = (
-        docs.filter(did % 17 == 0)
-        .select(
-            (did + F.lit(n)).alias("doc_id"),
-            F.lit("upsert").alias("op"),
-            _ck(F.reverse("text")).alias("ck"),
-        )
-        .unionAll(
-            docs.filter((did % 9 == 0) & (did % 13 != 0) & (did % 2 == 0)).select(
-                "doc_id",
+        wave2 = (
+            docs.filter(did % 17 == 0)
+            .select(
+                (did + F.lit(n)).alias("doc_id"),
                 F.lit("upsert").alias("op"),
-                _ck(F.concat("text", F.lit(" v3"))).alias("ck"),
+                _ck(F.reverse("text")).alias("ck"),
+            )
+            .unionAll(
+                docs.filter((did % 9 == 0) & (did % 13 != 0) & (did % 2 == 0)).select(
+                    "doc_id",
+                    F.lit("upsert").alias("op"),
+                    _ck(F.concat("text", F.lit(" v3"))).alias("ck"),
+                )
             )
         )
-    )
-    stage = d + "_stage"
-    for sub, df in (("wave1", wave1), ("wave2", wave2)):
-        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, sub))
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    for i, sub in enumerate(("wave1", "wave2")):
-        [part] = [
-            f for f in os.listdir(os.path.join(stage, sub)) if f.endswith(".parquet")
-        ]
-        dst = os.path.join(d, f"{i}_{sub}.parquet")
-        shutil.copyfile(os.path.join(stage, sub, part), dst)
-        t = 1_700_000_000 + i * 60
-        os.utime(dst, (t, t))
-    shutil.rmtree(stage, ignore_errors=True)
-    state(spark)[key] = d
-    return d
+        return [("wave1", wave1.coalesce(1)), ("wave2", wave2.coalesce(1))]
+
+    return _stream_source(sf_dir, "documents", "stream_cdc", pieces)
 
 
 @register(
@@ -1263,8 +1125,6 @@ def st20_stream_cdc_apply(spark, sf_dir):
     import shutil
     import uuid
 
-    from google_analytics_dataframes_spark.io import load_table, scratch_dir
-
     src = _stage_change_stream(spark, sf_dir)
     run = scratch_dir(f"cdc_apply_{uuid.uuid4().hex[:8]}")
     shutil.rmtree(run, ignore_errors=True)
@@ -1315,7 +1175,7 @@ def st20_stream_cdc_apply(spark, sf_dir):
 
 
 def _stage_stream_dir_with_late(spark, sf_dir: str) -> str:
-    """Stage events as an OUT-OF-ORDER stream with an end-of-stream flush:
+    """events as an OUT-OF-ORDER stream with an end-of-stream flush:
     file 0 carries everything except a deterministic 'late' subset
     (events in the timeline's first 6 hours with event_id % 7 == 0);
     file 1 is a single '__mid__' marker at max(ts) that APPLIES the
@@ -1336,73 +1196,28 @@ def _stage_stream_dir_with_late(spark, sf_dir: str) -> str:
     guarantee lives: each window emits exactly once when finalized, so
     the engine MUST filter late rows for already-final windows or emit a
     duplicate key the oracle would catch."""
-    import os
-    import shutil
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from google_analytics_dataframes_spark.io import load_table, scratch_dir
-
-    key, cached = _stage_cached(spark, sf_dir, "stream_late")
-    if cached is not None:
-        return cached
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    d = scratch_dir(f"stream_late_{sf_tag}")
-    stage = d + "_stage"
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()  # metadata-sized
-    is_late = (F.col("ts_us") < lo + 6 * 3_600_000_000) & (
-        F.col("event_id") % 7 == 0
-    )
-    wire = ev.withColumn("ts", F.col("ts_us") * 1000).drop("ts_us")
-    wire.filter(~is_late).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage, "ontime")
-    )
-    wire.filter(is_late).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage, "late")
-    )
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    def _marker(fname_idx, name, ts_ns, etype):
-        table = pa.table(
-            {
-                "event_id": pa.array([-1 - fname_idx], pa.int64()),
-                "ts": pa.array([ts_ns], pa.int64()),
-                "user_id": pa.array([-1 - fname_idx], pa.int64()),
-                "event_type": pa.array([etype], pa.string()),
-                "value": pa.array([0.0], pa.float64()),
-                "props": pa.array(["{}"], pa.string()),
-            }
-        )
-        dst = os.path.join(d, f"{fname_idx}_{name}.parquet")
-        pq.write_table(table, dst)
-        t = 1_700_000_000 + fname_idx * 60
-        os.utime(dst, (t, t))
-
-    # file order = batch order: bulk, MID (applies the bulk-derived
-    # watermark so the early windows finalize and emit BEFORE the
-    # stragglers arrive — Spark's late-event filter runs against the
-    # PREVIOUS batch's watermark, so late rows only one batch behind the
-    # bulk still merge; measured), then the late file, then the double
-    # flush.  Marker rows carry '__'-prefixed event types the query
-    # filters post-sink.
-    for i, sub in ((0, "ontime"), (2, "late")):
-        [part] = [
-            f for f in os.listdir(os.path.join(stage, sub)) if f.endswith(".parquet")
+    def pieces():
+        ev = _wire_events(spark, sf_dir)
+        lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()  # metadata-sized
+        hour = 3600 * 10**9
+        is_late = (F.col("ts") < lo + 6 * hour) & (F.col("event_id") % 7 == 0)
+        # file order = batch order: bulk, MID (applies the bulk-derived
+        # watermark so the early windows finalize and emit BEFORE the
+        # stragglers arrive — Spark's late-event filter runs against the
+        # PREVIOUS batch's watermark, so late rows only one batch behind
+        # the bulk still merge; measured), then the late file, then the
+        # double flush.  Marker rows carry '__'-prefixed event types the
+        # query filters post-sink.
+        return [
+            ("ontime", ev.filter(~is_late).coalesce(1)),
+            ("mid", _marker_events(hi, (-2, "__mid__"))),
+            ("late", ev.filter(is_late).coalesce(1)),
+            ("sentinel0", _marker_events(hi + 2 * hour, (-4, "__flush__"))),
+            ("sentinel1", _marker_events(hi + 4 * hour, (-5, "__flush__"))),
         ]
-        dst = os.path.join(d, f"{i}_{sub}.parquet")
-        shutil.copyfile(os.path.join(stage, sub, part), dst)
-        t = 1_700_000_000 + i * 60
-        os.utime(dst, (t, t))
-    _marker(1, "mid", hi * 1000, "__mid__")
-    _marker(3, "sentinel0", (hi + 2 * 3600 * 1_000_000) * 1000, "__flush__")
-    _marker(4, "sentinel1", (hi + 4 * 3600 * 1_000_000) * 1000, "__flush__")
-    shutil.rmtree(stage, ignore_errors=True)
-    state(spark)[key] = d
-    return d
+
+    return _stream_source(sf_dir, "events", "stream_late", pieces)
 
 
 @register(
@@ -1447,7 +1262,7 @@ def st21_stream_late_drop(spark, sf_dir):
 
     src = _stage_stream_dir_with_late(spark, sf_dir)
     stream = jobs.read_event_stream(spark, src, files_per_trigger=1)
-    with _few_state_partitions(spark):
+    with pinned_confs(spark, _state_partitions()):
         out = jobs.run_available_now(
             jobs.st4_watermarked_counts(stream),
             f"st21_mem_{uuid.uuid4().hex[:8]}",

@@ -962,25 +962,17 @@ def test_s20_bloom_filter_injected(spark):
     without running the join (review r8: an earlier version executed the
     full join through a noop sink and then asserted on a fresh
     queryExecution anyway — dead work)."""
+    from google_analytics_dataframes_spark.queries._util import pinned_confs
     from google_analytics_dataframes_spark.queries.scans import (
         _BLOOM_CONFS,
         bloom_join_frame,
     )
 
-    saved = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            spark.conf.set(k, v)
+    with pinned_confs(spark, _BLOOM_CONFS):
         df = bloom_join_frame(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "bloom_filter_agg" in plan
         assert "might_contain" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_s21_dynamic_overwrite_touches_only_target_partition(spark):
@@ -1028,26 +1020,18 @@ def test_j16_aqe_splits_the_skewed_partition(spark):
     sort-merge join and the skewed shuffle read.  Also re-documents the
     mapper-granularity constraint: the frame's fanout(32) is what makes
     the hot partition splittable at all."""
+    from google_analytics_dataframes_spark.queries._util import pinned_confs
     from google_analytics_dataframes_spark.queries.joins import (
         _SKEW_CONFS,
         skew_join_frame,
     )
 
-    saved = {k: spark.conf.get(k, None) for k in _SKEW_CONFS}
-    try:
-        for k, v in _SKEW_CONFS.items():
-            spark.conf.set(k, v)
+    with pinned_confs(spark, _SKEW_CONFS):
         df = skew_join_frame(spark, SF_DIR)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan
         assert "skewed" in plan  # AQEShuffleRead ... skewed
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_j17_binned_interval_join_is_equi_on_bin(spark):

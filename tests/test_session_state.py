@@ -26,7 +26,7 @@ import textwrap
 from pathlib import Path
 
 from google_analytics_dataframes_spark import session
-from google_analytics_dataframes_spark.io import load_table, load_tables
+from google_analytics_dataframes_spark.io import TABLES, load_table
 from google_analytics_dataframes_spark.session import RUNTIME_CONFS
 from tests.conftest import SF_DIR, small_env
 
@@ -179,10 +179,13 @@ def test_reused_context_starts_no_warm_up_thread(spark, monkeypatch):
 def test_new_session_gets_its_own_confs_and_views(spark):
     """``spark.newSession()`` shares the SparkContext (same
     applicationId) but not the SQL conf or temp views, so its memos must
-    be its own: configure() applies the runtime confs to it, and
-    load_tables registers the views in IT, not in the first session."""
+    be its own: configure() applies the runtime confs to it, and the
+    views registered from its tables live in IT, not in the first
+    session."""
     s2 = spark.newSession()
-    tables = load_tables(s2, SF_DIR)
+    tables = {name: load_table(s2, SF_DIR, name) for name in TABLES}
+    for name, df in tables.items():
+        df.createOrReplaceTempView(name)
     for k, v in RUNTIME_CONFS.items():
         assert s2.conf.get(k) == v, k
     assert all(df.sparkSession is s2 for df in tables.values())
@@ -237,7 +240,8 @@ def test_concurrent_staging_does_not_clobber(tmp_path):
     """Two driver processes run the staging rows at the same moment over
     one fresh temp dir, so both race every build: the sink round-trips
     (s4, s5, s7, s8) write per-process scratch, and s11's shared fixture
-    is published by one atomic rename.  Both must match their oracles."""
+    and the st11/st15 stream sources are each published by one atomic
+    rename.  Both must match their oracles."""
     barrier = tmp_path / "barrier"
     barrier.mkdir()
     script = textwrap.dedent(
@@ -251,7 +255,8 @@ def test_concurrent_staging_does_not_clobber(tmp_path):
         deadline = time.time() + 120
         while len(os.listdir(barrier)) < 2 and time.time() < deadline:
             time.sleep(0.05)
-        sys.argv = ["check.py", "s4_", "s5_", "s7_", "s8_", "s11_", "--sf", sf]
+        sys.argv = ["check.py", "s4_", "s5_", "s7_", "s8_", "s11_", "st11_", "st15_",
+                    "--sf", sf]
         runpy.run_path("tools/check.py", run_name="__main__")
         """
     )
@@ -273,7 +278,7 @@ def test_concurrent_staging_does_not_clobber(tmp_path):
         for p in procs:
             p.kill()
     for p, (out, err) in zip(procs, outs):
-        assert p.returncode == 0 and "5 passed, 0 failed" in out, (
+        assert p.returncode == 0 and "7 passed, 0 failed" in out, (
             out[-2000:],
             err[-2000:],
         )

@@ -203,30 +203,18 @@ def test_stateful_funnel_counts(spark, events_dir):
     assert (joined["purchases_s"] == joined["purchases"]).all()
 
 
-@pytest.fixture(scope="module")
-def ordered_events_dir(spark, tmp_path_factory):
-    """events split into 4 TIME-ORDERED files (range-partitioned on ts,
-    mtimes forced ascending so FileStreamSource replays them in time order).
-    Stream-stream join tests need this: with randomly-split files the
-    watermark from an early batch would evict state still needed by older
-    rows arriving later, and stream == batch would not hold."""
-    d = str(tmp_path_factory.mktemp("events_ordered"))
-    ev = load_table(spark, SF_DIR, "events")
-    ev.withColumn("ts", F.unix_micros("ts") * 1000).repartitionByRange(
-        4, "ts"
-    ).write.mode("overwrite").parquet(d)
-    # part-0000N holds the N-th ts range (range partitioner is ascending);
-    # stamp strictly increasing mtimes so the initial listing follows it.
-    parts = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(d, f), (1700000000 + i * 60, 1700000000 + i * 60))
-    return d
-
-
-def test_stream_stream_join_matches_batch(spark, ordered_events_dir):
+def test_stream_stream_join_matches_batch(spark):
     """st9: watermarked stream-stream interval self-join == the batch
-    theta-join with identical bounds (j10 semantics)."""
-    stream = jobs.read_event_stream(spark, ordered_events_dir)
+    theta-join with identical bounds (j10 semantics), over the
+    time-ordered source: with randomly-split files the watermark from an
+    early batch would evict state still needed by older rows arriving
+    later, and stream == batch would not hold."""
+    from google_analytics_dataframes_spark.queries.streaming_batch import (
+        _stage_stream_dir,
+    )
+
+    src = _stage_stream_dir(spark, SF_DIR, ordered=True)
+    stream = jobs.read_event_stream(spark, src)
     got = jobs.run_available_now(
         jobs.st9_attribution_join(stream), "t_st9", output_mode="append"
     ).toPandas()
@@ -388,14 +376,16 @@ def test_restart_resume_requires_checkpoint_state(spark):
     import uuid
 
     from google_analytics_dataframes_spark.io import load_table, scratch_dir
+    from google_analytics_dataframes_spark.queries._util import pinned_confs
     from google_analytics_dataframes_spark.queries.streaming_batch import (
-        _few_state_partitions,
         _stage_restart_phases,
+        _state_partitions,
     )
     from google_analytics_dataframes_spark.streaming import jobs
     from tests.conftest import SF_DIR
 
     phases = _stage_restart_phases(spark, SF_DIR)
+    p1, p2 = sorted(f for f in os.listdir(phases) if f.endswith(".parquet"))
     rid = uuid.uuid4().hex[:8]
     live = scratch_dir(f"st17neg_src_{rid}")
     out = scratch_dir(f"st17neg_out_{rid}")
@@ -403,17 +393,9 @@ def test_restart_resume_requires_checkpoint_state(spark):
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(live)
 
-    def add_phase(name, mtime):
-        src = os.path.join(phases, name)
-        for fn in os.listdir(src):
-            if fn.endswith(".parquet"):
-                dst = os.path.join(live, f"{name}_{fn}")
-                shutil.copyfile(os.path.join(src, fn), dst)
-                os.utime(dst, (mtime, mtime))
-
     def run_once(ckpt, sink):
         stream = jobs.read_event_stream(spark, live, files_per_trigger=1)
-        with _few_state_partitions(spark):
+        with pinned_confs(spark, _state_partitions()):
             q = (
                 jobs.st11_stream_dedup(stream)
                 .writeStream.format("parquet")
@@ -430,9 +412,9 @@ def test_restart_resume_requires_checkpoint_state(spark):
     out2 = scratch_dir(f"st17neg_out2_{rid}")
     for d in (ck1, ck2, out2):
         shutil.rmtree(d, ignore_errors=True)
-    add_phase("p1", 1_700_000_000)
+    shutil.copy2(os.path.join(phases, p1), live)  # keeps the staged mtime
     run_once(ck1, out)
-    add_phase("p2", 1_700_000_060)
+    shutil.copy2(os.path.join(phases, p2), live)
     run_once(ck2, out2)  # FRESH checkpoint + sink: the broken resume
     n_exact = load_table(spark, SF_DIR, "events").count()
     n_got = (
@@ -441,6 +423,46 @@ def test_restart_resume_requires_checkpoint_state(spark):
     assert n_got > n_exact, (n_got, n_exact)
     for d in (live, out, out2, ck1, ck2):
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_document_streams_restage_when_documents_change(spark, tmp_path, monkeypatch):
+    """The doc stream (st15) and the CDC stream (st20) are built from
+    documents, so rewriting documents in place, events untouched, must
+    re-stage both: a new directory whose rows follow the new table.
+    Dropping doc 0 removes two rows from each source: the doc and its
+    re-crawl, and the doc's delete (0 % 13 == 0) and its insert
+    (0 % 17 == 0, re-keyed past the unchanged max id)."""
+    import tempfile
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from google_analytics_dataframes_spark.queries.streaming_batch import (
+        _stage_change_stream,
+        _stage_doc_stream,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # staged_dir's root
+    sf = tmp_path / "sfcopy"
+    sf.mkdir()
+    for name in ("documents", "events"):
+        shutil.copy(os.path.join(SF_DIR, f"{name}.parquet"), sf)
+    docs_path = str(sf / "documents.parquet")
+
+    def rows(stage):
+        d = stage(spark, str(sf))
+        return d, spark.read.parquet(d).count()
+
+    stagers = (_stage_doc_stream, _stage_change_stream)
+    before = {stage: rows(stage) for stage in stagers}
+    docs = pq.read_table(docs_path)
+    assert 0 in docs["doc_id"].to_pylist()
+    pq.write_table(docs.filter(pc.not_equal(docs["doc_id"], 0)), docs_path + ".new")
+    os.replace(docs_path + ".new", docs_path)
+    for stage, (d0, n0) in before.items():
+        d1, n1 = rows(stage)
+        assert d1 != d0, stage.__name__
+        assert n1 == n0 - 2, (stage.__name__, n0, n1)
 
 
 def test_tws_armed_worker_env_restores(spark):
@@ -546,10 +568,11 @@ def test_st19_final_sessions_require_timers(spark):
       ~1.5 h of final sessions).
     The registered row then shows the sentinels closing exactly this gap
     (driver-checked equality with the batch oracle)."""
+    from google_analytics_dataframes_spark.queries._util import pinned_confs
     from google_analytics_dataframes_spark.queries.streaming_batch import (
-        _few_state_partitions,
-        _rocksdb_state_provider,
+        _ROCKSDB_STATE,
         _stage_stream_dir,
+        _state_partitions,
     )
     from google_analytics_dataframes_spark.streaming.tws_runtime import (
         armed_worker_env,
@@ -560,10 +583,10 @@ def test_st19_final_sessions_require_timers(spark):
         pytest.skip("no protobuf runtime on this host")
     src = _stage_stream_dir(spark, SF_DIR, ordered=True)  # NO sentinels
     stream = jobs.read_event_stream(spark, src, files_per_trigger=2)
-    with _rocksdb_state_provider(spark):
+    with pinned_confs(spark, _ROCKSDB_STATE):
         with armed_worker_env(spark):
             tws = jobs.st19_timer_sessionize(stream)
-        with _few_state_partitions(spark):
+        with pinned_confs(spark, _state_partitions()):
             out = jobs.run_available_now_parquet(tws, "t_st19_neg")
     n_emitted = out.filter(F.col("user_id") >= 0).count()
     # batch census: lag/cumsum session count (the st14/st19 oracle shape)
@@ -600,10 +623,11 @@ def test_stateful_streams_carry_state_across_batches(spark):
     At 1 file/trigger the update-mode sink must contain MULTIPLE rows for
     many users (one per batch that changed them), which is only possible
     if batch 2 read and extended batch 1's state."""
+    from google_analytics_dataframes_spark.queries._util import pinned_confs
     from google_analytics_dataframes_spark.queries.streaming_batch import (
-        _few_state_partitions,
-        _rocksdb_state_provider,
+        _ROCKSDB_STATE,
         _stage_stream_dir,
+        _state_partitions,
     )
     from google_analytics_dataframes_spark.streaming.tws_runtime import (
         armed_worker_env,
@@ -614,10 +638,10 @@ def test_stateful_streams_carry_state_across_batches(spark):
         pytest.skip("no protobuf runtime on this host")
     src = _stage_stream_dir(spark, SF_DIR, ordered=False)
     stream = jobs.read_event_stream(spark, src, files_per_trigger=1)
-    with _rocksdb_state_provider(spark):
+    with pinned_confs(spark, _ROCKSDB_STATE):
         with armed_worker_env(spark):
             tws = jobs.st18_typed_state_census(stream)
-        with _few_state_partitions(spark):
+        with pinned_confs(spark, _state_partitions()):
             out = jobs.run_available_now(
                 tws, "t_carry", output_mode="update"
             ).toPandas()
@@ -655,9 +679,10 @@ def test_tws_initial_state_bootstraps_from_batch(spark, tmp_path_factory):
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
     from pyspark.sql.types import LongType, StructField, StructType
 
+    from google_analytics_dataframes_spark.queries._util import pinned_confs
     from google_analytics_dataframes_spark.queries.streaming_batch import (
-        _few_state_partitions,
-        _rocksdb_state_provider,
+        _ROCKSDB_STATE,
+        _state_partitions,
     )
     from google_analytics_dataframes_spark.streaming.tws_runtime import (
         armed_worker_env,
@@ -716,7 +741,7 @@ def test_tws_initial_state_bootstraps_from_batch(spark, tmp_path_factory):
             pass
 
     stream = jobs.read_event_stream(spark, live_dir, files_per_trigger=1)
-    with _rocksdb_state_provider(spark):
+    with pinned_confs(spark, _ROCKSDB_STATE):
         with armed_worker_env(spark):
             tws = stream.groupBy("user_id").transformWithStateInPandas(
                 statefulProcessor=BootstrappedFunnel(),
@@ -725,7 +750,7 @@ def test_tws_initial_state_bootstraps_from_batch(spark, tmp_path_factory):
                 timeMode="None",
                 initialState=census(hist).groupBy("user_id"),
             )
-        with _few_state_partitions(spark):
+        with pinned_confs(spark, _state_partitions()):
             out = jobs.run_available_now(
                 tws, "t_tws_boot", output_mode="update"
             ).toPandas()
@@ -755,9 +780,10 @@ def test_tws_list_state_keeps_bounded_recent_window(spark, tmp_path_factory):
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
     from pyspark.sql.types import LongType, StructField, StructType
 
+    from google_analytics_dataframes_spark.queries._util import pinned_confs
     from google_analytics_dataframes_spark.queries.streaming_batch import (
-        _few_state_partitions,
-        _rocksdb_state_provider,
+        _ROCKSDB_STATE,
+        _state_partitions,
     )
     from google_analytics_dataframes_spark.streaming.tws_runtime import (
         armed_worker_env,
@@ -814,7 +840,7 @@ def test_tws_list_state_keeps_bounded_recent_window(spark, tmp_path_factory):
             pass
 
     stream = jobs.read_event_stream(spark, d, files_per_trigger=1)
-    with _rocksdb_state_provider(spark):
+    with pinned_confs(spark, _ROCKSDB_STATE):
         with armed_worker_env(spark):
             tws = stream.groupBy("user_id").transformWithStateInPandas(
                 statefulProcessor=Recent3(),
@@ -822,7 +848,7 @@ def test_tws_list_state_keeps_bounded_recent_window(spark, tmp_path_factory):
                 outputMode="Update",
                 timeMode="None",
             )
-        with _few_state_partitions(spark):
+        with pinned_confs(spark, _state_partitions()):
             out = jobs.run_available_now(
                 tws, "t_tws_list", output_mode="update"
             ).toPandas()
