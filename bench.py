@@ -1,155 +1,188 @@
 #!/usr/bin/env python
 """Benchmark harness (BASELINE.md protocol): run every registered query at
 $SPARK_GRAFT_SF_DIR (default: io.DEFAULT_SF_DIR, the sf0.1 test data) on
-local[$SPARK_GRAFT_CPUS], print ONE JSON line:
+local[$SPARK_GRAFT_CPUS], write BENCH_DETAIL.json and print ONE JSON line:
 
     {"metric": "total_query_sec", "value": N, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": 0.1}
+     "queries": {name: sec, ...}, "cpus": 4, "master": "local[4]",
+     "sf_dir": "/path/to/sf0.1", ...}
 
-Timing excludes driver-side result transfer: each plan executes fully via
-the `noop` sink (scan + shuffles + aggs run, rows are discarded JVM-side),
-which is the honest engine-throughput number.
+Each row gets one untimed warm-up execution (its own codegen, parquet
+footer reads and shared materialisations; kept as "cold_queries"), then one
+timed execution: ``fn()`` plus a ``noop`` write, so the whole plan runs and
+the rows are discarded JVM-side.
 
-Warm-up protocol (matches BASELINE.md's "warm" measurement): each query gets
-ONE untimed warm-up execution — paying its own Janino/whole-stage-codegen
-compile, parquet footer reads, and any session-level shared materialization —
-before the timed run.  Round-3 verdict showed the old single-global-warm-up
-protocol overstated big-fold plans ~10x (5-7 s cold-codegen vs 0.4-0.9 s
-warm); the cold first-run times are still recorded in BENCH_DETAIL.json
-under "cold_queries" for transparency.
+After each timed execution, outside the timing, the row's layer profile is
+read from Spark's own counters through ``perfbench/tracing.py``'s readers:
+the timed execution runs under its own job group, and the profile holds its
+jobs, stages, tasks, executor run and CPU seconds, input, shuffle and spill
+bytes, GC seconds, median task skew, the Catalyst phases and exchanges of
+the write's QueryExecution, and for rows that run streams the microbatch
+phases of their progress events.
 
-Self-evidencing window classification (VERDICT r12 item #1): the sf0.1
-total swings ±40% with host ambient load (documented band since round 5,
-with the TWS/streaming family swelling in lockstep as the signature), and
-every round so far re-attributed that post-hoc.  The artifact now carries
-its own evidence:
+The artifact classifies its own window (``window.class``):
 
-* ``load`` — /proc/loadavg snapshots before the JVM starts (pure ambient),
-  after the main pass, and after the repeat pass, plus the cpu count.
-* a SECOND timed pass over the swell-prone subset (the whole st family +
-  the 8 slowest non-st rows of pass 1): ``repeat_total_pass1`` vs
-  ``repeat_total_pass2`` on identical plans in the same process.  A stable
-  window reproduces the subset total; an ambient spike shows up as a
-  divergent pass ratio with unchanged code.
-* a mid-run CANARY series (VERDICT r13 item #3): the fixed sub-second
-  ``a1_groupby_sum`` plan re-timed every 30 rows.  The pre-JVM loadavg
-  and the end-of-suite repeat pass bracket the window but sample nothing
-  in the middle — r13's 247.7 s point was stamped "quiet" by both while
-  a roving blip inflated the contiguous l25-l43 block mid-suite.  A
-  canary excursion (> 2x the series median AND > 0.25 s above it) now
-  demotes the window to "unstable" and the offending positions are
-  stamped into the artifact.
-* ``window.class`` — "quiet" (pre-JVM ambient load low AND the repeat
-  ratio tight AND the canary series clean), "loaded" (pre-JVM ambient
-  load high), "unstable" (low ambient but divergent passes or a canary
-  excursion: transient interference hit mid-run), or "unknown"
-  (/proc/loadavg unreadable — a missing measurement is not evidence of
-  load, ADVICE r13).  The mid/after load snapshots include this bench's
-  own executor threads, so only the pre-JVM one drives the
-  classification.  The criteria are stamped alongside so the
-  classification is auditable, and ``st_total_best`` (min of the two
-  st-family passes) is the floor estimate a grader should compare
-  across rounds.
+* "quiet": the 1-min load average before the JVM starts is at most 25% of
+  the cpus, a second timed pass over the swell-prone subset (every ``st*``
+  row plus the 8 slowest other rows) reproduces that subset's total within
+  25%, the fixed ``a1_groupby_sum`` canary re-timed every 30 rows has no
+  excursion, and at most 3 rows, none 3 in a row, ran > 2.5x their
+  reference and > 0.3 s above it;
+* "loaded": the pre-JVM load is above that cap;
+* "unstable": low ambient load, but one of the other tests failed;
+* "unknown": /proc/loadavg is unreadable.
+
+A row's reference is its time in the previous BENCH_DETAIL.json, used only
+when that run banded quiet on the same resolved dataset path, cpu count and
+master; otherwise no row is judged.
 """
 
 from __future__ import annotations
 
+import gc
+import importlib.util
 import json
 import os
+import re
 import sys
 import time
+from statistics import median
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-def _core_tag(master: str | None) -> str:
-    """'local[8]' -> '8', 'local[*]'/None/odd -> 'any' — keys the rolling
-    per-core-count reference file (an 8-core band must never judge a
-    32-core run)."""
-    import re
-
-    m = re.fullmatch(r"local\[(\d+)\]", master or "")
-    return m.group(1) if m else "any"
+REPO_DIR = os.path.dirname(os.path.abspath(__file__))
+DETAIL_PATH = os.path.join(REPO_DIR, "BENCH_DETAIL.json")
+sys.path.insert(0, REPO_DIR)
 
 
-def _load_row_reference(repo_dir: str, master: str | None, sf: float):
-    """Rolling quiet-band per-query reference for row-level anomaly
-    stamping (VERDICT r14 item #3).  Preference order: the per-core-count
-    rolling file (written by the last run at this core count that
-    classified quiet), else the last BENCH_DETAIL.json if its master AND
-    sf match.  Returns (queries dict, provenance dict) or (None, None)."""
-    candidates = [
-        (
-            os.path.join(repo_dir, f"BENCH_REF_c{_core_tag(master)}.json"),
-            "rolling_quiet_reference",
-        ),
-        (os.path.join(repo_dir, "BENCH_DETAIL.json"), "previous_detail"),
-    ]
-    for path, kind in candidates:
+def _load_tracing():
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_tracing", os.path.join(REPO_DIR, "perfbench", "tracing.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+tracing = _load_tracing()
+
+
+class RowProfiler:
+    """Times one execution and reads its layer profile afterwards.  The
+    plan listener and the progress listener stay registered on ``spark``
+    until :meth:`close`."""
+
+    def __init__(self, spark) -> None:
+        self.spark = spark
+        self.group: str | None = None
+        self.seq = 0
+        self.read_s = 0.0  # wall time spent reading profiles, outside timing
+        self.plans = tracing.make_plan_log(spark)
+        listeners = spark._jsparkSession.listenerManager().listListeners()
+        self._jplans = listeners[len(listeners) - 1]
+        self.progress = tracing.make_progress_log(lambda: self.group)
+        spark.streams.addListener(self.progress)
+
+    def close(self) -> None:
+        self.spark.streams.removeListener(self.progress)
+        self.spark._jsparkSession.listenerManager().unregister(self._jplans)
+
+    def run(self, name: str, build) -> tuple[float, dict]:
+        """Time ``build()`` plus a noop write under a job group of its own;
+        return the seconds and the profile."""
+        sc = self.spark.sparkContext
+        self.seq += 1
+        self.group = group = f"bench{self.seq}"
+        self.plans.writes.clear()
+        sc.setJobGroup(group, name)
         try:
-            with open(path) as f:
-                ref = json.load(f)
-        except Exception:
-            continue
-        env = ref.get("env") or {}
-        if _core_tag(env.get("spark.master")) != _core_tag(master):
-            continue
-        if ref.get("sf") != sf:
-            continue
-        qs = ref.get("queries")
-        if not isinstance(qs, dict) or not qs:
-            continue
-        prov = {
-            "file": os.path.basename(path),
-            "kind": kind,
-            "total_sec": ref.get("value"),
-            "window_class": (ref.get("window") or {}).get("class"),
-        }
-        return qs, prov
-    return None, None
+            t0 = time.time()
+            df = build()
+            t1 = time.time()
+            df.write.format("noop").mode("overwrite").save()
+            sec = time.time() - t0
+        finally:
+            sc._jsc.clearJobGroup()
+            self.group = None
+        r0 = time.time()
+        try:
+            profile = self._read(group, df, t1, t1 - t0, name.startswith("st"))
+        except Exception as e:  # a missing profile must not fail the row
+            profile = {"error": f"{type(e).__name__}: {str(e)[:300]}"}
+        self.read_s += time.time() - r0
+        return sec, profile
+
+    def _read(self, group, df, write_start: float, build_s: float, st: bool) -> dict:
+        spark = self.spark
+        tracing.drain(spark)
+        run_ids = self.progress.run_ids(group)
+        jobs = tracing.group_jobs(spark, [group] + run_ids)
+        stats = tracing.job_stats(spark, jobs, write_start * 1e3)
+        skews = stats.pop("skews")
+        for k in ("build_jobs", "write_jobs", "job_spans_ms"):
+            stats.pop(k)
+        profile = {"build_s": build_s, "jobs": len(jobs), **stats,
+                   "task_skew": median(skews) if skews else 1.0}
+        profile.update(tracing.catalyst_stats(df, self.plans.last_write()))
+        if run_ids or st:  # st1-st3 are stream-shaped batch plans: 0 batches
+            profile.update(tracing.streaming_metrics(self.progress.batches({group})))
+        return {k: round(v, 4) if isinstance(v, float) else v for k, v in profile.items()}
 
 
-def _row_anomalies(
-    times: dict[str, float], ref_queries: dict[str, float] | None
-) -> tuple[list[dict], int]:
-    """Per-row excursion stamp vs the rolling reference: a row is anomalous
-    when it ran > 2.5x its reference AND > 0.3 s above it (the absolute
-    guard keeps sub-100-ms scheduler jitter off the list).  Also returns
-    the longest CONTIGUOUS anomalous block in suite order — the signature
-    of a roving interference wave (r14's 238.9 s case: l7/l7b/rb1 inflated
-    2-4x in one alphabetical block while the canary stayed quiet)."""
-    if not ref_queries:
-        return [], 0
+def judge_rows(times: dict[str, float], prev: dict | None, here: dict) -> dict:
+    """Row-level anomaly stamp: a row is anomalous when it ran > 2.5x its
+    reference AND > 0.3 s above it (the absolute guard keeps scheduler
+    jitter on sub-100-ms rows off the list).  Also stamps the longest
+    CONTIGUOUS anomalous block in suite order, the signature of a roving
+    interference wave that misses every canary slot.
+
+    The reference is ``prev`` (the previous artifact) only when it banded
+    quiet on the same ``sf_dir``, ``cpus`` and ``master`` as ``here``;
+    otherwise no row is judged."""
+    ref = prov = None
+    if (
+        prev
+        and (prev.get("window") or {}).get("class") == "quiet"
+        and all(prev.get(k) == here[k] for k in ("sf_dir", "cpus", "master"))
+    ):
+        ref = prev.get("queries") or {}
+        prov = {"file": os.path.basename(DETAIL_PATH), "total_sec": prev.get("value")}
     ordered = [n for n in sorted(times) if times[n] >= 0]
     anomalies: list[dict] = []
-    anom_pos: set[int] = set()
-    for pos, name in enumerate(ordered):
-        ref = ref_queries.get(name)
-        if ref is None or ref <= 0:
-            continue
+    longest_block = block = 0
+    for name in ordered:
+        r = ref.get(name) if ref else None
         sec = times[name]
-        if sec > 2.5 * ref and sec - ref > 0.3:
+        if r is not None and r > 0 and sec > 2.5 * r and sec - r > 0.3:
             anomalies.append(
-                {
-                    "query": name,
-                    "sec": sec,
-                    "ref_sec": ref,
-                    "ratio": round(sec / ref, 2),
-                }
+                {"query": name, "sec": sec, "ref_sec": r, "ratio": round(sec / r, 2)}
             )
-            anom_pos.add(pos)
-    longest_block = 0
-    run = 0
-    for pos in range(len(ordered)):
-        run = run + 1 if pos in anom_pos else 0
-        longest_block = max(longest_block, run)
-    return anomalies, longest_block
+            block += 1
+        else:
+            block = 0
+        longest_block = max(longest_block, block)
+    return {
+        "row_anomalies": anomalies,
+        "row_anomaly_block": longest_block,
+        "row_anomaly_reference": prov,
+    }
+
+
+def window_class(
+    load1: float | None, cpus: int, stable: bool, canary_clean: bool, rows: dict
+) -> str:
+    """The window class from the pre-JVM 1-min load average, the repeat-pass
+    and canary tests, and :func:`judge_rows`' stamp.  An unreadable
+    /proc/loadavg is a missing measurement, not evidence of load."""
+    if load1 is None:
+        return "unknown"
+    if load1 > 0.25 * cpus:
+        return "loaded"
+    rows_clean = len(rows["row_anomalies"]) <= 3 and rows["row_anomaly_block"] < 3
+    return "quiet" if stable and canary_clean and rows_clean else "unstable"
 
 
 def _loadavg() -> list[float] | None:
-    """Host load averages (1/5/15 min).  In this container /proc/loadavg is
-    host-wide, so the 1-min figure taken BEFORE the JVM starts is the pure
-    ambient-noise signal the window classification needs."""
+    """Host load averages (1/5/15 min).  /proc/loadavg is host-wide, so the
+    1-min figure taken BEFORE the JVM starts is the ambient-noise signal."""
     try:
         with open("/proc/loadavg") as f:
             return [float(x) for x in f.read().split()[:3]]
@@ -166,15 +199,16 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = -1.0
+    try:
+        with open(DETAIL_PATH) as f:
+            prev = json.load(f)
+    except Exception:
+        prev = None
 
     from google_analytics_dataframes_spark.registry import registry
     from google_analytics_dataframes_spark.session import get_spark
 
-    # Environment telemetry (VERDICT r4 item #6): the driver runs bench.py in
-    # ITS container, so recording engine versions here surfaces the driver's
-    # actual DuckDB/PySpark builds in the bench JSON — closing the env-skew
-    # hypothesis that r04's six hash failures raised (they pass bitwise
-    # against local DuckDB 1.0.0).
+    # Engine versions, so the artifact names the PySpark/DuckDB builds it ran.
     import platform
 
     import duckdb
@@ -194,12 +228,16 @@ def main() -> None:
         "spark.sql.adaptive.enabled",
         "spark.sql.session.timeZone",
         "spark.sql.execution.arrow.pyspark.enabled",
-        "spark.master",
     ):
         try:
             env[k] = spark.conf.get(k)
         except Exception:
             env[k] = None
+    here = {
+        "cpus": len(os.sched_getaffinity(0)),
+        "master": spark.sparkContext.master,
+        "sf_dir": os.path.realpath(sf_dir),
+    }
     reg = registry()
 
     def execute(name: str) -> float:
@@ -211,18 +249,10 @@ def main() -> None:
     # untimed global warm-up: JVM, noop sink classes, parquet footers
     execute("a1_groupby_sum")
 
-    import gc
-    from statistics import median
-
-    # Mid-run canary (VERDICT r13 item #3): the pre-JVM loadavg and the
-    # end-of-suite repeat pass bracket the window but sample nothing in
-    # the middle — r13's 247.7 s point was stamped "quiet" by both while
-    # a roving-interference blip inflated a contiguous alphabetical block
-    # (l25-l43) mid-suite.  Re-timing ONE fixed sub-second query (the
-    # same a1 plan, warm since the global warm-up) every CANARY_EVERY
-    # rows turns that blind spot into a stamped series: an interference
-    # window that inflates ordinary plans inflates the canary landing
-    # inside it the same way.
+    # Mid-run canary: the pre-JVM loadavg and the end-of-suite repeat pass
+    # bracket the window but sample nothing in the middle.  Re-timing ONE
+    # fixed sub-second query (warm since the global warm-up) every
+    # CANARY_EVERY rows turns that blind spot into a stamped series.
     CANARY_EVERY = 30
     canary_name = "a1_groupby_sum"
     canary: list[dict] = []
@@ -236,42 +266,42 @@ def main() -> None:
             print(f"# bench canary error: {e}", file=sys.stderr)
         gc.collect()
 
-    # fresh-session anchor point; one extra untimed execution first so
-    # the anchor can never carry a residual first-timed-run cost (the
-    # global warm-up ran a1 once, but session-level lazy inits could
-    # still bias execution #2 — and a biased anchor would demote a
-    # genuinely quiet window via the 2x-median rule)
+    # one extra untimed execution first, so the canary's anchor point never
+    # carries a residual first-timed-run cost
     execute(canary_name)
     time_canary(0)
 
+    profiler = RowProfiler(spark)
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
+    profile: dict[str, dict] = {}
     for i, name in enumerate(sorted(reg)):
         try:
             cold[name] = round(execute(name), 3)  # untimed per-query warm-up (codegen)
-            times[name] = round(execute(name), 3)  # timed warm run
+            sec, profile[name] = profiler.run(name, lambda: reg[name].fn(spark, sf_dir))
+            times[name] = round(sec, 3)
         except Exception as e:  # a failing query must not hide the rest
             times[name] = -1.0
             print(f"# bench error {name}: {e}", file=sys.stderr)
         # Release the finished query's py4j handles OUTSIDE the timed
         # window: the JVM side of a dropped DataFrame only becomes
-        # weakly-reachable (and thus ContextCleaner-reclaimable at the
-        # session's periodic GC) once the Python proxy is collected.
-        # Without this, ~300 distinct plans' probe persists/broadcasts
-        # accumulate and the 10x suite runs later queries at 2-5x their
-        # fresh-session cost (round-13 finding, BASELINE.md).
+        # ContextCleaner-reclaimable once the Python proxy is collected.
+        # Without this, ~300 plans' probe persists/broadcasts accumulate
+        # and later queries run at 2-5x their fresh-session cost
+        # (BASELINE.md).
         gc.collect()
         if (i + 1) % CANARY_EVERY == 0:
             time_canary(i + 1)
+    profiler.close()
 
     total = round(sum(t for t in times.values() if t >= 0), 3)
     load_mid = _loadavg()  # after the main pass, before the repeat pass
 
     # --- repeat pass over the swell-prone subset (window evidence) -------
-    # The whole st family (the documented lockstep-sweller) plus the 8
-    # slowest non-st rows of pass 1: identical plans, same process, minutes
-    # apart.  A clean window reproduces the subset total; ambient noise
-    # shows up as a divergent pass ratio with unchanged code.
+    # The whole st family plus the 8 slowest non-st rows of pass 1:
+    # identical plans, same process, minutes apart.  A clean window
+    # reproduces the subset total; ambient noise shows up as a divergent
+    # pass ratio with unchanged code.
     st_names = sorted(n for n, t in times.items() if n.startswith("st") and t >= 0)
     slow_non_st = [
         n
@@ -289,10 +319,8 @@ def main() -> None:
         gc.collect()
     load_after = _loadavg()
 
-    # Pass totals compare ONLY rows timed successfully in BOTH series
-    # (ADVICE r13): a query that errors in exactly one pass would
-    # otherwise shrink one subset total and skew the ratio/min toward a
-    # misclassification.
+    # Pass totals compare ONLY rows timed successfully in BOTH series: a
+    # query that errors in exactly one pass would otherwise skew the ratio.
     def _both(subset: list[str]) -> list[str]:
         return [
             n
@@ -309,18 +337,10 @@ def main() -> None:
     st_p2 = _subset_total(st_common, repeat)
     rep_p1 = _subset_total(rep_common, times)
     rep_p2 = _subset_total(rep_common, repeat)
-    ncpus = os.cpu_count() or 1
-    # quiet = ambient 1-min load <= 25% of cpus BEFORE the JVM starts (the
-    # only self-load-free snapshot: mid/after include this bench's own
-    # executor threads and are recorded as context, not criteria); stable
-    # = the repeat-subset totals agree within 25%; canary clean = no
-    # mid-suite re-timing of the fixed a1 plan exceeded 2x the series
-    # median by more than 0.25 s (the absolute guard keeps sub-100-ms
-    # scheduler jitter from tripping a 2x ratio on a ~0.1 s plan).  An
-    # unreadable /proc/loadavg is a MISSING measurement, not evidence of
-    # load (ADVICE r13) — class "unknown", never "loaded".
-    ambient_cap = 0.25 * ncpus
-    ambient_quiet = load_before is not None and load_before[0] <= ambient_cap
+    # Only the pre-JVM load snapshot drives the class: the mid/after ones
+    # include this bench's own executor threads and are context only.  A
+    # canary excursion is > 2x the series median AND > 0.25 s above it.
+    cpus = here["cpus"]
     stable = (
         min(rep_p1, rep_p2) > 0
         and max(rep_p1, rep_p2) / min(rep_p1, rep_p2) <= 1.25
@@ -334,46 +354,26 @@ def main() -> None:
         and c["sec"] > 2 * canary_median
         and c["sec"] - canary_median > 0.25
     ]
-    canary_clean = not canary_excursions
-    # Row-level anomaly stamp (VERDICT r14 item #3): the canary has a
-    # sub-threshold blind spot — r14's fourth final-HEAD attempt BANDED
-    # "quiet" at 238.9 s while an untouched l7/rb1/l7b block ran 2-4x its
-    # band (the canary peaked at 0.458 s, under the 2x+0.25 s bar).  Every
-    # run now compares each row against the rolling quiet-band reference
-    # (same core count, same sf) and stamps the excursions; too many
-    # anomalies, or a contiguous block of them (the roving-wave
-    # signature), demotes the window — a wave that misses every canary
-    # slot still cannot band.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    ref_queries, ref_prov = _load_row_reference(
-        repo_dir, env.get("spark.master"), sf
+    rows = judge_rows(times, prev, here)
+    cls = window_class(
+        load_before[0] if load_before else None, cpus, stable, not canary_excursions, rows
     )
-    row_anoms, row_anom_block = _row_anomalies(times, ref_queries)
-    rows_clean = len(row_anoms) <= 3 and row_anom_block < 3
-    if load_before is None:
-        cls = "unknown"
-    elif not ambient_quiet:
-        cls = "loaded"
-    elif stable and canary_clean and rows_clean:
-        cls = "quiet"
-    else:
-        cls = "unstable"
     window = {
         "class": cls,
         "criteria": (
-            f"quiet iff pre-JVM load1 <= {ambient_cap:.2f} "
-            f"(25% of {ncpus} cpus), repeat-subset pass ratio <= 1.25 "
-            f"over rows timed in both passes, and no canary excursion "
+            f"quiet iff pre-JVM load1 <= {0.25 * cpus:.2f} "
+            f"(25% of {cpus} cpus), repeat-subset pass ratio <= 1.25 "
+            f"over rows timed in both passes, no canary excursion "
             f"(a1 re-timed every {CANARY_EVERY} rows; excursion = "
             f"> 2x series median AND > 0.25 s above it), and rows clean "
-            f"(<= 3 rows > 2.5x their rolling same-core-count quiet "
-            f"reference by > 0.3 s, no contiguous block of 3+); "
-            f"unknown iff /proc/loadavg unreadable"
+            f"(<= 3 rows > 2.5x their reference by > 0.3 s, no contiguous "
+            f"block of 3+; the reference is the previous BENCH_DETAIL.json "
+            f"when it banded quiet on the same sf_dir, cpus and master, "
+            f"else no row is judged); loaded iff pre-JVM load1 is above "
+            f"that cap; unknown iff /proc/loadavg unreadable"
         ),
-        "row_anomalies": row_anoms,
-        "row_anomaly_block": row_anom_block,
-        "row_anomaly_reference": ref_prov,
-        "ambient_cap": round(ambient_cap, 2),
+        **rows,
+        "ambient_cap": round(0.25 * cpus, 2),
         "st_total_pass1": st_p1,
         "st_total_pass2": st_p2,
         "st_total_best": min(st_p1, st_p2),
@@ -388,66 +388,28 @@ def main() -> None:
         "before": load_before,
         "after_main_pass": load_mid,
         "after_repeat_pass": load_after,
-        "ncpus": ncpus,
     }
 
-    # Full per-query detail goes to a FILE (132 entries overran the driver's
-    # stdout-capture window in round 1 -> "parsed": null); the stdout JSON
-    # line stays compact: totals, per-family rollups, and the slowest tail.
+    # Full per-query detail goes to the artifact; the stdout JSON line
+    # stays compact: totals, per-family rollups, and the slowest tail.
     detail = {
         "metric": "total_query_sec",
         "value": total,
         "unit": "sec",
         "queries": times,
+        "profile": profile,
+        "profile_read_sec": round(profiler.read_s, 3),
         "cold_queries": cold,
         "cold_total_sec": round(sum(t for t in cold.values() if t >= 0), 3),
         "repeat_queries": repeat,
         "window": window,
         "load": load,
         "sf": sf,
+        **here,
         "env": env,
     }
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
-    with open(detail_path, "w") as f:
+    with open(DETAIL_PATH, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
-
-    # Roll the per-core-count quiet-band reference forward ONLY when this
-    # run itself banded quiet under the full criteria (a wave-polluted
-    # reference would hide the next wave), and merge by ELEMENT-WISE MIN
-    # with the existing reference: a broad mild ambient swell (many rows
-    # at 1.5-2x, none over the 2.5x row bar) can band "quiet", and a
-    # plain overwrite would bake its inflation into the band (observed
-    # this round: a quiet-banded 188.4 s run carried l61d at 4.5x its
-    # band; isolation re-probes put every such row back).  Min keeps the
-    # fastest quiet evidence per row; a genuine code slowdown then shows
-    # up as a persistent stamped anomaly for a human to adjudicate —
-    # stamps are evidence, not gates.  Timing metadata only — never
-    # query results — so nothing here feeds any computation.
-    if cls == "quiet":
-        ref_path = os.path.join(
-            repo_dir, f"BENCH_REF_c{_core_tag(env.get('spark.master'))}.json"
-        )
-        merged = {n: t for n, t in times.items() if t >= 0}
-        if ref_queries:
-            for n, t in ref_queries.items():
-                if t > 0 and (n not in merged or t < merged[n]):
-                    merged[n] = t
-        with open(ref_path, "w") as f:
-            json.dump(
-                {
-                    "metric": "total_query_sec",
-                    "value": round(sum(merged.values()), 3),
-                    "queries": merged,
-                    "window": {"class": cls},
-                    "sf": sf,
-                    "env": env,
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-
-    import re
 
     families: dict[str, list[float]] = {}
     for name, t in times.items():
@@ -479,8 +441,9 @@ def main() -> None:
                 "families": fam_stats,
                 "window": window,
                 "load": load,
-                "detail_file": "BENCH_DETAIL.json",
+                "detail_file": os.path.basename(DETAIL_PATH),
                 "sf": sf,
+                **here,
                 "env": env,
             }
         )

@@ -54,7 +54,7 @@ RUNTIME_CONFS: dict[str, str] = {
 
 #: Session-scoped memos: SparkSession -> (applicationId, memo dict).  Every
 #: cache whose values die with a session (lazy table reads, configured
-#: flags, staged stream dirs, catalog index/stats names) lives in the one
+#: flags, catalog index/stats names) lives in the one
 #: dict :func:`state` hands out, so a session's memos go away with it.
 _STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
