@@ -17,8 +17,8 @@ benchmark set-up gets fresh):
   the JDK's module image and JVM library, and every jar the launch view
   links (path, size, mtime), so a JDK or Spark upgrade builds a new
   archive, and publishing it sweeps the old one.
-* ``driver-<key>.home/`` — the launch view of ``$SPARK_HOME`` that archived
-  launches start from: a symlink to every top-level entry but ``jars/``,
+* ``driver-<key>.home/`` — the launch view of ``$SPARK_HOME`` that every
+  launch starts from: a symlink to every top-level entry but ``jars/``,
   and a ``jars/`` with a symlink to every entry of ``$SPARK_HOME/jars``
   except ``spark-mllib_*.jar``.  spark-mllib registers a session-extensions
   provider whose static initialiser builds Scala's runtime-reflection
@@ -34,15 +34,20 @@ benchmark set-up gets fresh):
 
 Delete the directory to start over.
 
-Only launches whose classpath would be the conf dir plus ``$SPARK_HOME/jars``
-qualify, and only when the effective conf dir holds nothing but
-``*.template`` files, which Spark never reads.  Those launches start with
-SPARK_HOME pointed at the view, so their classpath is the conf dir plus the
-view's jars, and the JVM keeps the view in its environment (its Python
-workers find ``python/lib/pyspark.zip`` through it).  JDK 17 refuses to dump
-or map an archive with a non-empty directory on the classpath, so they also
-point SPARK_CONF_DIR at the empty ``conf/``.  Every other launch starts
-exactly as it would without this module, spark-mllib included.
+Every launch starts with SPARK_HOME pointed at the view, so its classpath
+is the conf dir plus the view's jars (plus whatever extra classpath the
+caller set), and the JVM keeps the view in its environment (its Python
+workers find ``python/lib/pyspark.zip`` through it).  With SPARK_CONF_DIR
+unset, the conf dir is the view's ``conf`` link, so a real
+``spark-defaults.conf`` is read as before.  Only launches whose classpath
+would be the conf dir plus ``$SPARK_HOME/jars``, with a conf dir that holds
+nothing but ``*.template`` files (which Spark never reads), also map the
+archive.  JDK 17 refuses to dump or map an archive with a non-empty
+directory on the classpath, so those point SPARK_CONF_DIR at the empty
+``conf/``.  When the view cannot be published (an ``OSError``, such as an
+unwritable cache), the launch warns and starts from ``$SPARK_HOME`` itself,
+spark-mllib included, so its SparkSession start pays for spark-mllib's
+session-extensions provider.
 
 On a miss a child Python process starts Spark from the view with
 ``-XX:ArchiveClassesAtExit`` on a unique ``.part`` path, runs the noop
@@ -68,6 +73,8 @@ import tempfile
 import time
 import uuid
 import warnings
+
+from pyspark.find_spark_home import _find_spark_home
 
 #: JVM unified logging to stderr, warnings kept.  The archive dump warns once
 #: per class it skips (signed jars, pre-JDK-6 class files) and a rejected
@@ -99,24 +106,26 @@ _CHILD = (
 )
 
 
-def archive_path() -> str | None:
-    """The archive for the driver JVM the next launch would start, or None
-    when that launch must start as today: extra classpath entries, a conf
-    dir with real files in it, or no JDK or Spark jars to key on."""
+def _plain_classpath() -> bool:
+    """True when the next launch's classpath is a templates-only conf dir
+    plus ``$SPARK_HOME/jars``, the only classpath an archive can match:
+    no extra classpath entries and no real file in the conf dir."""
     if any(os.environ.get(v) for v in _CLASSPATH_ENV):
-        return None
+        return False
     submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
     if "--driver-class-path" in submit or "extraClassPath" in submit:
-        return None
-    from pyspark.find_spark_home import _find_spark_home
-
-    spark_home = _find_spark_home()
-    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        return False
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
     try:
-        if any(not n.endswith(".template") for n in os.listdir(conf)):
-            return None
+        return all(n.endswith(".template") for n in os.listdir(conf))
     except FileNotFoundError:
-        pass
+        return True
+
+
+def _stem() -> str | None:
+    """``<cache>/spark_graft/driver-<key>``, the path of the next launch's
+    view and archive without their suffixes, or None when there is no JDK
+    or Spark jars to key on."""
     # the launcher runs $JAVA_HOME/bin/java, else the java on PATH
     java = os.environ.get("JAVA_HOME")
     java = os.path.join(java, "bin", "java") if java else shutil.which("java")
@@ -129,7 +138,7 @@ def archive_path() -> str | None:
             os.path.join(java_home, "lib", "modules"),
             os.path.join(java_home, "lib", "server", "libjvm.so"),
         ]
-        files += _view_jars(spark_home)
+        files += _view_jars(_find_spark_home())
         for f in files:
             st = os.stat(f)
             key.update(f"{f}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
@@ -139,7 +148,7 @@ def archive_path() -> str | None:
     # view's classpath, even where no jar is left out
     key.update(b"view\0")
     cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
-    return os.path.join(cache, "spark_graft", f"driver-{key.hexdigest()[:20]}.jsa")
+    return os.path.join(cache, "spark_graft", f"driver-{key.hexdigest()[:20]}")
 
 
 def _view_jars(spark_home: str) -> list[str]:
@@ -184,36 +193,37 @@ def launches_jvm() -> bool:
 def driver_java_options():
     """Wrap the launch of the driver JVM (the builder's ``getOrCreate``).
 
-    Yields the JVM options that map this launch's archive, after publishing
-    the launch view and, on a miss, building and publishing the archive,
-    with SPARK_HOME pointed at the view and SPARK_CONF_DIR at the empty conf
-    dir until the block exits.  Yields None and changes nothing when no JVM
-    will be launched (a live gateway, or a driver that spark-submit
-    started), when the launch does not qualify, or when the view or the
-    archive cannot be had: a failure here never fails the launch."""
-    archive = None
+    Publishes the launch view and points SPARK_HOME at it until the block
+    exits.  When the launch qualifies for the archive (:func:`_plain_classpath`)
+    it also builds and publishes the archive on a miss, points
+    SPARK_CONF_DIR at the empty conf dir, and yields the JVM options that
+    map the archive; otherwise it yields None.  Changes nothing and yields
+    None when no JVM will be launched (a live gateway, or a driver that
+    spark-submit started).  A failure here never fails the launch: an
+    ``OSError`` (an unwritable cache) warns, and a view that cannot be
+    published leaves the launch to start from ``$SPARK_HOME``, spark-mllib
+    included."""
+    launch_env, options = {}, None
     if launches_jvm():
         try:
-            archive = archive_path()
-            if archive is not None:
-                conf = os.path.join(os.path.dirname(archive), "conf")
-                os.makedirs(conf, exist_ok=True)
-                from pyspark.find_spark_home import _find_spark_home
-
-                home = _publish_view(_find_spark_home(), archive[: -len(".jsa")] + ".home")
-                if not (os.path.exists(archive) or _build(archive, conf, home)):
-                    archive = None
+            stem = _stem()
+            if stem is not None:
+                os.makedirs(os.path.dirname(stem), exist_ok=True)
+                home = launch_env["SPARK_HOME"] = _publish_view(_find_spark_home(), stem + ".home")
+                if _plain_classpath():
+                    archive = stem + ".jsa"
+                    conf = os.path.join(os.path.dirname(stem), "conf")
+                    os.makedirs(conf, exist_ok=True)
+                    if os.path.exists(archive) or _build(archive, conf, home):
+                        launch_env["SPARK_CONF_DIR"] = conf
+                        options = f"{LOG_OPTIONS} -XX:SharedArchiveFile={archive} -XX:+VerifySharedSpaces"
         except OSError as e:  # an unreadable conf dir, an unwritable cache
-            warnings.warn(f"JVM class archive unavailable, starting without it: {e}")
-            archive = None
-    if archive is None:
-        yield None
-        return
-    launch_env = {"SPARK_CONF_DIR": conf, "SPARK_HOME": home}
+            lost = "class archive" if launch_env else "launch view"
+            warnings.warn(f"JVM {lost} unavailable, starting without it: {e}")
     saved = {v: os.environ.get(v) for v in launch_env}
     os.environ.update(launch_env)
     try:
-        yield f"{LOG_OPTIONS} -XX:SharedArchiveFile={archive} -XX:+VerifySharedSpaces"
+        yield options
     finally:
         for v, value in saved.items():
             if value is None:

@@ -5,8 +5,10 @@ what the driver does.  These tests pin that.  The archive is built and
 published atomically, and a build killed half way leaves nothing at the
 final path.  A hit keeps the caller's own JVM options and the answers.  A
 rejected archive falls back to a plain start, with the JVM's warning on
-stderr, not stdout.  A conf dir with real files starts exactly as before.
-A session that reuses a live SparkContext never touches the archive.
+stderr, not stdout.  Every launch starts from the launch view, without
+spark-mllib; a conf dir with real files is still read, and maps no
+archive.  A session that reuses a live SparkContext never touches the
+archive.
 Subprocess drivers get ``XDG_CACHE_HOME`` under ``tmp_path``, so the user's
 cache is never read or written.
 """
@@ -130,9 +132,9 @@ def test_archive_lifecycle(tmp_path):
        the JVM really maps the file.
     4. A bit-flipped archive is rejected by VerifySharedSpaces: the start
        still works, and the JVM's warning lands on stderr, not stdout.
-    All four answer the same, and their Python UDFs run.  The plain start
-    has spark-mllib on its classpath; the three that launch from the view
-    have no spark-mllib jar and find no session-extensions provider."""
+    All four answer the same, and their Python UDFs run.  All four launch
+    from the view: no spark-mllib jar on the classpath and no
+    session-extensions provider found."""
     cache = tmp_path / "cache"
     store = cache / "spark_graft"
 
@@ -152,8 +154,10 @@ def test_archive_lifecycle(tmp_path):
     _wait_for(lambda: not os.path.exists(f"/proc/{dump_jvm}"), 120, "the orphaned JVM")
     assert "archive build failed" in err
     assert not any("SharedArchiveFile" in a for a in plain["args"])
+    assert plain["mapped"] == []
     assert _archives(cache) == [] and not list(store.glob("*.failed"))
-    assert plain["mllib"] and plain["udf"] == [3, 6, 9]
+    assert plain["mllib"] == [] and plain["providers"] == 0
+    assert plain["udf"] == [3, 6, 9]
 
     built, _ = _result(_driver(cache))
     [archive] = _archives(cache)
@@ -190,8 +194,8 @@ def test_archive_lifecycle(tmp_path):
 
 def test_spark_defaults_conf_is_honoured_without_archive(tmp_path):
     """A conf dir holding a real spark-defaults.conf is read as before, and
-    the launch neither builds nor maps an archive: it starts from
-    $SPARK_HOME itself, spark-mllib on its classpath."""
+    the launch neither builds nor maps an archive.  It still starts from
+    the launch view: no spark-mllib jar, no session-extensions provider."""
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-defaults.conf").write_text("spark.graft.probe  from-defaults\n")
@@ -199,36 +203,39 @@ def test_spark_defaults_conf_is_honoured_without_archive(tmp_path):
     got, _ = _result(_driver(cache, SPARK_CONF_DIR=str(conf)))
     assert got["probe"] == "from-defaults"
     assert not any("SharedArchiveFile" in a for a in got["args"])
-    assert got["mapped"] == [] and not cache.exists()
-    assert got["mllib"] and got["udf"] == [3, 6, 9]
+    assert got["mapped"] == [] and _archives(cache) == []
+    assert len(list((cache / "spark_graft").glob("driver-*.home"))) == 1
+    assert got["mllib"] == [] and got["providers"] == 0
+    assert got["udf"] == [3, 6, 9]
 
 
 def test_only_plain_classpath_launches_qualify(tmp_path, monkeypatch):
-    """The archive is keyed only when the launch classpath is a
-    templates-only conf dir plus $SPARK_HOME/jars."""
+    """The archive is mapped only when the launch classpath is a
+    templates-only conf dir plus $SPARK_HOME/jars; the key and its paths
+    live in the cache either way."""
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-env.sh.template").write_text("")
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
-    path = jvm_archive.archive_path()
-    assert path and path.startswith(str(tmp_path / "spark_graft" / "driver-"))
+    assert jvm_archive._plain_classpath()
+    assert jvm_archive._stem().startswith(str(tmp_path / "spark_graft" / "driver-"))
     (conf / "log4j2.properties").write_text("")
-    assert jvm_archive.archive_path() is None
+    assert not jvm_archive._plain_classpath()
     (conf / "log4j2.properties").unlink()
     monkeypatch.setenv("HADOOP_CONF_DIR", str(tmp_path))
-    assert jvm_archive.archive_path() is None
+    assert not jvm_archive._plain_classpath()
 
 
 def test_reused_context_does_no_archive_work(spark, monkeypatch):
     """getOrCreate on a live SparkContext launches no JVM, so the factory
-    must not key, build or map an archive."""
+    must not key, publish or build a view or an archive."""
 
     def boom(*a, **k):
         raise AssertionError("archive work on a reused context")
 
-    monkeypatch.setattr(jvm_archive, "archive_path", boom)
-    monkeypatch.setattr(jvm_archive, "_build", boom)
+    for name in ("_stem", "_publish_view", "_build"):
+        monkeypatch.setattr(jvm_archive, name, boom)
     assert session.get_spark(app_name="tests", master="local[4]", shuffle_partitions=4) is spark
 
 
@@ -243,7 +250,7 @@ def test_launch_options_scope_the_conf_dir_and_never_raise(tmp_path, monkeypatch
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     spark_home = os.environ.get("SPARK_HOME")
-    archive = Path(jvm_archive.archive_path())
+    archive = Path(jvm_archive._stem() + ".jsa")
     archive.parent.mkdir()
     archive.write_bytes(b"")
     with jvm_archive.driver_java_options() as opts:
@@ -259,6 +266,34 @@ def test_launch_options_scope_the_conf_dir_and_never_raise(tmp_path, monkeypatch
     with pytest.warns(UserWarning, match="unavailable"):
         with jvm_archive.driver_java_options() as opts:
             assert opts is None and "SPARK_CONF_DIR" not in os.environ
+
+
+def test_unpublishable_view_warns_and_keeps_spark_home(tmp_path, monkeypatch):
+    """A launch with a real file in its conf dir maps no archive but still
+    starts from the view, its conf dir untouched.  When the view cannot be
+    published (the cache is not a directory), the launch warns and the
+    options leave SPARK_HOME unchanged, so it starts from $SPARK_HOME."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)  # as before a JVM exists
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    spark_home = os.environ.get("SPARK_HOME")
+    with jvm_archive.driver_java_options() as opts:
+        assert opts is None and os.environ["SPARK_CONF_DIR"] == str(conf)
+        view = Path(os.environ["SPARK_HOME"])
+    assert view.parent == tmp_path / "cache" / "spark_graft" and view.suffix == ".home"
+    assert view.is_dir() and _archives(tmp_path / "cache") == []
+    assert os.environ.get("SPARK_HOME") == spark_home
+
+    (tmp_path / "file").write_text("")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "file"))
+    with pytest.warns(UserWarning, match="launch view unavailable"):
+        with jvm_archive.driver_java_options() as opts:
+            assert opts is None and os.environ.get("SPARK_HOME") == spark_home
 
 
 def test_failed_build_is_remembered(tmp_path, monkeypatch):
@@ -327,9 +362,9 @@ def test_launch_view_leaves_out_spark_mllib(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_HOME", str(home))
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
-    archive = jvm_archive.archive_path()
+    stem = jvm_archive._stem()
     (tmp_path / "cache" / "spark_graft").mkdir(parents=True)
-    view = Path(jvm_archive._publish_view(str(home), archive[: -len(".jsa")] + ".home"))
+    view = Path(jvm_archive._publish_view(str(home), stem + ".home"))
     assert sorted(p.name for p in view.iterdir()) == ["RELEASE", "bin", "jars"]
     assert (view / "bin").resolve() == (home / "bin").resolve()
     assert sorted(p.name for p in (view / "jars").iterdir()) == [
@@ -339,8 +374,8 @@ def test_launch_view_leaves_out_spark_mllib(tmp_path, monkeypatch):
     assert (view / "jars" / "janino-3.1.9.jar").resolve() == (home / "jars" / "janino-3.1.9.jar").resolve()
 
     (home / "jars" / "extra.jar").write_bytes(b"PK")
-    grown = jvm_archive.archive_path()
-    assert grown != archive
+    grown = jvm_archive._stem()
+    assert grown != stem
 
     rename = os.rename
 
@@ -349,7 +384,7 @@ def test_launch_view_leaves_out_spark_mllib(tmp_path, monkeypatch):
         rename(part, dest)
 
     monkeypatch.setattr(jvm_archive.os, "rename", lose)
-    won = grown[: -len(".jsa")] + ".home"
+    won = grown + ".home"
     assert jvm_archive._publish_view(str(home), won) == won
     assert sorted(os.listdir(Path(won) / "jars")) == [
         "janino-3.1.9.jar",

@@ -1,12 +1,12 @@
 """The session factory's launch, session-scoped memos (session.state) and
 scratch-path isolation.
 
-A launching ``get_spark`` starts the SparkContext while a second thread
-initialises the session extensions and compiles one class with Janino,
-then builds the SparkSession.  These
-tests pin that the split start configures the driver exactly as one
-``getOrCreate`` does, that the warm-up never fails a start nor outlives
-it, and that a reused context starts no thread.
+A launching ``get_spark`` starts a thread that imports what py4j's input
+converters import, then runs the builder's one ``getOrCreate`` from the
+launch view (jvm_archive).  These tests pin that the launch configures the
+driver exactly as ``_builder().getOrCreate()`` does, that a launch that
+goes wrong raises its own error, and that a reused context starts no
+thread and does no launch work.
 
 The memo owner hands out one dict per SparkSession and forgets a stopped
 application; staging paths are either fingerprint-keyed shared fixtures
@@ -51,73 +51,53 @@ def _last_line(p: subprocess.Popen) -> str:
     return out.strip().splitlines()[-1]
 
 
-def test_split_launch_configures_the_driver_as_one_getorcreate():
-    """A launching get_spark runs the warm-up once, on a thread that is
-    gone when it returns, and the warm-up's Janino compile runs once, on
-    that thread, without a warning.  Its SparkContext and session confs equal
-    those of the builder's single getOrCreate (started afterwards in the
-    same process, over the same gateway).  The launched JVM's heap is
-    the configured driver memory, so that conf reached the launch."""
+def test_launch_configures_the_driver_as_one_getorcreate():
+    """A launching get_spark's SparkContext and session confs equal those
+    of the builder's single getOrCreate (started afterwards in the same
+    process, over the same gateway), so the launch options it adds replace
+    none of them.  The launched JVM's heap is the configured driver
+    memory, so that conf reached the launch."""
     script = """
-        import json, threading, warnings
+        import json
         from google_analytics_dataframes_spark import session
 
         KEYS = ("spark.app.name", "spark.master", "spark.sql.shuffle.partitions",
                 "spark.driver.memory", "spark.ui.enabled",
                 "spark.sql.autoBroadcastJoinThreshold",
                 "spark.cleaner.periodicGC.interval")
-        calls, janino = [], []
-        warm = session._warm_sql_start
-        session._warm_sql_start = lambda jvm: (calls.append(1), warm(jvm))
-        compile_class = session._compile_warm_up_class
-        session._compile_warm_up_class = lambda jvm: (
-            janino.append(threading.current_thread().name), compile_class(jvm))
 
         def confs(spark):
             sc = spark.sparkContext.getConf()
             return {k: [sc.get(k, None), spark.conf.get(k, None)] for k in KEYS}
 
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            split = session.get_spark(app_name="split")
+        launched = session.get_spark(app_name="launch")
         out = {
-            "calls": len(calls),
-            "janino": janino,
-            "warnings": [str(w.message) for w in caught if "warm-up" in str(w.message)],
-            "alive": [t.name for t in threading.enumerate() if t.name == session.SQL_WARM_UP_THREAD],
-            "heap": split._jvm.java.lang.Runtime.getRuntime().maxMemory(),
-            "split": confs(split),
-            "rows": split.range(5).count(),
+            "heap": launched._jvm.java.lang.Runtime.getRuntime().maxMemory(),
+            "launched": confs(launched),
+            "rows": launched.range(5).count(),
         }
-        split.stop()
-        out["single"] = confs(session._builder(app_name="split").getOrCreate())
+        launched.stop()
+        out["single"] = confs(session._builder(app_name="launch").getOrCreate())
         print(json.dumps(out))
     """
     got = json.loads(_last_line(_run_driver(script)))
-    assert got["calls"] == 1 and got["warnings"] == [] and got["alive"] == []
-    assert got["janino"] == [session.SQL_WARM_UP_THREAD]
-    assert got["split"] == got["single"], (got["split"], got["single"])
-    assert got["split"]["spark.driver.memory"] == ["1g", "1g"]
-    assert got["split"]["spark.app.name"] == ["split", "split"]
+    assert got["launched"] == got["single"], (got["launched"], got["single"])
+    assert got["launched"]["spark.driver.memory"] == ["1g", "1g"]
+    assert got["launched"]["spark.app.name"] == ["launch", "launch"]
     assert 512 << 20 < got["heap"] <= 1 << 30
     assert got["rows"] == 5
 
 
-def test_warm_up_never_fails_nor_outlives_a_launch():
-    """Three launches that go wrong, in two driver processes run at once:
+def test_failed_launches_raise_their_own_errors():
+    """Two launches that go wrong, in two driver processes run at once:
 
-    * no java: the start raises before the gateway is up;
-    * a warm-up that raises: it warns, and the session still answers;
+    * no java: the start raises before the gateway is up, and a later
+      launch with java restored answers;
     * a master the launcher accepts but the SparkContext cannot parse: the
-      start raises after the gateway is up, while the warm-up runs.
-
-    After each, no warm-up thread is alive."""
+      start raises after the gateway is up, with Spark's own message."""
     prelude = """
-        import os, threading, warnings
+        import os
         from google_analytics_dataframes_spark import session
-
-        def alive():
-            return [t for t in threading.enumerate() if t.name == session.SQL_WARM_UP_THREAD]
 
         def raises(**kw):
             try:
@@ -126,53 +106,43 @@ def test_warm_up_never_fails_nor_outlives_a_launch():
                 return str(e)
             raise SystemExit(f"get_spark({kw}) did not raise")
     """
-    no_java_then_boom = prelude + """
+    no_java = prelude + """
         java_home = os.environ.get("JAVA_HOME")
         os.environ["JAVA_HOME"] = os.path.join(os.getcwd(), "no-such-jdk")
-        raises(app_name="no-java")
-        assert not alive()
+        err = raises(app_name="no-java")
+        assert "Java gateway process exited" in err, err
         if java_home is None:
             del os.environ["JAVA_HOME"]
         else:
             os.environ["JAVA_HOME"] = java_home
-
-        def boom(jvm):
-            raise RuntimeError("warm-up boom")
-
-        session._warm_sql_start = boom
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            spark = session.get_spark(app_name="boom")
-        assert not alive()
-        assert any("warm-up boom" in str(w.message) for w in caught), caught
+        spark = session.get_spark(app_name="java")
         assert spark.sql("SELECT sum(id) FROM range(5)").first()[0] == 10
-        print("BOOM-OK")
+        print("NO-JAVA-OK")
     """
     bogus_master = prelude + """
         err = raises(app_name="bogus", master="local[bogus]")
-        assert not alive()
         assert "Could not parse Master URL" in err, err
         print("BOGUS-OK")
     """
-    procs = [_run_driver(no_java_then_boom), _run_driver(bogus_master)]
+    procs = [_run_driver(no_java), _run_driver(bogus_master)]
     try:
         lines = [_last_line(p) for p in procs]
     finally:
         for p in procs:
             p.kill()
-    assert lines == ["BOOM-OK", "BOGUS-OK"]
+    assert lines == ["NO-JAVA-OK", "BOGUS-OK"]
 
 
-def test_reused_context_starts_no_warm_up_thread(spark, monkeypatch):
+def test_reused_context_starts_no_thread_and_no_launch_work(spark, monkeypatch):
     """get_spark over a live SparkContext launches no JVM, so it must start
-    no thread, look up no extension and compile nothing."""
+    no thread and neither key, publish nor build a view or an archive."""
 
     def boom(*a, **k):
-        raise AssertionError("warm-up work on a reused context")
+        raise AssertionError("launch work on a reused context")
 
     monkeypatch.setattr(session.threading, "Thread", boom)
-    monkeypatch.setattr(session, "_warm_sql_start", boom)
-    monkeypatch.setattr(session, "_compile_warm_up_class", boom)
+    for name in ("_stem", "_publish_view", "_build"):
+        monkeypatch.setattr(session.jvm_archive, name, boom)
     assert session.get_spark(app_name="tests", master="local[4]", shuffle_partitions=4) is spark
 
 
