@@ -294,38 +294,23 @@ def fanout_by(df: DataFrame, *cols: str, min_partitions: int | None = None) -> D
 
 
 def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
-    num_files: int | None = None,
+    df: DataFrame, path: str, cluster_by: list[str], num_files: int
 ) -> None:
     """Write parquet clustered on `cluster_by`: range-repartition on the
     cluster keys, sort within partitions, then write.  Each output file /
     row group then covers a narrow, near-disjoint range of the cluster
     keys, so parquet min/max statistics let later scans with predicates on
     those keys skip whole row groups (the poor-man's Z-order a 100 TB
-    table needs before anyone queries it).  `partition_by` adds directory
-    partitioning on top (partition pruning before stats pruning);
-    `max_records_per_file` bounds file size for parallel downstream reads.
+    table needs before anyone queries it).
 
     Range repartition (vs hash) is what makes files key-DISJOINT: hash
     scatters every key range across all files and the stats cover
     everything -> no skipping.  `num_files` pins the range-partition count
-    (size output files to ~128-1024 MB); left None, Spark's default (and
-    AQE coalescing, which can collapse a small write to one file) applies."""
-    out = (
-        df.repartitionByRange(num_files, *cluster_by)
-        if num_files
-        else df.repartitionByRange(*cluster_by)
-    ).sortWithinPartitions(*cluster_by)
-    writer = out.write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    (size output files to ~128-1024 MB); a pinned count is never coalesced
+    by AQE, which would otherwise collapse a small write into one file."""
+    df.repartitionByRange(num_files, *cluster_by).sortWithinPartitions(
+        *cluster_by
+    ).write.mode("overwrite").parquet(path)
 
 
 def morton_code(col_a, col_b, bits: int = 16):
@@ -361,8 +346,8 @@ def write_zordered(
     path: str,
     col_a: str,
     col_b: str,
+    num_files: int,
     bits: int = 16,
-    num_files: int | None = None,
 ) -> None:
     """Write parquet Z-ORDERED on two keys: scale both keys to [0, 2^bits)
     ranks (min/max from a 1-row aggregate broadcast onto the scan — no
@@ -409,11 +394,9 @@ def write_zordered(
             bits,
         ),
     )
-    out = (
-        coded.repartitionByRange(num_files, "_morton")
-        if num_files
-        else coded.repartitionByRange("_morton")
-    ).sortWithinPartitions("_morton")
+    out = coded.repartitionByRange(num_files, "_morton").sortWithinPartitions(
+        "_morton"
+    )
     out.drop("_morton", "_a_min", "_a_max", "_b_min", "_b_max").write.mode(
         "overwrite"
     ).parquet(path)

@@ -405,7 +405,7 @@ def packed_mask_aggs(n_words: int) -> list:
     (0-based vocabulary position, null for out-of-vocabulary items —
     nulls contribute nothing) into ``n_words`` 64-bit mask longs
     ``m0..m{n-1}``.  Shared by the in-session bitmask strategies here and
-    the PERSISTENT mask index (sources/bucketed.mask_index_tables) so the
+    the STORED mask index (sources/bucketed.mask_index) so the
     stored layout is bit-identical to the computed one."""
     return [
         F.bit_or(

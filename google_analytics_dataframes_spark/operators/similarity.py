@@ -103,18 +103,17 @@ def ivf_topk(emb: DataFrame, query_vec_id: int, k: int, nprobe: int = 2) -> Data
 
 
 def ivf_topk_stored(
-    spark,
-    centroid_table: str,
-    cells_table: str,
+    centroids: DataFrame,
+    cells: DataFrame,
     query_vec: DataFrame,
     k: int,
     nprobe: int = 2,
 ) -> DataFrame:
-    """:func:`ivf_topk` against a PERSISTENT index (sources/bucketed.
-    ivf_index_tables) instead of a per-run quantizer build: the coarse
-    step reads the stored centroid table (|cells| rows, broadcastable) and
-    the fine step joins the probed cell ids against the cell-PARTITIONED
-    vector table, so Catalyst's dynamic partition pruning narrows the scan
+    """:func:`ivf_topk` against a STORED index (the ``centroids`` and
+    ``cells`` frames of sources/bucketed.ivf_index) instead of a per-run
+    quantizer build: the coarse step reads the stored centroids (|cells|
+    rows, broadcastable) and the fine step joins the probed cell ids
+    against the cell-PARTITIONED vectors, so Catalyst's dynamic partition pruning narrows the scan
     to the nprobe probed directories — no centroid recompute, no corpus
     scan, which at 100 TB is the difference between a query and an index
     build.  ``query_vec`` is a 1-row (qv double[]) frame from the caller
@@ -123,15 +122,14 @@ def ivf_topk_stored(
     Same answer as :func:`ivf_topk` by construction: the stored centroids
     are the same exact-decimal means round-tripped losslessly through
     parquet, and probe ordering / rerank / tiebreaks are identical."""
-    cents = spark.table(centroid_table)
     probe = (
-        cents.crossJoin(F.broadcast(query_vec))
+        centroids.crossJoin(F.broadcast(query_vec))
         .select("label", cosine(F.col("centroid"), F.col("qv")).alias("ccos"))
         .orderBy(F.col("ccos").desc(), "label")
         .limit(nprobe)
         .select(F.col("label").alias("cell"))
     )
-    cand = spark.table(cells_table).join(F.broadcast(probe), "cell")
+    cand = cells.join(F.broadcast(probe), "cell")
     a = as_double(F.col("embedding"))
     return (
         cand.crossJoin(F.broadcast(query_vec))

@@ -936,7 +936,7 @@ def l60_incremental_neardup(spark, sf_dir):
     inc = docs.filter(F.length("source") == 5).select("doc_id", grams)
     ex = docs.filter(F.length("source") == 4).select("doc_id", grams)
     # round 12 (VERDICT r11 item #4's production wiring): strategy stats
-    # come from the PERSISTED index-side table — n_items/vocab/n_in_docs
+    # come from the session-memoized index-side stats — n_items/vocab/n_in_docs
     # in one dict, n_in_docs always present, so the operator's probe jobs
     # (persist + count + vocab collect) are skipped and its
     # unpersisted-lineage-rescan fallback is unreachable; the vocabulary
@@ -1233,18 +1233,19 @@ def l69_indexed_neardup(spark, sf_dir, _force_gram_path: bool = False):
     * **bounded vocabulary** (the regime every shipped SF is in): the
       index is the BITMASK pair — a frozen (item, vid) dictionary plus a
       (doc_id, sz, m0..mN) packed-mask table
-      (sources/bucketed.mask_index_tables).  The batch encodes its grams
-      against the broadcast dictionary (out-of-vocabulary grams cannot
-      intersect any corpus doc, so they drop from the mask but still
-      count in the batch doc's set size — lossless), and the tiny batch
-      mask table BROADCASTS over a pure SCAN of the stored masks:
-      zero corpus shuffle, O(V/64) longs compared per pair.  The first
+      (sources/bucketed.mask_index, published through io.staged_dir).
+      The batch encodes its grams against the broadcast dictionary
+      (out-of-vocabulary grams cannot intersect any corpus doc, so they
+      drop from the mask but still count in the batch doc's set size —
+      lossless), and the tiny batch mask table BROADCASTS over a pure
+      SCAN of the stored masks: zero corpus shuffle, O(V/64) longs
+      compared per pair.  The first
       registered version of this query stored raw grams and equi-joined
       them — on this bounded-vocab corpus that enumerated the same
       Theta(|batch| x |corpus|) pair set through a shuffle and measured
       59.9 s at sf0.1; the mask form does identical pair work scan-side
       (bench: ~2 s warm).
-    * **large vocabulary**: mask_index_tables returns None and the query
+    * **large vocabulary**: mask_index returns None and the query
       falls back to the bucketed+sorted gram table
       (sources/bucketed.gram_index_table) — one-sided equi-join of batch
       grams against the bucket-placed inverted index, the strategy whose
@@ -1261,9 +1262,9 @@ def l69_indexed_neardup(spark, sf_dir, _force_gram_path: bool = False):
     test_gram_index_row_groups_prunable (gram-table form: sorted buckets
     give footer-stats row-group pruning on the gram key — the s8
     write_clustered evidence extended to the index, VERDICT r7 item #8).
-    Index staging is charged once per session, as stream sources are
-    staged once per dataset (io.staged_dir) — a real deployment maintains
-    the index at ingest, not per query."""
+    The mask index is staged once per dataset (io.staged_dir), as stream
+    sources are; the gram index once per session — a real deployment
+    maintains the index at ingest, not per query."""
     docs = T(spark, sf_dir, "documents")
     from google_analytics_dataframes_spark.operators.dedup import char_ngrams
 
@@ -1297,17 +1298,14 @@ def _stored_index_cross_pairs(
     form by the corpus regime (see l69's docstring)."""
     from google_analytics_dataframes_spark.sources.bucketed import (
         gram_index_table,
-        mask_index_tables,
+        mask_index,
     )
 
     t = threshold_pct
-    idx = None if _force_gram_path else mask_index_tables(spark, sf_dir)
+    idx = None if _force_gram_path else mask_index(spark, sf_dir)
     if idx is not None:
-        vocab_table, mask_table = idx
-        vdf = spark.table(vocab_table)
-        n_words = sum(
-            1 for f in spark.table(mask_table).schema.names if f.startswith("m")
-        )
+        vdf, masks = idx
+        n_words = sum(1 for f in masks.schema.names if f.startswith("m"))
         from google_analytics_dataframes_spark.operators.dedup import (
             packed_mask_aggs,
         )
@@ -1318,7 +1316,7 @@ def _stored_index_cross_pairs(
             .agg(F.count("*").alias("sz"), *packed_mask_aggs(n_words))
             .alias("a")
         )
-        b = spark.table(mask_table).alias("b")
+        b = masks.alias("b")
         inter = sum(
             (
                 F.bit_count(
@@ -1766,7 +1764,7 @@ def l60b_neardup_slice(spark, sf_dir):
     trivially pushes to the incoming scan on the engine side.
 
     Round 13 (VERDICT r12 "what's wrong" #3): the twin now passes the
-    PERSISTED ``dedup_cross_stats`` dict like l60's production wiring,
+    session-memoized ``dedup_cross_stats`` dict like l60's production wiring,
     so its probe jobs (persist + two counts + vocab collect) are gone
     too.  The stored stats describe the UNSLICED family shape, which is
     safe here because every field is routing/guard-only and an upper

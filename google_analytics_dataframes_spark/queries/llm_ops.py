@@ -48,9 +48,9 @@ def _src5_key(sf_dir: str, what: str) -> tuple:
 
 
 def _simjoin_stats(spark, sf_dir):
-    """l7-family router stats from the persisted catalog row (round 15,
-    VERDICT r14 item #4) — one warm-up-time build per (session, dataset
-    fingerprint), zero probe jobs in the timed path."""
+    """l7-family router stats from the session memo
+    (sources/bucketed.simjoin_token_stats) — one warm-up-time build per
+    (session, dataset fingerprint), zero probe jobs in the timed path."""
     from google_analytics_dataframes_spark.sources.bucketed import (
         simjoin_token_stats,
     )
@@ -600,10 +600,10 @@ def l14_ann_ivf(spark, sf_dir):
 def l81_ann_ivf_stored(spark, sf_dir):
     """l14's IVF ANN query served from a PERSISTENT STORED INDEX (VERDICT
     r8 item #3 — the l69 treatment for vectors): sources/bucketed.
-    ivf_index_tables materializes the coarse quantizer (exact-decimal
-    label centroids) and the cell-PARTITIONED vector assignments as
-    catalog tables ONCE per corpus fingerprint; the query probes the
-    stored tables with zero quantizer recompute, and the fine scan is
+    ivf_index publishes the coarse quantizer (exact-decimal label
+    centroids) and the cell-PARTITIONED vector assignments through
+    io.staged_dir ONCE per corpus fingerprint; the query probes the
+    stored index with zero quantizer recompute, and the fine scan is
     partition-pruned to the nprobe probed cells (dynamic partition
     pruning off the broadcast probe join — asserted in tests/
     test_plans.py::test_l81_stored_index_plan).  The oracle is l14's
@@ -611,19 +611,15 @@ def l81_ann_ivf_stored(spark, sf_dir):
     index if it returns the exact per-run-build answer.  At 100 TB the
     per-run build l14 demonstrates is the expensive half of ANN — this
     row is the serving path that amortizes it."""
-    from google_analytics_dataframes_spark.sources.bucketed import (
-        ivf_index_tables,
-    )
+    from google_analytics_dataframes_spark.sources.bucketed import ivf_index
 
-    centroid_table, cells_table = ivf_index_tables(spark, sf_dir)
+    centroids, cells = ivf_index(spark, sf_dir)
     qv = (
         T(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") == 7)
         .select(S.as_double("embedding").alias("qv"))
     )
-    return S.ivf_topk_stored(
-        spark, centroid_table, cells_table, qv, k=5, nprobe=2
-    )
+    return S.ivf_topk_stored(centroids, cells, qv, k=5, nprobe=2)
 
 
 @register(
@@ -725,7 +721,7 @@ def l7_string_simjoin(spark, sf_dir):
     inverted-index join (PAPERS.md:6).
 
     Round 15 (VERDICT r14 item #4): the router's (n_items, vocab) now
-    comes from the persisted ``simjoin_token_stats`` catalog row instead
+    comes from ``simjoin_token_stats``, memoized per session, instead
     of per-run probe jobs (persist + count + distinct-limit collect) —
     the corpus is the fingerprinted documents table, so its stats are
     table metadata.  Coverage of the served vocab is enforced in-plan
@@ -3833,7 +3829,7 @@ def l7b_simjoin_slice(spark, sf_dir):
     inverted-index/prefix path) at 10x.
 
     Round 15 (VERDICT r14 item #4): router stats served from the
-    ``simjoin_token_stats`` catalog row (n_items = slice + corpus item
+    session-memoized ``simjoin_token_stats`` (n_items = slice + corpus item
     rows, n_in_docs = slice docs, vocab coverage enforced in-plan) —
     probe jobs gone from the timed path.  Same bitmask-regime-only
     gating as l7: with the vocabulary past the bound the cross router's

@@ -53,7 +53,7 @@ RUNTIME_CONFS: dict[str, str] = {
 
 #: Session-scoped memos: SparkSession -> (applicationId, memo dict).  Every
 #: cache whose values die with a session (lazy table reads, configured
-#: flags, catalog index/stats names) lives in the one
+#: flags, stored index frames, router stats) lives in the one
 #: dict :func:`state` hands out, so a session's memos go away with it.
 _STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
@@ -63,8 +63,8 @@ def state(spark: SparkSession) -> dict:
     ``spark.newSession()`` starts empty).  Only one SparkContext lives in a
     driver process, so the first lookup under a new applicationId drops
     every entry of any other application: a stop + restart leaves nothing
-    of the dead context behind.  Callers still re-validate what a memo
-    points at (catalog tables, directories) before trusting it."""
+    of the dead context behind.  A memo that names a catalog table is
+    re-validated before it is trusted (sources/bucketed.gram_index_table)."""
     entry = _STATE.get(spark)
     if entry is None:
         app_id = spark.sparkContext.applicationId

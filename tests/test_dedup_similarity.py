@@ -611,9 +611,9 @@ def test_bpe_trainer_is_deterministic_under_tie_storms():
 
 
 def test_stored_cross_stats_round_trip_includes_n_in_docs(spark):
-    """VERDICT r11 item #4: the stored-stats writer must persist
-    n_in_docs so jaccard_pairs_cross(stats=...) can never silently fall
-    back to re-scanning the unpersisted incoming lineage (the
+    """VERDICT r11 item #4: the stored stats must carry n_in_docs so
+    jaccard_pairs_cross(stats=...) can never silently fall back to
+    re-scanning the unpersisted incoming lineage (the
     probe-skip-defeating path warns; with the stored dict the warning
     must be unreachable).  Also pins that the stats-driven plan emits
     the exact pair set the adaptive (probe-everything) path does."""
@@ -624,8 +624,8 @@ def test_stored_cross_stats_round_trip_includes_n_in_docs(spark):
     stats = B.dedup_cross_stats(spark, SF_DIR)
     assert {"n_items", "vocab", "n_in_docs"} <= set(stats)
     assert stats["n_in_docs"] > 0 and stats["n_items"] > 0
-    # second call serves the persisted table (and must round-trip the
-    # same dict, n_in_docs included)
+    # second call serves the session memo (and must return the same
+    # dict, n_in_docs included)
     again = B.dedup_cross_stats(spark, SF_DIR)
     assert again == stats
 
@@ -705,51 +705,24 @@ def _forget_memos(spark, kind):
         del memo[k]
 
 
-def test_stored_cross_stats_evicts_stale_fingerprint_siblings(spark):
-    """ADVICE r12: a data regeneration changes the table fingerprint and
-    creates a NEW dedup_cross_stats_* name; the writer must drop the old
-    fingerprint's catalog entries (and scratch parquet) instead of
-    leaking them forever — while KEEPING same-fingerprint siblings with
-    a different max_vocab (live caches for other callers)."""
-    import os
+def test_mask_index_over_max_vocab_is_a_memoized_none(spark, tmp_path, monkeypatch):
+    """Past ``max_vocab`` the mask index is None: the vocabulary probe
+    runs once, the second call is served the None from the session memo,
+    and no index directory is published."""
+    import tempfile
 
-    from google_analytics_dataframes_spark.io import table_fingerprint
     from google_analytics_dataframes_spark.sources import bucketed as B
 
-    fp = table_fingerprint(SF_DIR, "documents")
-    sf_tag = os.path.basename(SF_DIR.rstrip("/")).replace(".", "_")
-    # stale sibling in the writer's EXACT name format (16-hex fp, _v<int>)
-    stale = f"dedup_cross_stats_{sf_tag}_{'deadbeef' * 2}_v4096"
-    live_sibling = f"dedup_cross_stats_{sf_tag}_{fp}_v7"
-    # ADVICE r13: names that merely share the prefix but are NOT in the
-    # writer's format must survive (user tables), as must TEMPORARY views
-    # whose names collide with the pattern.
-    user_table = f"dedup_cross_stats_{sf_tag}_notmine"
-    temp_view = f"dedup_cross_stats_{sf_tag}_{'deadbeef' * 2}_v1"
-    for name in (stale, live_sibling, user_table):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.createDataFrame([(1,)], "x long").write.mode(
-            "overwrite"
-        ).saveAsTable(name)
-    spark.createDataFrame([(1,)], "x long").createOrReplaceTempView(temp_view)
-    # force a real (re)write: drop the session memo and the live table
-    _forget_memos(spark, "dedup_cross_stats")
-    spark.sql(f"DROP TABLE IF EXISTS dedup_cross_stats_{sf_tag}_{fp}_v4096")
-    stats = B.dedup_cross_stats(spark, SF_DIR)
-    assert stats["n_in_docs"] > 0
-    assert not spark.catalog.tableExists(stale), "stale sibling leaked"
-    assert spark.catalog.tableExists(live_sibling), (
-        "same-fingerprint sibling (different max_vocab) must survive"
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # staged_dir's root
+    probes = []
+    real = B._bounded_vocab
+    monkeypatch.setattr(
+        B, "_bounded_vocab", lambda *a: probes.append(a) or real(*a)
     )
-    assert spark.catalog.tableExists(user_table), (
-        "prefix-sharing user table must survive (not in writer format)"
-    )
-    assert spark.catalog.tableExists(temp_view), (
-        "pattern-colliding TEMPORARY view must survive"
-    )
-    spark.catalog.dropTempView(temp_view)
-    for name in (live_sibling, user_table):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    assert B.mask_index(spark, SF_DIR, max_vocab=8) is None
+    assert B.mask_index(spark, SF_DIR, max_vocab=8) is None
+    assert len(probes) == 1
+    assert not list(tmp_path.glob("spark_graft_dedup_*"))
 
 
 def test_simjoin_token_stats_match_direct_probe(spark):

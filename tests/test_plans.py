@@ -539,7 +539,8 @@ def test_indexed_neardup_reads_stored_index(spark):
 
     Mask path (the registered regime on this bounded-vocab corpus):
     exactly three parquet scans — one documents scan (the batch), the
-    frozen vocab dictionary, and the packed-mask table; the
+    frozen vocab dictionary, and the packed-mask table, the last two
+    read from their staged directories; the
     gram-shredding expression appears exactly once (batch side only);
     the gram key never shuffles ANYWHERE (no inverted-index join exists
     at all — the batch mask table broadcasts over a pure scan of the
@@ -557,10 +558,11 @@ def test_indexed_neardup_reads_stored_index(spark):
 
     df = registry()["l69_indexed_neardup"].fn(spark, SF_DIR)
     plan = audit.formatted_plan(df)
-    scans = re.findall(r"\(\d+\) Scan parquet\s*(\S*)", plan)
-    assert len(scans) == 3, plan
-    assert sum("dedup_masks_" in s for s in scans) == 1, scans
-    assert sum("dedup_vocab_" in s for s in scans) == 1, scans
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 3, plan
+    locations = re.findall(r"^Location: (.*)$", plan, re.M)
+    assert len(locations) == 3, locations
+    assert sum("dedup_masks_" in loc for loc in locations) == 1, locations
+    assert sum("dedup_vocab_" in loc for loc in locations) == 1, locations
     assert plan.count("documents.parquet") == 1, plan
     assert plan.count("transform(sequence") == 1, plan
     assert "bit_count" in plan, plan
@@ -1050,11 +1052,12 @@ def test_j17_binned_interval_join_is_equi_on_bin(spark):
 
 def test_l81_stored_index_plan(spark):
     """l81's claim (VERDICT r8 item #3): the ANN query is served from the
-    STORED IVF index — the plan reads the two catalog tables, the probed
-    cell scan carries a dynamic-partition-pruning filter (the broadcast
-    probe join becomes a scan-time partition filter), and the coarse
-    quantizer is NOT recomputed (no posexplode/aggregation over the
-    corpus embeddings — the 640-cell decimal build l14 pays per run)."""
+    STORED IVF index — the plan reads the two staged index directories
+    (``ivf_centroids_*``, ``ivf_cells_*``), the probed cell scan carries
+    a dynamic-partition-pruning filter (the broadcast probe join becomes
+    a scan-time partition filter), and the coarse quantizer is NOT
+    recomputed (no posexplode/aggregation over the corpus embeddings —
+    the 640-cell decimal build l14 pays per run)."""
     df = registry()["l81_ann_ivf_stored"].fn(spark, SF_DIR)
     plan = audit.formatted_plan(df)
     assert "ivf_centroids_" in plan

@@ -431,7 +431,11 @@ def test_document_streams_restage_when_documents_change(spark, tmp_path, monkeyp
     re-stage both: a new directory whose rows follow the new table.
     Dropping doc 0 removes two rows from each source: the doc and its
     re-crawl, and the doc's delete (0 % 13 == 0) and its insert
-    (0 % 17 == 0, re-keyed past the unchanged max id)."""
+    (0 % 17 == 0, re-keyed past the unchanged max id).  The stored
+    indexes follow their tables the same way: the mask index (doc 0 is
+    a corpus doc, source ``src0``) loses its mask, and rewriting
+    embeddings without vector 0 re-stages the IVF centroids (every label
+    keeps vectors) and cells."""
     import tempfile
 
     import pyarrow.compute as pc
@@ -441,28 +445,42 @@ def test_document_streams_restage_when_documents_change(spark, tmp_path, monkeyp
         _stage_change_stream,
         _stage_doc_stream,
     )
+    from google_analytics_dataframes_spark.sources.bucketed import (
+        ivf_index,
+        mask_index,
+    )
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # staged_dir's root
     sf = tmp_path / "sfcopy"
     sf.mkdir()
-    for name in ("documents", "events"):
+    for name in ("documents", "events", "embeddings"):
         shutil.copy(os.path.join(SF_DIR, f"{name}.parquet"), sf)
-    docs_path = str(sf / "documents.parquet")
 
     def rows(stage):
-        d = stage(spark, str(sf))
-        return d, spark.read.parquet(d).count()
+        out = stage(spark, str(sf))
+        df = spark.read.parquet(out) if isinstance(out, str) else out
+        return set(df.inputFiles()), df.count()
 
-    stagers = (_stage_doc_stream, _stage_change_stream)
-    before = {stage: rows(stage) for stage in stagers}
-    docs = pq.read_table(docs_path)
-    assert 0 in docs["doc_id"].to_pylist()
-    pq.write_table(docs.filter(pc.not_equal(docs["doc_id"], 0)), docs_path + ".new")
-    os.replace(docs_path + ".new", docs_path)
-    for stage, (d0, n0) in before.items():
-        d1, n1 = rows(stage)
-        assert d1 != d0, stage.__name__
-        assert n1 == n0 - 2, (stage.__name__, n0, n1)
+    # name -> (stager, rows that dropping row 0 removes)
+    stagers = {
+        "doc_stream": (_stage_doc_stream, 2),
+        "change_stream": (_stage_change_stream, 2),
+        "dedup_masks": (lambda s, d: mask_index(s, d)[1], 1),
+        "ivf_centroids": (lambda s, d: ivf_index(s, d)[0], 0),
+        "ivf_cells": (lambda s, d: ivf_index(s, d)[1], 1),
+    }
+    before = {name: rows(stage) for name, (stage, _) in stagers.items()}
+    for table, key in (("documents", "doc_id"), ("embeddings", "vec_id")):
+        path = str(sf / f"{table}.parquet")
+        t = pq.read_table(path)
+        assert 0 in t[key].to_pylist()
+        pq.write_table(t.filter(pc.not_equal(t[key], 0)), path + ".new")
+        os.replace(path + ".new", path)
+    for name, (stage, dropped) in stagers.items():
+        files0, n0 = before[name]
+        files1, n1 = rows(stage)
+        assert files1 and not files1 & files0, name
+        assert n1 == n0 - dropped, (name, n0, n1)
 
 
 def test_tws_armed_worker_env_restores(spark):
