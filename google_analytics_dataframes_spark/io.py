@@ -402,6 +402,16 @@ def write_zordered(
     ).parquet(path)
 
 
+def staged_path(sf_dir: str, table: str, name: str) -> str:
+    """Where :func:`staged_dir` publishes ``name`` for ``table`` as it is
+    now; published once it holds ``_SUCCESS``."""
+    import tempfile
+
+    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    fp = table_fingerprint(sf_dir, table)
+    return os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_{sf_tag}_{fp}")
+
+
 def staged_dir(sf_dir: str, table: str, name: str, build_fn) -> str:
     """Fingerprint-keyed, marker-cached fixture staging (the scan rows'
     layout copies, the rollup, every stream source): the cache path
@@ -429,13 +439,10 @@ def staged_dir(sf_dir: str, table: str, name: str, build_fn) -> str:
     OTHER processes are never touched."""
     import glob
     import shutil
-    import tempfile
     import uuid
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = table_fingerprint(sf_dir, table)
-    prefix = os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_{sf_tag}_")
-    out = prefix + fp
+    out = staged_path(sf_dir, table, name)
+    prefix = out[: out.rindex("_") + 1]
     if os.path.exists(os.path.join(out, "_SUCCESS")):
         return out
     tmp = f"{out}.build-{uuid.uuid4().hex}"

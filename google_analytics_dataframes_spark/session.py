@@ -146,25 +146,29 @@ def get_spark(
     at every SparkSession start.  When the launch also qualifies (a conf
     dir of templates only, no extra classpath), the JVM maps a
     class-data-sharing archive of Spark's start-up classes, built on the
-    first such launch (:mod:`google_analytics_dataframes_spark.jvm_archive`).
-    If the view cannot be published, the launch warns and starts from
-    ``$SPARK_HOME`` itself, spark-mllib included, and its SparkSession
-    start pays for that provider.
+    first such launch, and, unless ``PYSPARK_SUBMIT_ARGS`` asks spark-submit
+    for more than driver java options, starts straight into its py4j
+    gateway without spark-submit
+    (:mod:`google_analytics_dataframes_spark.jvm_archive`).  If the view
+    cannot be published, the launch warns and starts from ``$SPARK_HOME``
+    itself, spark-mllib included, and its SparkSession start pays for that
+    provider.
 
     A launching call first starts one daemon thread that imports
-    ``pyspark.testing.utils``: py4j's input converters import it, and
-    pandas with it, on the first call that has arguments, so the import
-    overlaps the JVM launch instead of following it.  A call that reuses a
-    live SparkContext starts no thread and does no view or archive work.
+    ``pyspark.testing.utils`` (py4j's input converters import it, and
+    pandas with it, on the first call that has arguments) and then the
+    query modules that ``registry()`` imports, so both imports overlap the
+    JVM launch instead of following it.  A call that reuses a live
+    SparkContext starts no thread and does no view or archive work.
     """
     builder = _builder(app_name, master, shuffle_partitions)
     if jvm_archive.launches_jvm():
-        threading.Thread(
-            target=importlib.import_module, args=("pyspark.testing.utils",), daemon=True
-        ).start()
-    with jvm_archive.driver_java_options() as java_options:
-        if java_options:
-            # prepended to the caller's --driver-java-options, not replacing them
-            builder.config("spark.driver.defaultJavaOptions", java_options)
+        threading.Thread(target=_import_ahead, daemon=True).start()
+    with jvm_archive.driver_java_options(builder):
         spark = builder.getOrCreate()
     return configure(spark)
+
+
+def _import_ahead() -> None:
+    for module in ("pyspark.testing.utils", "google_analytics_dataframes_spark.queries"):
+        importlib.import_module(module)

@@ -166,27 +166,37 @@ def mask_index(
     Both are published once per documents fingerprint through
     :func:`io.staged_dir` (``dedup_vocab``, ``dedup_masks``) and read
     back as parquet scans; the session memo holds the read frames, or the
-    over-``max_vocab`` None.  The vocabulary probe runs once per session:
-    it decides the regime before anything is published."""
+    over-``max_vocab`` None.  A published vocabulary is the corpus's
+    whole vocabulary, so its row count decides the regime; only when none
+    is published does the vocabulary probe run, once per session and
+    before anything is published."""
     from pyspark.sql import functions as F
 
-    from google_analytics_dataframes_spark.io import staged_dir
+    from google_analytics_dataframes_spark.io import staged_dir, staged_path
     from google_analytics_dataframes_spark.operators.dedup import (
         packed_mask_aggs,
     )
 
     def build():
         grams = corpus_gram_relation(spark, sf_dir)
-        vocab = _bounded_vocab(grams, max_vocab)
-        if vocab is None:
+        published = staged_path(sf_dir, "documents", "dedup_vocab")
+        if os.path.exists(os.path.join(published, "_SUCCESS")):
+            vdf = spark.read.parquet(published)
+            n_vocab = vdf.count()
+        else:
+            vocab = _bounded_vocab(grams, max_vocab)
+            if vocab is None:
+                return None
+            n_vocab = len(vocab)
+            vdf = spark.createDataFrame(
+                [(v, i) for i, v in enumerate(vocab)], ["item", "vid"]
+            )
+        if n_vocab > max_vocab:
             return None
-        vdf = spark.createDataFrame(
-            [(v, i) for i, v in enumerate(vocab)], ["item", "vid"]
-        )
         masks = (
             grams.join(F.broadcast(vdf), "item")
             .groupBy("doc_id", "sz")
-            .agg(*packed_mask_aggs((len(vocab) + 63) // 64))
+            .agg(*packed_mask_aggs((n_vocab + 63) // 64))
         )
         return tuple(
             spark.read.parquet(staged_dir(sf_dir, "documents", name, write))

@@ -725,6 +725,30 @@ def test_mask_index_over_max_vocab_is_a_memoized_none(spark, tmp_path, monkeypat
     assert not list(tmp_path.glob("spark_graft_dedup_*"))
 
 
+def test_published_mask_index_is_served_without_a_probe(spark, tmp_path, monkeypatch):
+    """A new session over a published mask index decides the regime from
+    the published vocabulary, never running the vocabulary probe: it
+    serves the same frames the publishing session read, and a
+    ``max_vocab`` below the published vocabulary's size still gives None."""
+    import tempfile
+
+    from google_analytics_dataframes_spark.sources import bucketed as B
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # staged_dir's root
+    first = B.mask_index(spark.newSession(), SF_DIR)
+    assert first is not None
+
+    def probe(*a):
+        raise AssertionError("vocabulary probe over a published index")
+
+    monkeypatch.setattr(B, "_bounded_vocab", probe)
+    later = spark.newSession()
+    again = B.mask_index(later, SF_DIR)
+    for a, b in zip(first, again):
+        assert sorted(a.collect()) == sorted(b.collect())
+    assert B.mask_index(later, SF_DIR, max_vocab=8) is None
+
+
 def test_simjoin_token_stats_match_direct_probe(spark):
     """Round 15 (VERDICT r14 item #4): the persisted l7-family router
     stats must equal what the per-run probe jobs would have computed —

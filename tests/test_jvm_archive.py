@@ -22,6 +22,7 @@ import subprocess
 import sys
 import textwrap
 import time
+import zipfile
 from pathlib import Path
 
 import pytest
@@ -31,10 +32,10 @@ from tests.conftest import SF_DIR, small_env
 
 REPO = Path(__file__).resolve().parent.parent
 
-# One driver start; prints exactly one line: the JVM's input arguments,
-# the archives it has mapped, the spark-mllib jars on its classpath, the
-# session-extensions providers it finds, an answer read through load_table
-# and one Python UDF's answer.
+# One driver start; prints exactly one line: the JVM's input arguments and
+# main class, the archives it has mapped, the spark-mllib jars on its
+# classpath, the session-extensions providers it finds, an answer read
+# through load_table and one Python UDF's answer.
 _DRIVER = textwrap.dedent(
     """
     import fnmatch, json, os, sys
@@ -61,6 +62,7 @@ _DRIVER = textwrap.dedent(
     tripled = udf(lambda x: 3 * x, "long")
     print(json.dumps({
         "args": args,
+        "command": lang.System.getProperty("sun.java.command").split()[0],
         "mapped": mapped,
         "mllib": mllib,
         "providers": providers,
@@ -128,8 +130,10 @@ def test_archive_lifecycle(tmp_path):
        falls back to a plain JVM.
     2. The next start builds, publishes and maps the archive, and prints
        only its own line on stdout (the dump's JVM warnings go elsewhere).
-    3. A hit keeps ``-Dgraft.probe=1`` from ``--driver-java-options`` and
-       the JVM really maps the file.
+    3. A hit keeps ``-Dgraft.probe=1`` from ``--driver-java-options``, the
+       JVM really maps the file, and it was launched straight into
+       ``PythonGatewayServer`` (the killed build's plain start went
+       through SparkSubmit).
     4. A bit-flipped archive is rejected by VerifySharedSpaces: the start
        still works, and the JVM's warning lands on stderr, not stdout.
     All four answer the same, and their Python UDFs run.  All four launch
@@ -154,6 +158,7 @@ def test_archive_lifecycle(tmp_path):
     _wait_for(lambda: not os.path.exists(f"/proc/{dump_jvm}"), 120, "the orphaned JVM")
     assert "archive build failed" in err
     assert not any("SharedArchiveFile" in a for a in plain["args"])
+    assert plain["command"] == "org.apache.spark.deploy.SparkSubmit"
     assert plain["mapped"] == []
     assert _archives(cache) == [] and not list(store.glob("*.failed"))
     assert plain["mllib"] == [] and plain["providers"] == 0
@@ -174,6 +179,7 @@ def test_archive_lifecycle(tmp_path):
         )
     )
     assert "-Dgraft.probe=1" in hit["args"]
+    assert hit["command"] == jvm_archive.GATEWAY_CLASS
     assert f"-XX:SharedArchiveFile={archive}" in hit["args"]
     assert hit["mapped"] == [str(archive)]
     assert hit["answer"] == plain["answer"]
@@ -190,6 +196,87 @@ def test_archive_lifecycle(tmp_path):
     assert rejected["answer"] == plain["answer"]
     assert rejected["mllib"] == [] and rejected["udf"] == [3, 6, 9]
     shutil.rmtree(cache)  # ~160 MB that pytest would keep with its temp dirs
+
+
+# One driver start and one noop action, directly or (argv[1] ==
+# "spark-submit") through spark-submit; prints one line: the JVM's spark
+# system properties, SparkConf, input arguments, SPARK_* environment and
+# PYTHONHASHSEED, main class and pid.
+_LAUNCHED = textwrap.dedent(
+    """
+    import json, os, sys
+    from google_analytics_dataframes_spark import jvm_archive, session
+
+    if sys.argv[1] == "spark-submit":
+        jvm_archive._start_gateway = lambda *a: None
+    spark = session.get_spark(app_name="launched")
+    spark.range(1).write.format("noop").mode("overwrite").save()
+    lang = spark._jvm.java.lang
+    props = lang.System.getProperties()
+    env = dict(lang.System.getenv())
+    print(json.dumps({
+        "props": {k: props.getProperty(k) for k in props.stringPropertyNames()
+                  if k.startswith("spark.") or k == "SPARK_SUBMIT"},
+        "conf": dict(spark.sparkContext.getConf().getAll()),
+        "args": list(lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
+        "env": {k: v for k, v in env.items() if k.startswith("SPARK_") or k == "PYTHONHASHSEED"},
+        "command": props.getProperty("sun.java.command").split()[0],
+        "pid": int(lang.ProcessHandle.current().pid()),
+    }))
+    """
+)
+
+
+def test_direct_launch_starts_the_driver_spark_submit_would(tmp_path):
+    """A direct launch and a spark-submit launch of the same driver, same
+    confs and driver java options, on one cache: the same spark system
+    properties and SparkConf (but for the submit and start times, the app
+    id and the driver port), the same JVM arguments but for the ``-D``
+    confs, and the same SPARK_* environment and PYTHONHASHSEED.  The
+    direct one runs ``PythonGatewayServer`` itself and loads every Janino
+    class (``org.codehaus``) of its start and first action from the
+    archive; each driver's JVM is gone once its Python process exits."""
+    cache = tmp_path / "cache"
+    log = tmp_path / "class-load.log"
+    got = {}
+    for how in ("spark-submit", "direct"):  # the first one builds the archive
+        p = subprocess.Popen(
+            [sys.executable, "-c", _LAUNCHED, how],
+            stdout=subprocess.PIPE,
+            stderr=subprocess.PIPE,
+            text=True,
+            env=small_env(
+                XDG_CACHE_HOME=str(cache),
+                PYSPARK_SUBMIT_ARGS=(
+                    f"--driver-java-options '-Dgraft.probe=1 -Xlog:class+load=info:file={log}'"
+                    " pyspark-shell"
+                ),
+            ),
+            cwd=REPO,
+        )
+        got[how], _ = _result(p)
+        pid = got[how]["pid"]
+        _wait_for(lambda: not os.path.exists(f"/proc/{pid}"), 60, f"the {how} driver's JVM to exit")
+    submitted, direct = got["spark-submit"], got["direct"]
+    assert submitted["command"] == "org.apache.spark.deploy.SparkSubmit"
+    assert direct["command"] == jvm_archive.GATEWAY_CLASS
+    varying = {"spark.app.submitTime", "spark.app.startTime", "spark.app.id", "spark.driver.host",
+               "spark.driver.port"}
+    for part in ("props", "conf"):
+        a, b = ({k: v for k, v in d[part].items() if k not in varying} for d in (submitted, direct))
+        assert a == b, (part, a, b)
+    assert "-Dgraft.probe=1" in direct["args"]
+
+    def jvm_args(d):
+        return [a for a in d["args"] if not a.startswith(("-Dspark.", "-DSPARK_SUBMIT="))]
+
+    assert jvm_args(submitted) == jvm_args(direct)
+    assert any(f"-XX:SharedArchiveFile={cache}" in a for a in jvm_args(direct))
+    assert submitted["env"] == direct["env"] and direct["env"]["PYTHONHASHSEED"] == "0"
+    janino = [line for line in log.read_text().splitlines() if " org.codehaus." in line]
+    assert len(janino) > 100
+    assert all("source: shared objects file" in line for line in janino), janino[:5]
+    shutil.rmtree(cache)  # ~120 MB that pytest would keep with its temp dirs
 
 
 def test_spark_defaults_conf_is_honoured_without_archive(tmp_path):
@@ -316,16 +403,20 @@ def test_failed_build_is_remembered(tmp_path, monkeypatch):
 
 
 def test_sweep_keeps_only_the_new_archive_and_live_parts(tmp_path):
-    """Publishing a key removes other keys' archives, markers and launch
-    views (directories of links, removed without touching their targets)
-    and dead builders' parts; the key's own view, another process's
-    in-flight part and files that are not archives stay."""
+    """Publishing a key removes other keys' archives, launch records,
+    markers and launch views (directories of links, removed without
+    touching their targets) and dead builders' parts; the key's own view
+    and record, another process's in-flight parts and files that are not
+    archives stay."""
     keep = tmp_path / "driver-new.jsa"
     names = [
         "driver-new.jsa",
+        "driver-new.launch",
         "driver-old.jsa",
+        "driver-old.launch",
         "driver-old.failed",
         "driver-new.jsa.aaa.part",  # in flight
+        "driver-new.launch.aaa.part",  # in flight
         "driver-old.jsa.bbb.part",  # dead builder
         "notes.txt",
     ]
@@ -343,6 +434,8 @@ def test_sweep_keeps_only_the_new_archive_and_live_parts(tmp_path):
         "driver-new.home",
         "driver-new.jsa",
         "driver-new.jsa.aaa.part",
+        "driver-new.launch",
+        "driver-new.launch.aaa.part",
         "notes.txt",
     ]
     assert (tmp_path / "notes.txt").read_text() == "x"
@@ -350,15 +443,25 @@ def test_sweep_keeps_only_the_new_archive_and_live_parts(tmp_path):
 
 def test_launch_view_leaves_out_spark_mllib(tmp_path, monkeypatch):
     """The view links every top-level entry of $SPARK_HOME but jars/, and
-    every jar but spark-mllib's; adding a jar changes the key.  A publisher
-    that loses the rename to a concurrent one uses the winner's view and
-    leaves no part behind."""
+    every jar but spark-mllib's and the signed ones, which it holds as
+    unsigned copies; adding a jar changes the key.  A publisher that loses
+    the rename to a concurrent one uses the winner's view and leaves no
+    part behind."""
     home = tmp_path / "spark"
     (home / "bin").mkdir(parents=True)
     (home / "RELEASE").write_text("Spark\n")
     (home / "jars").mkdir()
     for jar in ("spark-mllib_2.13-4.1.2.jar", "spark-core_2.13-4.1.2.jar", "janino-3.1.9.jar"):
         (home / "jars" / jar).write_bytes(b"PK")
+    entries = {
+        "META-INF/MANIFEST.MF": b"Manifest-Version: 1.0\n",
+        "META-INF/DUMMY.SF": b"signature",
+        "META-INF/dummy.dsa": b"signature block",
+        "org/codehaus/Compiler.class": b"\xca\xfe\xba\xbe",
+    }
+    with zipfile.ZipFile(home / "jars" / "commons-compiler-3.1.9.jar", "w") as z:
+        for name, data in entries.items():
+            z.writestr(name, data)
     monkeypatch.setenv("SPARK_HOME", str(home))
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
@@ -368,10 +471,17 @@ def test_launch_view_leaves_out_spark_mllib(tmp_path, monkeypatch):
     assert sorted(p.name for p in view.iterdir()) == ["RELEASE", "bin", "jars"]
     assert (view / "bin").resolve() == (home / "bin").resolve()
     assert sorted(p.name for p in (view / "jars").iterdir()) == [
+        "commons-compiler-3.1.9.jar",
         "janino-3.1.9.jar",
         "spark-core_2.13-4.1.2.jar",
     ]
     assert (view / "jars" / "janino-3.1.9.jar").resolve() == (home / "jars" / "janino-3.1.9.jar").resolve()
+    unsigned = view / "jars" / "commons-compiler-3.1.9.jar"
+    assert not unsigned.is_symlink()
+    with zipfile.ZipFile(unsigned) as z:
+        assert {n: z.read(n) for n in z.namelist()} == {
+            n: data for n, data in entries.items() if n.startswith(("META-INF/MAN", "org/"))
+        }
 
     (home / "jars" / "extra.jar").write_bytes(b"PK")
     grown = jvm_archive._stem()
@@ -387,6 +497,7 @@ def test_launch_view_leaves_out_spark_mllib(tmp_path, monkeypatch):
     won = grown + ".home"
     assert jvm_archive._publish_view(str(home), won) == won
     assert sorted(os.listdir(Path(won) / "jars")) == [
+        "commons-compiler-3.1.9.jar",
         "janino-3.1.9.jar",
         "spark-core_2.13-4.1.2.jar",
     ]

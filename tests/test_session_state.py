@@ -89,12 +89,15 @@ def test_launch_configures_the_driver_as_one_getorcreate():
 
 
 def test_failed_launches_raise_their_own_errors():
-    """Two launches that go wrong, in two driver processes run at once:
+    """Three launches that go wrong, in three driver processes run at once:
 
     * no java: the start raises before the gateway is up, and a later
       launch with java restored answers;
     * a master the launcher accepts but the SparkContext cannot parse: the
-      start raises after the gateway is up, with Spark's own message."""
+      start raises after the gateway is up, with Spark's own message;
+    * a direct launch whose JVM exits before its gateway is up (a heap
+      size the JVM rejects): the start raises pyspark's gateway error and
+      leaves no child process, and a later launch answers."""
     prelude = """
         import os
         from google_analytics_dataframes_spark import session
@@ -124,13 +127,42 @@ def test_failed_launches_raise_their_own_errors():
         assert "Could not parse Master URL" in err, err
         print("BOGUS-OK")
     """
-    procs = [_run_driver(no_java), _run_driver(bogus_master)]
+    jvm_exits = prelude + """
+        from google_analytics_dataframes_spark import jvm_archive
+
+        def children():
+            found = []
+            for d in filter(str.isdigit, os.listdir("/proc")):
+                try:
+                    with open(f"/proc/{d}/stat") as f:
+                        if int(f.read().rsplit(")", 1)[1].split()[1]) == os.getpid():
+                            found.append(int(d))
+                except OSError:
+                    pass
+            return found
+
+        with jvm_archive.driver_java_options():  # builds the archive on a miss
+            pass
+        direct, start = [], jvm_archive._start_gateway
+        jvm_archive._start_gateway = lambda *a: direct.append(a) or start(*a)
+        os.environ["SPARK_GRAFT_DRIVER_MEM"] = "1q"
+        err = raises(app_name="no-heap")
+        assert "Java gateway process exited" in err, err
+        assert len(direct) == 1 and not children(), (direct, children())
+        os.environ["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+        spark = session.get_spark(app_name="heap")
+        assert spark.sql("SELECT sum(id) FROM range(5)").first()[0] == 10
+        command = spark._jvm.java.lang.System.getProperty("sun.java.command")
+        assert command == jvm_archive.GATEWAY_CLASS, command
+        print("JVM-EXIT-OK")
+    """
+    procs = [_run_driver(no_java), _run_driver(bogus_master), _run_driver(jvm_exits)]
     try:
         lines = [_last_line(p) for p in procs]
     finally:
         for p in procs:
             p.kill()
-    assert lines == ["NO-JAVA-OK", "BOGUS-OK"]
+    assert lines == ["NO-JAVA-OK", "BOGUS-OK", "JVM-EXIT-OK"]
 
 
 def test_reused_context_starts_no_thread_and_no_launch_work(spark, monkeypatch):
